@@ -1,62 +1,63 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line. Failures are reported per-query (`"failed"`) and
-  * excluded from the total, so a crash can never masquerade as a timing.
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+
+/** Benchmark main over SPARK_GRAFT_SF_DIR. With no arguments it times
+  * every registered query and prints one JSON line; otherwise the first
+  * argument picks a dev mode over the named queries:
   *
-  * Methodology note: min-of-two in one session means a query's second
-  * run may reuse intra-query cache entries whose logical plan is
-  * identical (Spark's CacheManager dedupes by plan), so combined
-  * numbers approximate WARM steady-state — consistent across rounds.
-  * The one-time COLD costs are what the `*_build` rows isolate.
-  * Queries run in NAME order (the sortBy below) in one shared session —
-  * pinned since round 6, so round-over-round deltas compare like with
-  * like. Caveat observed in round 7: when a query family FAILS mid-run
-  * (the events-loader regression), the thrown analyses and abandoned
-  * jobs perturb JVM/GC state for alphabetically-adjacent families (the
-  * s-family sits right after q*) — store timings inflated 3-4× with
-  * zero store-code changes, and returned below their round-6 numbers
-  * the moment the failures were fixed. A bench with a non-empty
-  * `failed` list is not comparable round-over-round.
+  * {{{
+  * runMain graft.Bench                     # full run: stdout line + bench_full.json
+  * runMain graft.Bench solo <query...>     # min of 3 runs per query
+  * runMain graft.Bench profile <query...>  # per-job and per-stage lines of the warm run
+  * runMain graft.Bench plan <query...>     # formatted plan, then the finalized
+  *                                         # adaptive plan with operator metrics
+  * }}}
   *
-  * Round-10 triage of a direction-consistent family drift (d10/d06/
-  * d21/a32 up ×1.3-1.65 r8→r9 with no dedup-code change): re-run solo
-  * (fresh JVM each, [[graft.tools.SoloBench]] min-of-3) on BOTH code
-  * versions on one machine state, the r9 code was FASTER than the r8
-  * code on all four (e.g. d10 3.10→2.66 s, d21 4.42→3.37 s) — the
-  * committed-bench drift was cross-SESSION machine state, not code.
-  * Same-family rows move together because they share allocation
-  * patterns, so they breathe together with the machine. The
-  * round-over-round comparison that is code-attributable is therefore
-  * solo-vs-solo on one machine state; committed-bench deltas between
-  * rounds carry an environment term the budget/flagged gate absorbs
-  * but per-row ratios do not.
+  * Every mode runs in one [[SparkBoot.session]] of SPARK_GRAFT_CPUS
+  * cores (SPARK_GRAFT_MASTER applies) after one shared warm-up.
   *
-  * Queries with a one-time construction phase ([[BenchPhases.phased]])
-  * additionally report `<name>_build` (index/table construction, timed
-  * once) and `<name>_probe` (steady-state read, min of two runs) rows.
+  * The full run:
+  *  - times each query twice and reports the min, which damps one-off
+  *    GC/IO noise. The second run may reuse cache entries with an
+  *    identical plan, so rows approximate warm steady state; the
+  *    `<name>_build` and `<name>_probe` rows of [[BenchPhases.phased]]
+  *    queries split the one-time construction from the steady-state read;
+  *  - runs queries in name order in one session, so two runs compare
+  *    like with like. A failing query perturbs JVM state for the rows
+  *    after it, so a run with a non-empty `"failed"` list is not
+  *    comparable with another run;
+  *  - excludes failures from the total and gives each query a time
+  *    budget (default 2.5 s, SPARK_GRAFT_BUDGET_SEC; exceptions in
+  *    [[BenchPhases.budgetOverrides]]), applied to the probe row of a
+  *    phased query and to the combined row otherwise. `"flagged"` names
+  *    the rows over budget;
+  *  - prints one stdout JSON line holding the full per-query map and
+  *    writes the same record to `bench_full.json`. The line's keys and
+  *    their order are a contract: entries may be added, never removed
+  *    or renamed.
   *
-  * Each query carries a time budget (default 2.5 s, override with
-  * SPARK_GRAFT_BUDGET_SEC; per-query exceptions with documented reasons
-  * in [[BenchPhases.budgetOverrides]]): the `"flagged"` list names the
-  * queries over budget — for phased queries the budget applies to the
-  * PROBE (the steady-state contract), for everything else to the
-  * combined run — so a perf regression in one family is caught by the
-  * artifact itself.
+  * Solo runs are a fresh JVM each and take about twice the warm
+  * shared-session rows; compare solo with solo, on one machine state.
   */
 object Bench {
+  private val usage = "usage: Bench [solo|profile|plan <query...>]"
+
   def main(args: Array[String]): Unit = {
+    val named = args.toSeq.drop(1).map(n => n -> SparkEntry.queries.getOrElse(n,
+      throw new NoSuchElementException(s"unknown query: $n")))
+    val mode: (SparkSession, String) => Unit = args.headOption match {
+      case None => full
+      case Some(_) if named.isEmpty => throw new IllegalArgumentException(usage)
+      case Some("solo") => solo(named)
+      case Some("profile") => profile(named)
+      case Some("plan") => plan(named)
+      case Some(m) => throw new IllegalArgumentException(s"unknown mode $m; $usage")
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val budget = sys.env.getOrElse("SPARK_GRAFT_BUDGET_SEC", "2.5").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkBoot.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     // Warm up the JVM/codegen/parquet reader paths so the first timed
     // query doesn't absorb session startup cost.
     try spark.range(1000000L).selectExpr("sum(id)").collect()
@@ -65,6 +66,20 @@ object Bench {
       try graft.queries.T.load(spark, sfDir, t).count()
       catch { case _: Throwable => () }
     }
+    mode(spark, sfDir)
+    spark.stop()
+  }
+
+  private type Query = (SparkSession, String) => DataFrame
+
+  private def secs(f: => Any): Double = {
+    val t0 = System.nanoTime()
+    f
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  private def full(spark: SparkSession, sfDir: String): Unit = {
+    val budget = sys.env.getOrElse("SPARK_GRAFT_BUDGET_SEC", "2.5").toDouble
     def timed(fn: () => Unit): (Double, Boolean) = {
       val t0 = System.nanoTime()
       val ok = try { fn(); true }
@@ -74,7 +89,6 @@ object Bench {
     }
     // name -> (seconds, ok, countsTowardTotal, budgetChecked)
     val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Boolean, Boolean, Boolean)]
-    // two timed runs per query, min reported — damps one-off GC/IO noise
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val (t1, ok1) = timed(() => fn(spark, sfDir).count())
       val combined =
@@ -83,7 +97,7 @@ object Bench {
       val phased = BenchPhases.phased.get(name)
       rows += ((name, combined._1, combined._2, true, phased.isEmpty))
       phased.foreach { mk =>
-        var probe: () => org.apache.spark.sql.DataFrame = null
+        var probe: () => DataFrame = null
         val (bt, bok) = timed(() => probe = mk(spark, sfDir))
         rows += ((s"${name}_build", bt, bok, false, false))
         if (bok) {
@@ -102,23 +116,58 @@ object Bench {
     val flagged = good.filter { r =>
       r._5 && r._2 > BenchPhases.budgetOverrides.getOrElse(r._1, budget)
     }.map("\"" + _._1 + "\"").mkString("[", ",", "]")
-    // Complete per-query record → repo file (the stdout line must stay
-    // short enough for a log tail to capture whole; round-over-round
-    // comparison reads this file, not the stdout summary).
     val fullPath = new java.io.File("bench_full.json").getAbsolutePath
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(fullPath),
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"flagged":$flagged,"budget_sec":$budget,"sf":"$sfDir","n_queries":${good.size}}""" + "\n")
-    // The stdout line carries the FULL per-query map again (round 14):
-    // the driver's round-over-round comparator reads stdout, not the
-    // repo file, and it extracted nothing two rounds running while the
-    // line held only a flagship subset (VERDICT r13 item 2). ~230
-    // entries ≈ 10 KB — comfortably inside a log tail, and a strict
-    // SUPERSET of the old flagship-subset map (entries only added,
-    // none removed or renamed; schema and key order unchanged).
-    // build.sbt's run/outputStrategy change strips the "[info] " prefix
-    // sbt's logger was wrapping the line in — the likeliest reason the
-    // driver's JSON parse failed despite a well-formed payload.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"flagged":$flagged,"budget_sec":$budget,"sf":"$sfDir","n_queries":${good.size},"full":"$fullPath"}""")
-    spark.stop()
+    val record = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"flagged":$flagged,"budget_sec":$budget,"sf":"$sfDir","n_queries":${good.size}"""
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(fullPath), record + "}\n")
+    println(record + s""","full":"$fullPath"}""")
+  }
+
+  private def solo(named: Seq[(String, Query)])(spark: SparkSession, sfDir: String): Unit =
+    named.foreach { case (name, fn) =>
+      val ts = Seq.fill(3)(secs(fn(spark, sfDir).count()))
+      println(f"[solo] $name%-32s min ${ts.min}%.3f s  (runs: ${ts.map(t => f"$t%.3f").mkString(", ")})")
+    }
+
+  private def profile(named: Seq[(String, Query)])(spark: SparkSession, sfDir: String): Unit = {
+    val listener = new tools.TaskListener
+    spark.sparkContext.addSparkListener(listener)
+    named.foreach { case (name, fn) =>
+      // the untraced cold run leaves codegen/cache state as in the
+      // bench's warm regime; the traced run is the second one
+      val cold = secs(fn(spark, sfDir).count())
+      println(f"\n===== $name  (cold ${cold}%.3f s; jobs below are the WARM run) =====")
+      listener.settle()
+      listener.trace = true
+      val warm = secs(fn(spark, sfDir).count())
+      listener.settle()
+      listener.trace = false
+      println(f"[total] $name warm ${warm}%.3f s")
+    }
+  }
+
+  private def plan(named: Seq[(String, Query)])(spark: SparkSession, sfDir: String): Unit = {
+    def walk(p: SparkPlan, depth: Int): Unit = {
+      val m = p.metrics.toSeq
+        .filter { case (_, v) => v.value != 0 && v.value != -1 }
+        .sortBy(_._1)
+        .map { case (k, v) => s"$k=${v.value}" }.mkString(", ")
+      println(("  " * depth) + p.nodeName + (if (m.isEmpty) "" else s"  [$m]"))
+      p match {
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan, depth + 1)
+        case s: QueryStageExec => walk(s.plan, depth + 1)
+        case _ => p.children.foreach(walk(_, depth + 1))
+      }
+    }
+    named.foreach { case (name, fn) =>
+      fn(spark, sfDir).count() // cold pass: codegen/cache state as in the bench
+      val df = fn(spark, sfDir)
+      println(s"\n========== $name ==========")
+      df.explain("formatted")
+      // execute THIS queryExecution (count() would plan a separate one,
+      // leaving these operators' metrics empty)
+      val n = df.queryExecution.executedPlan.execute().count()
+      println(s"\n===== $name  (finalized, warm, $n result rows) =====")
+      walk(df.queryExecution.executedPlan, 0)
+    }
   }
 }

@@ -11,11 +11,11 @@ import org.apache.spark.sql.SparkSession
   * {{{
   * sbt "runMain graft.Cli verify <sfDir> <outDir>"   # correctness dump
   * sbt "runMain graft.Cli bench"                     # timed run (env-config)
-  * sbt "runMain graft.Cli explain [query...]"        # plan audit
+  * sbt "runMain graft.Cli explain <query...>"        # plan audit (= Bench plan)
   * sbt "runMain graft.Cli scale [query...]"          # scale-trend bench (SCALE.md)
   * sbt "runMain graft.Cli scaleup [src] [dst] [factor]" # synthesize a bigger SF
   * sbt "runMain graft.Cli reseed [src] [dst] [seed]" # seed-perturbed substrate
-  * sbt "runMain graft.Cli solobench <query...>"      # solo min-of-3 timing
+  * sbt "runMain graft.Cli solobench <query...>"      # solo min-of-3 timing (= Bench solo)
   * sbt "runMain graft.Cli streambench"               # streaming-sink artifact (STREAM.md)
   * sbt "runMain graft.Cli demo"                      # library tour
   * sbt "runMain graft.Cli queries"                   # list registered queries
@@ -54,31 +54,22 @@ object Cli {
   /** Local session for the store verbs; built only when a verb needs
     * one (listing queries/plugins must not pay Spark startup).
     */
-  private def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private def session(): SparkSession =
+    SparkBoot.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
 
   def main(args: Array[String]): Unit = args.toList match {
     case "verify" :: rest if rest.size == 2 => Verify.main(rest.toArray)
     case "bench" :: _ => Bench.main(Array.empty)
-    case "explain" :: rest => tools.Explain.main(rest.toArray)
+    case "explain" :: rest if rest.nonEmpty => Bench.main(("plan" :: rest).toArray)
     case "scale" :: rest => tools.ScaleBench.main(rest.toArray)
     // synthesize a larger scale factor for the two-point scale proof
     // (src dst factor all optional — ScaleUp's defaults)
     case "scaleup" :: rest if rest.size <= 3 => tools.ScaleUp.main(rest.toArray)
     // seed-perturbed substrate for the second-seed oracle sweep
     case "reseed" :: rest if rest.size <= 3 => tools.Reseed.main(rest.toArray)
-    // fresh-JVM-grade single-query timing (run via runMain for a truly
-    // fresh JVM; the verb exists for discoverability)
-    case "solobench" :: rest if rest.nonEmpty => tools.SoloBench.main(rest.toArray)
+    // fresh-JVM-grade single-query timing (run `graft.Bench solo` via
+    // runMain for a truly fresh JVM; the verb exists for discoverability)
+    case "solobench" :: rest if rest.nonEmpty => Bench.main(("solo" :: rest).toArray)
     // streaming sink throughput + state-boundedness artifact (STREAM.md)
     case "streambench" :: _ => tools.StreamBench.main(Array.empty)
     case "demo" :: _ => Demo.main(Array.empty)
@@ -247,7 +238,7 @@ object Cli {
     case other =>
       System.err.println(
         s"unknown command ${other.mkString(" ")}; use: verify <sfDir> <outDir> | bench | " +
-          "explain [q...] | scale [q...] | scaleup [src] [dst] [factor] | " +
+          "explain <q...> | scale [q...] | scaleup [src] [dst] [factor] | " +
           "reseed [src] [dst] [seed] | solobench <q...> | streambench | " +
           "demo | queries | plugins | health | doctor | " +
           "config show | cache stats|purge-legacy|clear <path> | " +

@@ -1,14 +1,18 @@
 package graft
 
+import java.lang.management.ManagementFactory
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
-/** Session bootstrap for the driver-contract mains and the test
-  * suite: the master comes from `SPARK_GRAFT_MASTER` (default
-  * `local[cpus]`), and a multi-JVM `local-cluster[n,cores,memMB]`
-  * master additionally gets the two things forked executor JVMs cannot
-  * inherit from this JVM — the application classpath (Spark's own jars
-  * arrive via SPARK_HOME) and the JDK-17 `--add-opens` set that
-  * spark-submit would normally inject.
+/** Session bootstrap for every main and the test suite: the master
+  * comes from `SPARK_GRAFT_MASTER` (default `local[cpus]`), and a
+  * multi-JVM `local-cluster[n,cores,memMB]` master additionally gets
+  * the two things forked executor JVMs cannot inherit from this JVM —
+  * the application classpath (Spark's own jars arrive via SPARK_HOME)
+  * and the JDK-17 `--add-opens` set that spark-submit would normally
+  * inject.
   *
   * Why this exists: `local[k]` runs every task inside the driver JVM,
   * so closure serialization, TypedImperativeAggregate buffer ser/de,
@@ -25,18 +29,13 @@ object SparkBoot {
   def master(defaultCores: String): String =
     sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$defaultCores]")
 
-  /** Matches org.apache.spark.launcher.JavaModuleOptions (build.sbt
-    * carries the same list for the driver JVM).
+  /** The `--add-opens` flags this JVM was started with (build.sbt's
+    * list, which spark-submit would otherwise inject), for the forked
+    * executors. The JVM reports `--add-opens a=b` as `--add-opens=a=b`.
     */
-  private val jdk17AddOpens: String = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
+  private[graft] def addOpens: Seq[String] =
+    ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
+      .filter(_.startsWith("--add-opens="))
 
   /** This JVM's Scala binary version ("2.13"), shipped to the executor
     * launch environment: Spark's launcher
@@ -67,6 +66,22 @@ object SparkBoot {
     if (!m.startsWith("local-cluster")) b.master(m)
     else b.master(m)
       .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      .config("spark.executor.extraJavaOptions", jdk17AddOpens)
+      .config("spark.executor.extraJavaOptions", addOpens.mkString(" "))
       .config("spark.executorEnv.SPARK_SCALA_VERSION", scalaBinaryVersion)
+
+  /** The session every main uses: [[configure]]d for [[master]]`(cores)`,
+    * `cores` shuffle partitions, UTC session time, no UI, WARN logging.
+    * An existing session is returned by `getOrCreate` with these
+    * settings applied to it, so callers that must keep a caller's
+    * session untouched check for one first.
+    */
+  def session(cores: String): SparkSession = {
+    val s = configure(SparkSession.builder(), master(cores))
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }

@@ -163,13 +163,7 @@ object Examples {
   def main(args: Array[String]): Unit = {
     val which = args.headOption.getOrElse("all")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkBoot.session("8")
     val work = java.nio.file.Files.createTempDirectory("graft_examples").toString
     val runs: Seq[(String, () => DataFrame)] = Seq(
       "quickstart" -> (() => quickstart(spark, sfDir, s"$work/q")),

@@ -95,7 +95,7 @@ object Curation {
     // sizing count below, the bloom bit aggregation, and the exact
     // join's broadcast build — and each would otherwise re-run the
     // full tokenize + n-gram explode + groupBy over the bench docs
-    // (JobProfile r14: three identical 32-task gram stages per run).
+    // (`graft.Bench profile` showed three identical 32-task gram stages per run).
     // The count() that sizes the bloom doubles as the materialization
     // barrier. Bounded frame: distinct bench grams only.
     val benchGrams = cacheOnce(wordGramPositions(bench, idCol, textCol, n)

@@ -1178,6 +1178,7 @@ object VectorSearch {
   def semDedup(vectors: DataFrame, idCol: String, vecCol: String,
       cents: Array[Seq[Float]], tau: Double,
       pairBudget: Long = 16L << 20): DataFrame = {
+    require(pairBudget > 0, s"pairBudget must be positive (got $pairBudget)")
     // fanOut: the within-cell pair join inherits the PROBE side's
     // partitioning when the build side broadcasts — off a narrow scan
     // the Θ(cell²) cosine work would run on one or two tasks

@@ -56,7 +56,7 @@ package object ops {
     * MULTIPLIES through join lineage: d11/d16's corpus (a 1:1
     * planted-contamination join) was estimated at 39.7 GB against
     * 1.8 MB of actual leaf bytes, silently turning fanOut into the
-    * identity — the round-14 ExecDebug dump showed d16's whole
+    * identity — d16's finalized plan (`graft.Bench plan`) showed its whole
     * gram-explode + bloom-probe kernel (860 ms pipeline) running on the
     * 2 tasks of the raw union instead of 32.
     */

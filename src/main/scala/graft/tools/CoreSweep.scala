@@ -128,6 +128,8 @@ object CoreSweep {
         "exactly where a cluster needs it to."))
 
   def main(args: Array[String]): Unit = {
+    require(!sys.env.contains("SPARK_GRAFT_MASTER"),
+      "CoreSweep sets the master itself (local[k] per core count); unset SPARK_GRAFT_MASTER")
     val loCores = sys.env.getOrElse("SPARK_GRAFT_CORES_LO", "8").toInt
     val hiCores = sys.env.getOrElse("SPARK_GRAFT_CORES_HI", "32").toInt
     val smallDir = sys.env.getOrElse(
@@ -146,14 +148,7 @@ object CoreSweep {
 
     def session(cores: Int): SparkSession = {
       SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-      val s = SparkSession.builder()
-        .master(s"local[$cores]")
-        .config("spark.sql.shuffle.partitions", cores)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
+      graft.SparkBoot.session(cores.toString)
     }
 
     val osBean = ManagementFactory.getOperatingSystemMXBean

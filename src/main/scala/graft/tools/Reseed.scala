@@ -42,16 +42,7 @@ object Reseed {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val preexisting =
       SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-    val spark = preexisting.getOrElse {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    val spark = preexisting.getOrElse(graft.SparkBoot.session(cpus))
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     def write(df: DataFrame, t: String): Unit = {

@@ -131,13 +131,7 @@ object ScaleBench {
     val step = sys.env.getOrElse("SPARK_GRAFT_SCALE_STEP", "10").toDouble
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
+      val s = graft.SparkBoot.session(cpus)
       try s.range(1000000L).selectExpr("sum(id)").collect()
       catch { case _: Throwable => () }
       s

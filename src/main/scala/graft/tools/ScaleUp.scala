@@ -85,16 +85,7 @@ object ScaleUp {
     val preexisting =
       SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = preexisting.getOrElse {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    val spark = preexisting.getOrElse(graft.SparkBoot.session(cpus))
 
     val cipherUdf = udf((s: String, r: Int) => cipher(s, r))
     val reps = spark.range(factor).select(col("id").cast("int").as("__r"))

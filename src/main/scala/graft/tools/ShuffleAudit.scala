@@ -1,10 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 import graft.queries.QueryRegistry
 
@@ -37,30 +33,9 @@ import graft.queries.QueryRegistry
   * rows), counting every task of every job the query triggers —
   * including centroid/codebook training actions. Listener delivery is
   * asynchronous, so counters are read only after they have been
-  * stable for three consecutive polls.
+  * stable for three consecutive polls ([[TaskListener.settle]]).
   */
 object ShuffleAudit {
-
-  private final class Metrics extends SparkListener {
-    val shufRead, shufWrite, memSpill, diskSpill, tasks = new AtomicLong
-    val peakTaskMem = new AtomicLong
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        memSpill.addAndGet(m.memoryBytesSpilled)
-        diskSpill.addAndGet(m.diskBytesSpilled)
-        peakTaskMem.getAndUpdate(p => math.max(p, m.peakExecutionMemory))
-        tasks.incrementAndGet()
-      }
-    }
-    def snapshot: Seq[Long] = Seq(shufRead.get, shufWrite.get,
-      memSpill.get, diskSpill.get, peakTaskMem.get, tasks.get)
-    def reset(): Unit =
-      Seq(shufRead, shufWrite, memSpill, diskSpill, peakTaskMem, tasks)
-        .foreach(_.set(0L))
-  }
 
   /** Bytes under the final plan's leaf relations — post-pruning file
     * sizes for parquet scans, materialized sizes for cached frames.
@@ -86,32 +61,11 @@ object ShuffleAudit {
     else Some(sizes.sum.min(BigInt(Long.MaxValue)).toLong)
   }
 
-  /** Waits until the async listener bus has drained this query's task
-    * events: the counters must hold still for three consecutive polls.
-    */
-  private def settle(m: Metrics): Unit = {
-    var last = m.snapshot
-    var stable = 0
-    var waited = 0
-    while (stable < 3 && waited < 5000) {
-      Thread.sleep(100); waited += 100
-      val now = m.snapshot
-      if (now == last) stable += 1 else { stable = 0; last = now }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkBoot.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
-    val metrics = new Metrics
+    val metrics = new TaskListener
     spark.sparkContext.addSparkListener(metrics)
 
     val names = (if (args.nonEmpty) args.toSeq
@@ -132,7 +86,7 @@ object ShuffleAudit {
       def ratio: Option[Double] = scan.collect { case s if s > 0 => shufW / s }
     }
     val rows = names.map { n =>
-      settle(metrics); metrics.reset()
+      metrics.settle(); metrics.reset()
       var scanMb: Option[Double] = None
       val failed =
         try {
@@ -142,7 +96,7 @@ object ShuffleAudit {
           false
         } catch { case e: Throwable =>
           System.err.println(s"[shuffle] $n failed: ${e.getMessage}"); true }
-      settle(metrics)
+      metrics.settle()
       val Seq(sr, sw, ms, ds, pk, tk) = metrics.snapshot
       spark.catalog.clearCache()
       System.err.println(f"[shuffle] $n: scan ${scanMb.getOrElse(-1.0)}%.1f MB, shufW ${sw / mb}%.1f MB, tasks $tk")

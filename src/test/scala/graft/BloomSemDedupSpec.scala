@@ -107,6 +107,15 @@ class BloomSemDedupSpec extends SparkSuite {
     assert(s1.subsetOf(s8), "C=8 dropped a pair C=1 did not — impossible")
   }
 
+  test("semDedup rejects a non-positive pairBudget at the call") {
+    val e = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select($"vec_id", $"embedding")
+    val c1 = V.trainCentroids(e, "vec_id", "embedding", c = 1, iters = 1)
+    val err = intercept[IllegalArgumentException](
+      V.semDedup(e, "vec_id", "embedding", c1, tau = 0.999, pairBudget = 0L))
+    assert(err.getMessage.contains("pairBudget"))
+  }
+
   test("semDedup blocking: a forced-hot cell splits into B² bucket keys, results identical") {
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select($"vec_id", $"embedding")

@@ -38,13 +38,7 @@ object SparkSuite {
   //     sbt "testOnly graft.TxStoreSpec graft.StreamingSpec ..."
   // Default master is local[2].
   lazy val session: SparkSession = {
-    val s = graft.SparkBoot.configure(
-        SparkSession.builder(), graft.SparkBoot.master("2"))
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = SparkBoot.session("2")
     graft.functions.GraftFunctions.register(s)
     s
   }

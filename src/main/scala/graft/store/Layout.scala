@@ -89,7 +89,7 @@ object Layout {
   def write(root: String, t: Transform): Unit = {
     requireSafeCol(t.col)
     Files.createDirectories(Paths.get(root))
-    Files.writeString(path(root), t.json + "\n")
+    TxStore.writeAtomic(path(root), t.json + "\n")
   }
 
   def read(root: String): Transform = {

@@ -25,9 +25,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *  - readers resolve `_current` first, so they only ever see a fully
   *    written snapshot — a merge that fails mid-job leaves the pointer
   *    (and therefore the table) untouched;
-  *  - the pointer flip is a same-filesystem `ATOMIC_MOVE`, and carries
-  *    an optimistic-concurrency check on the expected base version
-  *    (lost-update protection for racing writers);
+  *  - every publishing entry point runs ONE protocol, [[commit]]:
+  *    lock, check the base against `_current` before any work, claim,
+  *    re-check, manifest, then a same-filesystem `ATOMIC_MOVE` pointer
+  *    flip (lost-update protection for racing writers);
   *  - version numbers are CLAIMED with a filesystem conditional put
   *    ([[claimVersion]]: build at a writer-unique staging path, one
   *    atomic rename into place) — so racing writers in DIFFERENT
@@ -104,8 +105,7 @@ object TxStore {
   def history(spark: SparkSession, root: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types._
-    val cur = currentVersion(root).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
+    val cur = committed(root)
     val schema = StructType(Seq(
       StructField("version", LongType), StructField("action", StringType),
       StructField("parent", LongType), StructField("num_files", LongType)))
@@ -126,15 +126,71 @@ object TxStore {
     if (Files.exists(f)) Some(Files.readString(f).trim.toLong) else None
   }
 
-  /** Initialize the table at version 1. */
-  def init(df: DataFrame, root: String): Long = withCommitLock(root) {
-    require(currentVersion(root).isEmpty, s"table already initialized at $root")
-    Files.createDirectories(Paths.get(root, "_versions"))
-    writeVersion(df, root, 1L)
-    writeManifest(root, 1L, "init", parent = None)
-    flipPointer(root, expected = None, next = 1L)
-    1L
+  /** The committed version (throws for an uninitialized table). */
+  private def committed(root: String): Long = currentVersion(root).getOrElse(
+    throw new IllegalStateException(s"no committed version at $root"))
+
+  private def conflict(root: String, base: Long) = new ConcurrentCommitException(
+    s"table at $root moved past v$base; retry on the new snapshot")
+
+  /** The one commit protocol behind every publishing entry point:
+    *
+    *  1. under [[withCommitLock]], resolve the base — `expected`, else
+    *     the committed version; v0 is the empty table, so `Some(0L)`
+    *     mints a first version — and require `_current` to equal it
+    *     BEFORE any work: a stale base is a conflict, never a read of
+    *     a directory retention may have expired;
+    *  1. build base+1 through [[claimVersion]]: `stage(base, dir)`
+    *     writes the version's content at a writer-unique staging path;
+    *  1. re-check `_current` (the cross-process guard: another JVM's
+    *     flip is invisible to the in-process monitor);
+    *  1. `beforeFlip(next)` — sidecars the version must carry;
+    *  1. write the `_log` manifest, then flip the pointer.
+    *
+    * Anything that throws between the claim and the flip tears the
+    * claim (and its manifest) down, so a failed commit leaves no
+    * version, no manifest and no blocked version number behind.
+    */
+  private def commit(root: String, expected: Option[Long], action: String,
+      beforeFlip: Long => Unit = _ => ())(stage: (Long, String) => Unit): Long =
+    withCommitLock(root) {
+      val base = expected.getOrElse(committed(root))
+      if (currentVersion(root).getOrElse(0L) != base) {
+        require(base > 0, s"table already initialized at $root")
+        throw conflict(root, base)
+      }
+      val next = base + 1
+      Files.createDirectories(Paths.get(root, "_versions"))
+      claimVersion(root, next)(stage(base, _))
+      try {
+        if (currentVersion(root).getOrElse(0L) != base) throw conflict(root, base)
+        beforeFlip(next)
+        writeManifest(root, next, action, Some(base).filter(_ > 0))
+        flipPointer(root, next)
+      } catch {
+        case e: Throwable =>
+          deleteRecursively(Paths.get(versionDir(root, next)))
+          Files.deleteIfExists(logDir(root).resolve(s"v$next.json"))
+          throw e
+      }
+      next
+    }
+
+  /** Write one immutable snapshot: `df` as a version's parquet files
+    * (partitioned by `partitionBy`, if given) — the staging body of
+    * every commit that writes fresh data. On a mid-write failure only
+    * this writer's staging is removed ([[claimVersion]]), so a retry of
+    * the same version can proceed.
+    */
+  private def writeParquet(df: DataFrame, dir: String,
+      partitionBy: Option[String] = None): Unit = {
+    val w = df.write.mode(SaveMode.ErrorIfExists)
+    partitionBy.fold(w)(c => w.partitionBy(c)).parquet(dir)
   }
+
+  /** Initialize the table at version 1. */
+  def init(df: DataFrame, root: String): Long =
+    commit(root, Some(0L), "init")((_, dir) => writeParquet(df, dir))
 
   // ---- deletion vectors (merge-on-read DELETE) ----
   //
@@ -164,11 +220,13 @@ object TxStore {
   private def readDv(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(Skipping.sidecarFiles(dvPath(dir).toString): _*)
 
-  /** The logical rows of a version directory: raw files minus the
+  /** The logical rows of version `v`: raw files minus the
     * deletion-vector positions, when a `_dv/` sidecar exists.
     */
-  private def readSnapshotDir(spark: SparkSession, dir: String): DataFrame =
+  private def snapshot(spark: SparkSession, root: String, v: Long): DataFrame = {
+    val dir = versionDir(root, v)
     applyDv(spark, dir, spark.read.parquet(dir))
+  }
 
   /** Anti-join `df` (still a file-source frame over `dir`'s files, so
     * `_metadata` resolves — also true of [[Skipping]]'s pruned reads)
@@ -198,17 +256,14 @@ object TxStore {
     */
   def commitDeleteVectors(spark: SparkSession, root: String,
       predicate: org.apache.spark.sql.Column,
-      expectedVersion: Option[Long] = None): Long = withCommitLock(root) {
+      expectedVersion: Option[Long] = None): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val expected = expectedVersion.orElse(currentVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    val baseDir = versionDir(root, expected)
-    require(partitionDirs(baseDir).isEmpty,
-      "deletion vectors require an unpartitioned layout " +
-        "(partitioned tables delete at partition grain)")
-    val next = expected + 1
-    claimVersion(root, next) { nextDir =>
-      linkTree(Paths.get(baseDir), Paths.get(nextDir))
+    commit(root, expectedVersion, "delete_dv") { (base, nextDir) =>
+      val baseDir = versionDir(root, base)
+      require(partitionDirs(baseDir).isEmpty,
+        "deletion vectors require an unpartitioned layout " +
+          "(partitioned tables delete at partition grain)")
+      linkFiles(Paths.get(baseDir), Paths.get(nextDir))
       // new deletions, evaluated over the parent's LOGICAL rows (the
       // anti-join keeps already-deleted positions from re-matching);
       // NULL predicate keeps the row, SQL DELETE semantics. Metadata
@@ -243,14 +298,6 @@ object TxStore {
       deleteRecursively(dvPath(nextDir))
       Files.move(tmp, dvPath(nextDir))
     }
-    if (currentVersion(root) != Some(expected)) {
-      deleteRecursively(Paths.get(versionDir(root, next)))
-      throw new ConcurrentCommitException(
-        s"table at $root moved past v$expected; retry on the new snapshot")
-    }
-    writeManifest(root, next, "delete_dv", Some(expected))
-    flipPointer(root, Some(expected), next)
-    next
   }
 
   /** Maintenance twin of [[commitDeleteVectors]]: materialize the
@@ -258,28 +305,13 @@ object TxStore {
     * that pays the rewrite once after many cheap deletes.
     */
   def commitPurgeDeletes(spark: SparkSession, root: String,
-      expectedVersion: Option[Long] = None): Long = withCommitLock(root) {
-    val expected = expectedVersion.orElse(currentVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    val clean = readSnapshotDir(spark, versionDir(root, expected))
-    val next = expected + 1
-    writeVersion(clean, root, next)
-    if (currentVersion(root) != Some(expected)) {
-      deleteRecursively(Paths.get(versionDir(root, next)))
-      throw new ConcurrentCommitException(
-        s"table at $root moved past v$expected; retry on the new snapshot")
-    }
-    writeManifest(root, next, "purge_deletes", Some(expected))
-    flipPointer(root, Some(expected), next)
-    next
-  }
+      expectedVersion: Option[Long] = None): Long =
+    commit(root, expectedVersion, "purge_deletes")((base, dir) =>
+      writeParquet(snapshot(spark, root, base), dir))
 
   /** The committed snapshot (throws for an uninitialized table). */
-  def read(spark: SparkSession, root: String): DataFrame = {
-    val v = currentVersion(root).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    readSnapshotDir(spark, versionDir(root, v))
-  }
+  def read(spark: SparkSession, root: String): DataFrame =
+    snapshot(spark, root, committed(root))
 
   /** SHALLOW CLONE (Delta's CLONE TABLE): a NEW table whose v1 is the
     * source's committed snapshot, hard-linked file for file — zero data
@@ -292,37 +324,30 @@ object TxStore {
     * rows. The clone records its provenance manifest-side.
     */
   def cloneTable(spark: SparkSession, srcRoot: String, dstRoot: String): Long = {
-    val srcV = currentVersion(srcRoot).getOrElse(
-      throw new IllegalStateException(s"no committed version at $srcRoot"))
-    withCommitLock(dstRoot) {
-      require(currentVersion(dstRoot).isEmpty, s"table already initialized at $dstRoot")
-      Files.createDirectories(Paths.get(dstRoot, "_versions"))
-      // The source commit lock is NOT held (a clone must not block the
-      // source's writers), so a concurrent expireVersions on the source
-      // can delete v$srcV mid-link. A bare post-link `exists(srcDir)`
-      // is NOT enough: deletion removes files before the directory, so
-      // the dir can still be present while the tree we linked was
-      // already partial. Completeness is therefore verified against
-      // the source's own listing — list before, link exactly that
-      // list, re-list after; any difference (or a vanished file midway)
-      // means a deletion was in flight and the clone is torn down as a
-      // clean retryable conflict instead of committing a partial v1.
-      claimVersion(dstRoot, 1L) { dstV1 =>
-        try linkTreeVerified(Paths.get(versionDir(srcRoot, srcV)), Paths.get(dstV1))
-        catch {
-          case _: java.nio.file.NoSuchFileException =>
-            throw new ConcurrentCommitException(
-              s"source version v$srcV at $srcRoot expired during clone; retry")
-        }
-      }
-      // hidden-partitioning layout (if any) is part of the table's identity
-      val layout = Paths.get(srcRoot, "_layout.json")
+    val srcV = committed(srcRoot)
+    // hidden-partitioning layout (if any) is part of the table's identity
+    val layout = Paths.get(srcRoot, "_layout.json")
+    val copyLayout: Long => Unit = _ =>
       if (Files.exists(layout))
         Files.copy(layout, Paths.get(dstRoot, "_layout.json"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      writeManifest(dstRoot, 1L, s"clone:$srcRoot@v$srcV", parent = None)
-      flipPointer(dstRoot, expected = None, next = 1L)
-      1L
+          StandardCopyOption.REPLACE_EXISTING)
+    // The source commit lock is NOT held (a clone must not block the
+    // source's writers), so a concurrent expireVersions on the source
+    // can delete v$srcV mid-link. A bare post-link `exists(srcDir)`
+    // is NOT enough: deletion removes files before the directory, so
+    // the dir can still be present while the tree we linked was
+    // already partial. Completeness is therefore verified against
+    // the source's own listing — list before, link exactly that
+    // list, re-list after; any difference (or a vanished file midway)
+    // means a deletion was in flight and the clone is torn down as a
+    // clean retryable conflict instead of committing a partial v1.
+    commit(dstRoot, Some(0L), s"clone:$srcRoot@v$srcV", copyLayout) { (_, dstV1) =>
+      try linkTreeVerified(Paths.get(versionDir(srcRoot, srcV)), Paths.get(dstV1))
+      catch {
+        case _: java.nio.file.NoSuchFileException =>
+          throw new ConcurrentCommitException(
+            s"source version v$srcV at $srcRoot expired during clone; retry")
+      }
     }
   }
 
@@ -337,10 +362,12 @@ object TxStore {
   def initHidden(df: DataFrame, root: String, t: Layout.Transform): Long = {
     import org.apache.spark.sql.functions.col
     requireTzFreeForDays(df, t)
-    val v = initPartitioned(
-      df.withColumn(Layout.PartCol, t(col(t.col))), root, Layout.PartCol)
-    Layout.write(root, t)
-    v
+    // the layout is part of v1: written before the flip, so a rejected
+    // spec tears the claim down instead of leaving a layout-less table
+    commit(root, Some(0L), "init", beforeFlip = _ => Layout.write(root, t)) { (_, dir) =>
+      writeParquet(df.withColumn(Layout.PartCol, t(col(t.col))), dir,
+        Some(Layout.PartCol))
+    }
   }
 
   /** [[Layout.Days]]'s timezone contract (see its Scaladoc): the
@@ -425,12 +452,11 @@ object TxStore {
     * it are uncommitted orphans by definition.
     */
   def readVersion(spark: SparkSession, root: String, v: Long): DataFrame = {
-    val cur = currentVersion(root).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
+    val cur = committed(root)
     require(v >= 1 && v <= cur, s"version v$v not committed (current: v$cur)")
     require(Files.exists(Paths.get(versionDir(root, v))),
       s"version v$v expired by retention (oldest retained version differs)")
-    readSnapshotDir(spark, versionDir(root, v))
+    snapshot(spark, root, v)
   }
 
   /** MERGE-commit: upsert `updates` into the committed snapshot and
@@ -442,22 +468,9 @@ object TxStore {
     *   the version read at call time.
     */
   def commitUpsert(spark: SparkSession, root: String, updates: DataFrame,
-      pk: Seq[String], expectedVersion: Option[Long] = None): Long = withCommitLock(root) {
-    val expected = expectedVersion.orElse(currentVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    val base = readSnapshotDir(spark, versionDir(root, expected))
-    val merged = Store.upsert(base, updates, pk)
-    val next = expected + 1
-    writeVersion(merged, root, next)
-    if (currentVersion(root) != Some(expected)) {
-      deleteRecursively(Paths.get(versionDir(root, next)))
-      throw new ConcurrentCommitException(
-        s"table at $root moved past v$expected; retry on the new snapshot")
-    }
-    writeManifest(root, next, "upsert", Some(expected))
-    flipPointer(root, Some(expected), next)
-    next
-  }
+      pk: Seq[String], expectedVersion: Option[Long] = None): Long =
+    commit(root, expectedVersion, "upsert")((base, dir) =>
+      writeParquet(Store.upsert(snapshot(spark, root, base), updates, pk), dir))
 
   /** Schema-EVOLVING MERGE-commit: [[commitUpsert]] where `updates`
     * may carry columns the committed snapshot lacks (backfilled null
@@ -471,35 +484,15 @@ object TxStore {
     * hides corruption).
     */
   def commitUpsertEvolve(spark: SparkSession, root: String, updates: DataFrame,
-      pk: Seq[String], expectedVersion: Option[Long] = None): Long = withCommitLock(root) {
-    val expected = expectedVersion.orElse(currentVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    val base = readSnapshotDir(spark, versionDir(root, expected))
-    val merged = Store.upsertEvolve(base, updates, pk)
-    val next = expected + 1
-    writeVersion(merged, root, next)
-    if (currentVersion(root) != Some(expected)) {
-      deleteRecursively(Paths.get(versionDir(root, next)))
-      throw new ConcurrentCommitException(
-        s"table at $root moved past v$expected; retry on the new snapshot")
-    }
-    writeManifest(root, next, "upsert_evolve", Some(expected))
-    flipPointer(root, Some(expected), next)
-    next
-  }
+      pk: Seq[String], expectedVersion: Option[Long] = None): Long =
+    commit(root, expectedVersion, "upsert_evolve")((base, dir) =>
+      writeParquet(Store.upsertEvolve(snapshot(spark, root, base), updates, pk), dir))
 
   /** Initialize a PARTITIONED table at version 1 (directory layout
     * `v1/<partCol>=<value>/part-*.parquet`).
     */
-  def initPartitioned(df: DataFrame, root: String, partCol: String): Long = withCommitLock(root) {
-    require(currentVersion(root).isEmpty, s"table already initialized at $root")
-    Files.createDirectories(Paths.get(root, "_versions"))
-    claimVersion(root, 1L)(dir =>
-      df.write.mode(SaveMode.ErrorIfExists).partitionBy(partCol).parquet(dir))
-    writeManifest(root, 1L, "init", parent = None)
-    flipPointer(root, expected = None, next = 1L)
-    1L
-  }
+  def initPartitioned(df: DataFrame, root: String, partCol: String): Long =
+    commit(root, Some(0L), "init")((_, dir) => writeParquet(df, dir, Some(partCol)))
 
   /** Incremental MERGE-commit on a partitioned table — the 100 TB shape
     * of [[commitUpsert]]: only partitions containing updated keys are
@@ -514,33 +507,21 @@ object TxStore {
     */
   def commitUpsertPartitioned(spark: SparkSession, root: String,
       updates: DataFrame, pk: Seq[String], partCol: String,
-      expectedVersion: Option[Long] = None): Long = withCommitLock(root) {
+      expectedVersion: Option[Long] = None): Long = {
     import org.apache.spark.sql.functions.col
-    val expected = expectedVersion.orElse(currentVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    val baseDir = versionDir(root, expected)
-    val touched = updates.select(col(partCol)).distinct().collect()
-      .map(_.get(0)).toSet
-    val base = readSnapshotDir(spark, baseDir)
-    val touchedBase = base.filter(col(partCol).isInCollection(touched))
-    val merged = Store.upsert(touchedBase, updates, pk)
-    val next = expected + 1
-    claimVersion(root, next) { nextDir =>
-      merged.write.mode(SaveMode.ErrorIfExists).partitionBy(partCol).parquet(nextDir)
+    commit(root, expectedVersion, "upsert-partitioned") { (base, nextDir) =>
+      val baseDir = versionDir(root, base)
+      val touched = updates.select(col(partCol)).distinct().collect()
+        .map(_.get(0)).toSet
+      val touchedBase = snapshot(spark, root, base)
+        .filter(col(partCol).isInCollection(touched))
+      writeParquet(Store.upsert(touchedBase, updates, pk), nextDir, Some(partCol))
       // carry untouched partitions forward as hard links
       val writtenParts = partitionDirs(nextDir)
       partitionDirs(baseDir).filterNot(writtenParts.contains).foreach { p =>
-        linkTree(Paths.get(baseDir, p), Paths.get(nextDir, p))
+        linkFiles(Paths.get(baseDir, p), Paths.get(nextDir, p))
       }
     }
-    if (currentVersion(root) != Some(expected)) {
-      deleteRecursively(Paths.get(versionDir(root, next)))
-      throw new ConcurrentCommitException(
-        s"table at $root moved past v$expected; retry on the new snapshot")
-    }
-    writeManifest(root, next, "upsert-partitioned", Some(expected))
-    flipPointer(root, Some(expected), next)
-    next
   }
 
   /** `<partCol>=<value>` child directory names of a version dir. */
@@ -554,20 +535,25 @@ object TxStore {
     finally s.close()
   }
 
-  /** Recreate `to` as hard links to every file under `from` (copy where
-    * the filesystem refuses cross-links). Immutability of version dirs
-    * is what makes sharing safe.
+  /** Recreate under `to` hard links to every file under `from` whose
+    * relative path passes `keep` (copy where the filesystem refuses
+    * cross-links; a file already at the target is kept). Immutability
+    * of version dirs is what makes sharing safe. Returns the relative
+    * paths linked.
     */
-  private def linkTree(from: Path, to: Path): Unit = {
+  private def linkFiles(from: Path, to: Path,
+      keep: Path => Boolean = _ => true): Set[Path] = {
     Files.createDirectories(to)
-    val s = Files.walk(from)
-    try s.iterator().asScala.filter(Files.isRegularFile(_)).foreach { f =>
-      val t = to.resolve(from.relativize(f))
+    val rels = listFilesRel(from).filter(keep)
+    rels.toSeq.sorted.foreach { rel =>
+      val (f, t) = (from.resolve(rel), to.resolve(rel))
       Files.createDirectories(t.getParent)
-      try Files.createLink(t, f)
-      catch { case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-        Files.copy(f, t) }
-    } finally s.close()
+      if (!Files.exists(t))
+        try Files.createLink(t, f)
+        catch { case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
+          Files.copy(f, t) }
+    }
+    rels
   }
 
   /** Relative paths of every regular file under `from`. */
@@ -578,7 +564,7 @@ object TxStore {
     finally s.close()
   }
 
-  /** [[linkTree]] with a completeness proof, for linking a tree whose
+  /** [[linkFiles]] with a completeness proof, for linking a tree whose
     * owner's lock is NOT held (cross-table clone): list the source,
     * link exactly that list, re-list and require set equality. A
     * concurrent delete of the source is detected whichever way the
@@ -590,15 +576,7 @@ object TxStore {
     * inequality can only mean deletion in flight.
     */
   private def linkTreeVerified(from: Path, to: Path): Unit = {
-    val before = listFilesRel(from)
-    Files.createDirectories(to)
-    before.toSeq.sorted.foreach { rel =>
-      val (f, t) = (from.resolve(rel), to.resolve(rel))
-      Files.createDirectories(t.getParent)
-      try Files.createLink(t, f)
-      catch { case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-        Files.copy(f, t) }
-    }
+    val before = linkFiles(from, to)
     val after =
       try listFilesRel(from)
       catch { case _: java.nio.file.NoSuchFileException => Set.empty[Path] }
@@ -618,25 +596,15 @@ object TxStore {
     * the target version has been expired.
     */
   def commitRestore(spark: SparkSession, root: String, toVersion: Long,
-      expectedVersion: Option[Long] = None): Long = withCommitLock(root) {
-    val expected = expectedVersion.orElse(currentVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    require(toVersion >= 1 && toVersion <= expected,
-      s"version v$toVersion not committed (current: v$expected)")
-    val fromDir = Paths.get(versionDir(root, toVersion))
-    require(Files.exists(fromDir),
-      s"version v$toVersion expired by retention; cannot restore")
-    val next = expected + 1
-    claimVersion(root, next)(nextDir => linkTree(fromDir, Paths.get(nextDir)))
-    if (currentVersion(root) != Some(expected)) {
-      deleteRecursively(Paths.get(versionDir(root, next)))
-      throw new ConcurrentCommitException(
-        s"table at $root moved past v$expected; retry on the new snapshot")
+      expectedVersion: Option[Long] = None): Long =
+    commit(root, expectedVersion, "restore") { (base, nextDir) =>
+      require(toVersion >= 1 && toVersion <= base,
+        s"version v$toVersion not committed (current: v$base)")
+      val fromDir = Paths.get(versionDir(root, toVersion))
+      require(Files.exists(fromDir),
+        s"version v$toVersion expired by retention; cannot restore")
+      linkFiles(fromDir, Paths.get(nextDir))
     }
-    writeManifest(root, next, "restore", Some(expected))
-    flipPointer(root, Some(expected), next)
-    next
-  }
 
   /** Compaction commit: rewrite the committed snapshot into `numFiles`
     * files as a NEW version — data-identical, pure file-layout change,
@@ -647,21 +615,9 @@ object TxStore {
     * concurrently with readers.
     */
   def commitCompaction(spark: SparkSession, root: String, numFiles: Int,
-      expectedVersion: Option[Long] = None): Long = withCommitLock(root) {
-    val expected = expectedVersion.orElse(currentVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    val base = readSnapshotDir(spark, versionDir(root, expected)).coalesce(numFiles)
-    val next = expected + 1
-    writeVersion(base, root, next)
-    if (currentVersion(root) != Some(expected)) {
-      deleteRecursively(Paths.get(versionDir(root, next)))
-      throw new ConcurrentCommitException(
-        s"table at $root moved past v$expected; retry on the new snapshot")
-    }
-    writeManifest(root, next, "compaction", Some(expected))
-    flipPointer(root, Some(expected), next)
-    next
-  }
+      expectedVersion: Option[Long] = None): Long =
+    commit(root, expectedVersion, "compaction")((base, dir) =>
+      writeParquet(snapshot(spark, root, base).coalesce(numFiles), dir))
 
   /** DELETE-commit: the committed snapshot minus rows matching
     * `predicate`, as the next version — same all-or-nothing pointer
@@ -672,25 +628,14 @@ object TxStore {
     */
   def commitDelete(spark: SparkSession, root: String,
       predicate: org.apache.spark.sql.Column,
-      expectedVersion: Option[Long] = None): Long = withCommitLock(root) {
-    val expected = expectedVersion.orElse(currentVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    // SQL DELETE semantics: only rows where the predicate is TRUE go;
-    // a NULL predicate keeps the row (bare !predicate would drop it)
-    val remaining = readSnapshotDir(spark, versionDir(root, expected))
-      .filter(!org.apache.spark.sql.functions.coalesce(predicate,
-        org.apache.spark.sql.functions.lit(false)))
-    val next = expected + 1
-    writeVersion(remaining, root, next)
-    if (currentVersion(root) != Some(expected)) {
-      deleteRecursively(Paths.get(versionDir(root, next)))
-      throw new ConcurrentCommitException(
-        s"table at $root moved past v$expected; retry on the new snapshot")
+      expectedVersion: Option[Long] = None): Long =
+    commit(root, expectedVersion, "delete") { (base, dir) =>
+      // SQL DELETE semantics: only rows where the predicate is TRUE go;
+      // a NULL predicate keeps the row (bare !predicate would drop it)
+      writeParquet(snapshot(spark, root, base)
+        .filter(!org.apache.spark.sql.functions.coalesce(predicate,
+          org.apache.spark.sql.functions.lit(false))), dir)
     }
-    writeManifest(root, next, "delete", Some(expected))
-    flipPointer(root, Some(expected), next)
-    next
-  }
 
   /** Contract-gated MERGE: evaluate row-level contract predicates over
     * the WOULD-BE snapshot and commit only if every row passes — a
@@ -709,38 +654,28 @@ object TxStore {
 
   def commitUpsertChecked(spark: SparkSession, root: String, updates: DataFrame,
       pk: Seq[String], checks: Map[String, org.apache.spark.sql.Column],
-      expectedVersion: Option[Long] = None): Long = withCommitLock(root) {
+      expectedVersion: Option[Long] = None): Long = {
     require(checks.nonEmpty, "commitUpsertChecked needs at least one check")
-    val expected = expectedVersion.orElse(currentVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    val base = readSnapshotDir(spark, versionDir(root, expected))
-    // the gate aggregate materializes the merge; cache it so the
-    // snapshot write reuses it instead of recomputing the full
-    // base-scan + merge shuffle a second time
-    val merged = Store.upsert(base, updates, pk).cache()
-    try {
-      val cs = checks.toSeq
-      val row = merged.agg(
-        org.apache.spark.sql.functions.sum(
-          org.apache.spark.sql.functions.when(!cs.head._2, 1L).otherwise(0L)),
-        cs.tail.map { case (_, p) =>
+    commit(root, expectedVersion, "upsert") { (base, dir) =>
+      // the gate aggregate materializes the merge; cache it so the
+      // snapshot write reuses it instead of recomputing the full
+      // base-scan + merge shuffle a second time
+      val merged = Store.upsert(snapshot(spark, root, base), updates, pk).cache()
+      try {
+        val cs = checks.toSeq
+        val row = merged.agg(
           org.apache.spark.sql.functions.sum(
-            org.apache.spark.sql.functions.when(!p, 1L).otherwise(0L))
-        }: _*).head()
-      val counts = cs.indices.map(i => cs(i)._1 -> row.getLong(i)).toMap
-      val bad = counts.filter(_._2 > 0)
-      if (bad.nonEmpty) throw new ContractViolationException(bad)
-      val next = expected + 1
-      writeVersion(merged, root, next)
-      if (currentVersion(root) != Some(expected)) {
-        deleteRecursively(Paths.get(versionDir(root, next)))
-        throw new ConcurrentCommitException(
-          s"table at $root moved past v$expected; retry on the new snapshot")
-      }
-      writeManifest(root, next, "upsert", Some(expected))
-      flipPointer(root, Some(expected), next)
-      next
-    } finally merged.unpersist()
+            org.apache.spark.sql.functions.when(!cs.head._2, 1L).otherwise(0L)),
+          cs.tail.map { case (_, p) =>
+            org.apache.spark.sql.functions.sum(
+              org.apache.spark.sql.functions.when(!p, 1L).otherwise(0L))
+          }: _*).head()
+        val counts = cs.indices.map(i => cs(i)._1 -> row.getLong(i)).toMap
+        val bad = counts.filter(_._2 > 0)
+        if (bad.nonEmpty) throw new ContractViolationException(bad)
+        writeParquet(merged, dir)
+      } finally merged.unpersist()
+    }
   }
 
   /** CDC between two committed versions: the endpoint diff keyed on
@@ -773,24 +708,11 @@ object TxStore {
     * most files.
     */
   def commitZorder(spark: SparkSession, root: String, colA: String,
-      colB: String, numFiles: Int, expectedVersion: Option[Long] = None): Long = withCommitLock(root) {
-    val expected = expectedVersion.orElse(currentVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    val base = readSnapshotDir(spark, versionDir(root, expected))
-    val next = expected + 1
-    claimVersion(root, next) { nextDir =>
-      Skipping.writeZOrdered(base, nextDir, colA, colB, numFiles)
+      colB: String, numFiles: Int, expectedVersion: Option[Long] = None): Long =
+    commit(root, expectedVersion, "zorder") { (base, nextDir) =>
+      Skipping.writeZOrdered(snapshot(spark, root, base), nextDir, colA, colB, numFiles)
       Skipping.writeStats(spark, nextDir, Seq(colA, colB))
     }
-    if (currentVersion(root) != Some(expected)) {
-      deleteRecursively(Paths.get(versionDir(root, next)))
-      throw new ConcurrentCommitException(
-        s"table at $root moved past v$expected; retry on the new snapshot")
-    }
-    writeManifest(root, next, "zorder", Some(expected))
-    flipPointer(root, Some(expected), next)
-    next
-  }
 
   /** Partition-evolution commit: rewrite the committed snapshot
     * PARTITIONED BY a (new) column as the next version — data-identical,
@@ -803,22 +725,9 @@ object TxStore {
     * case.
     */
   def commitRepartition(spark: SparkSession, root: String, partCol: String,
-      expectedVersion: Option[Long] = None): Long = withCommitLock(root) {
-    val expected = expectedVersion.orElse(currentVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    val base = readSnapshotDir(spark, versionDir(root, expected))
-    val next = expected + 1
-    claimVersion(root, next)(nextDir =>
-      base.write.mode(SaveMode.ErrorIfExists).partitionBy(partCol).parquet(nextDir))
-    if (currentVersion(root) != Some(expected)) {
-      deleteRecursively(Paths.get(versionDir(root, next)))
-      throw new ConcurrentCommitException(
-        s"table at $root moved past v$expected; retry on the new snapshot")
-    }
-    writeManifest(root, next, "repartition", Some(expected))
-    flipPointer(root, Some(expected), next)
-    next
-  }
+      expectedVersion: Option[Long] = None): Long =
+    commit(root, expectedVersion, "repartition")((base, dir) =>
+      writeParquet(snapshot(spark, root, base), dir, Some(partCol)))
 
   /** REPLACE-commit: the next version's content is `df` wholesale —
     * nothing carried from the parent. This is the commit a rebuild
@@ -833,32 +742,13 @@ object TxStore {
   def commitReplace(spark: SparkSession, root: String, df: DataFrame,
       partitionBy: Option[String] = None,
       expectedVersion: Option[Long] = None,
-      beforeFlip: Long => Unit = _ => ()): Long = withCommitLock(root) {
-    val expected = expectedVersion.orElse(currentVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    val next = expected + 1
-    claimVersion(root, next) { nextDir =>
-      partitionBy match {
-        case Some(pc) =>
-          df.write.mode(SaveMode.ErrorIfExists).partitionBy(pc).parquet(nextDir)
-        case None =>
-          df.write.mode(SaveMode.ErrorIfExists).parquet(nextDir)
-      }
-    }
-    if (currentVersion(root) != Some(expected)) {
-      deleteRecursively(Paths.get(versionDir(root, next)))
-      throw new ConcurrentCommitException(
-        s"table at $root moved past v$expected; retry on the new snapshot")
-    }
+      beforeFlip: Long => Unit = _ => ()): Long =
     // sidecars the candidate version must carry (e.g. the IVF quantizer
     // geometry) are written BEFORE the pointer flip: a committed version
     // always has its own sidecars on disk, while a sidecar orphaned by a
     // crash in this window describes an uncommitted version and is inert
-    beforeFlip(next)
-    writeManifest(root, next, "replace", Some(expected))
-    flipPointer(root, Some(expected), next)
-    next
-  }
+    commit(root, expectedVersion, "replace", beforeFlip)((_, dir) =>
+      writeParquet(df, dir, partitionBy))
 
   /** Attach a min/max stats sidecar to a committed version (see
     * [[Skipping]]). Stats live inside the immutable version directory,
@@ -867,9 +757,7 @@ object TxStore {
     */
   def writeStats(spark: SparkSession, root: String, cols: Seq[String],
       version: Option[Long] = None): Unit = {
-    val v = version.orElse(currentVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    Skipping.writeStats(spark, versionDir(root, v), cols)
+    Skipping.writeStats(spark, versionDir(root, version.getOrElse(committed(root))), cols)
   }
 
   /** Range read over the committed snapshot with file-level skipping —
@@ -877,8 +765,7 @@ object TxStore {
     */
   def readRange(spark: SparkSession, root: String, c: String,
       lo: org.apache.spark.sql.Column, hi: org.apache.spark.sql.Column): DataFrame = {
-    val v = currentVersion(root).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
+    val v = committed(root)
     applyDv(spark, versionDir(root, v),
       Skipping.readRange(spark, versionDir(root, v), c, lo, hi))
   }
@@ -888,9 +775,7 @@ object TxStore {
     */
   def writeBloomStats(spark: SparkSession, root: String, c: String,
       version: Option[Long] = None): Unit = {
-    val v = version.orElse(currentVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    Skipping.writeBloomStats(spark, versionDir(root, v), c)
+    Skipping.writeBloomStats(spark, versionDir(root, version.getOrElse(committed(root))), c)
   }
 
   /** Point read over the committed snapshot with Bloom file skipping —
@@ -899,8 +784,7 @@ object TxStore {
     */
   def readPoint(spark: SparkSession, root: String, c: String,
       key: org.apache.spark.sql.Column): DataFrame = {
-    val v = currentVersion(root).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
+    val v = committed(root)
     applyDv(spark, versionDir(root, v),
       Skipping.readPoint(spark, versionDir(root, v), c, key))
   }
@@ -967,40 +851,36 @@ object TxStore {
     */
   def commitAppend(spark: SparkSession, root: String, rows: DataFrame,
       expectedVersion: Option[Long] = None,
-      batchId: Option[Long] = None): Long = withCommitLock(root) {
-    val expected = expectedVersion.orElse(currentVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    val baseDir = Paths.get(versionDir(root, expected))
-    // align column order to the committed schema so every part file in
-    // the mixed version dir carries one physical layout
-    val baseSchema = spark.read.parquet(baseDir.toString).schema
-    require(rows.columns.toSet == baseSchema.fieldNames.toSet,
-      s"append schema ${rows.columns.toSeq.sorted} != " +
-        s"table ${baseSchema.fieldNames.toSeq.sorted} (use commitUpsertEvolve)")
-    // name-set equality is not enough: a batch with matching names but
-    // drifted types would pass and write MIXED physical schemas into one
-    // version dir, failing only at some later read with no pointer back
-    // to the offending append — so types fail loudly here instead
-    // nullability (top-level and nested: array containsNull, map
-    // valueContainsNull, struct field nullable) is NOT drift — parquet
-    // stores it per-file as definition levels, so a non-null batch
-    // appends safely into a nullable table; only a genuine type change
-    // can corrupt the mixed version dir
-    val baseTypes = baseSchema.fields
-      .map(f => f.name -> ignoreNullability(f.dataType)).toMap
-    val drifted = rows.schema.fields.collect {
-      case f if baseTypes(f.name) != ignoreNullability(f.dataType) =>
-        s"${f.name}: batch ${f.dataType.simpleString} != " +
-          s"table ${baseTypes(f.name).simpleString}"
-    }
-    require(drifted.isEmpty,
-      s"append column types drifted from the committed schema " +
-        s"(cast the batch or use commitUpsertEvolve): ${drifted.mkString("; ")}")
-    val aligned = rows.select(baseSchema.fieldNames.toSeq.map(
-      org.apache.spark.sql.functions.col): _*)
-    val next = expected + 1
-    claimVersion(root, next) { nextDir =>
-      aligned.write.mode(SaveMode.ErrorIfExists).parquet(nextDir)
+      batchId: Option[Long] = None): Long =
+    commit(root, expectedVersion, "append") { (base, nextDir) =>
+      val baseDir = Paths.get(versionDir(root, base))
+      // align column order to the committed schema so every part file in
+      // the mixed version dir carries one physical layout
+      val baseSchema = spark.read.parquet(baseDir.toString).schema
+      require(rows.columns.toSet == baseSchema.fieldNames.toSet,
+        s"append schema ${rows.columns.toSeq.sorted} != " +
+          s"table ${baseSchema.fieldNames.toSeq.sorted} (use commitUpsertEvolve)")
+      // name-set equality is not enough: a batch with matching names but
+      // drifted types would pass and write MIXED physical schemas into one
+      // version dir, failing only at some later read with no pointer back
+      // to the offending append — so types fail loudly here instead
+      // nullability (top-level and nested: array containsNull, map
+      // valueContainsNull, struct field nullable) is NOT drift — parquet
+      // stores it per-file as definition levels, so a non-null batch
+      // appends safely into a nullable table; only a genuine type change
+      // can corrupt the mixed version dir
+      val baseTypes = baseSchema.fields
+        .map(f => f.name -> ignoreNullability(f.dataType)).toMap
+      val drifted = rows.schema.fields.collect {
+        case f if baseTypes(f.name) != ignoreNullability(f.dataType) =>
+          s"${f.name}: batch ${f.dataType.simpleString} != " +
+            s"table ${baseTypes(f.name).simpleString}"
+      }
+      require(drifted.isEmpty,
+        s"append column types drifted from the committed schema " +
+          s"(cast the batch or use commitUpsertEvolve): ${drifted.mkString("; ")}")
+      writeParquet(rows.select(baseSchema.fieldNames.toSeq.map(
+        org.apache.spark.sql.functions.col): _*), nextDir)
       // the streaming fence rides INSIDE the staged dir so it commits
       // atomically with the version (see lastBatchId); the underscore
       // prefix hides it from Spark/DuckDB readers and the file counter
@@ -1017,31 +897,10 @@ object TxStore {
       // sidecar for this version") until the caller rebuilds stats.
       // `_dv` DOES travel: deletion vectors are per-file-name facts that
       // stay true for the linked base files and match no appended file.
-      def isSkippingSidecar(f: Path): Boolean = {
-        val head = baseDir.relativize(f).getName(0).toString
-        head == "_stats" || head == "_blooms"
-      }
-      val s = Files.walk(baseDir)
-      try s.iterator().asScala.filter(f => Files.isRegularFile(f) &&
-          f.getFileName.toString != "_batch_id" &&
-          !isSkippingSidecar(f)).foreach { f =>
-        val t = Paths.get(nextDir).resolve(baseDir.relativize(f))
-        Files.createDirectories(t.getParent)
-        if (!Files.exists(t))
-          try Files.createLink(t, f)
-          catch { case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-            Files.copy(f, t) }
-      } finally s.close()
+      linkFiles(baseDir, Paths.get(nextDir), rel =>
+        rel.getFileName.toString != "_batch_id" &&
+          !Set("_stats", "_blooms").contains(rel.getName(0).toString))
     }
-    if (currentVersion(root) != Some(expected)) {
-      deleteRecursively(Paths.get(versionDir(root, next)))
-      throw new ConcurrentCommitException(
-        s"table at $root moved past v$expected; retry on the new snapshot")
-    }
-    writeManifest(root, next, "append", Some(expected))
-    flipPointer(root, Some(expected), next)
-    next
-  }
 
   /** [[commitBatch]]'s insert-only sibling: [[commitAppend]] under the
     * streaming batch-id high-water mark (replays dropped wholesale).
@@ -1066,18 +925,14 @@ object TxStore {
       fence.foreach(id => writeFence(root, id))
       false
     } else {
-      if (currentVersion(root).isEmpty) {
+      if (currentVersion(root).isEmpty)
         // inline init so the first batch's fence marker is staged
         // atomically with v1 (init() + a marker written after the flip
         // would reopen the crash gap for the very first batch)
-        Files.createDirectories(Paths.get(root, "_versions"))
-        claimVersion(root, 1L) { dir =>
-          batch.write.mode(SaveMode.ErrorIfExists).parquet(dir)
+        commit(root, Some(0L), "init") { (_, dir) =>
+          writeParquet(batch, dir)
           Files.writeString(Paths.get(dir, "_batch_id"), batchId.toString)
         }
-        writeManifest(root, 1L, "init", parent = None)
-        flipPointer(root, expected = None, next = 1L)
-      }
       else if (!batch.isEmpty)
         commitAppend(spark, root, batch, batchId = Some(batchId))
       writeFence(root, batchId)
@@ -1127,7 +982,9 @@ object TxStore {
     * from failed or conflicted commits — plus `.staging.` leftovers
     * from writers that died mid-build, and version claims orphaned by
     * a process that died between [[claimVersion]] and the pointer flip
-    * (such a claim blocks its version number until vacuumed). Safe
+    * (such a claim blocks its version number until vacuumed; a table
+    * with no `_current` counts as v0, so an orphaned v1 claim goes
+    * too). Safe
     * anytime in-process (committed snapshots are never touched);
     * across processes it is EXCLUSIVE maintenance — do not run while
     * another process is mid-commit, or its in-flight claim reads as an
@@ -1137,47 +994,44 @@ object TxStore {
     // under the commit lock: a dir above _current is only an orphan if
     // no in-flight commit owns it — serializing with commits makes
     // "above the pointer" unambiguous
-    currentVersion(root) match {
-      case None => Seq.empty
-      case Some(committed) =>
-        val versionsDir = Paths.get(root, "_versions")
-        if (!Files.exists(versionsDir)) Seq.empty
-        else {
-          val it = Files.list(versionsDir)
-          try {
-            val orphans = it.iterator()
-            val removed = Seq.newBuilder[Long]
-            orphans.forEachRemaining { p =>
-              val name = p.getFileName.toString
-              if (name.contains(".staging.")) {
-                // staging left by a writer that died mid-build (a live
-                // writer's staging is protected by vacuum's exclusive-
-                // maintenance contract, same as the dirs above _current).
-                // The dir is always deleted, but its version number is
-                // only REPORTED as removed when that version is above
-                // the pointer: a loser's (or crashed claimant's)
-                // staging for an already-committed version is debris
-                // next to a live snapshot, and listing it would tell
-                // callers a committed version was removed.
-                deleteRecursively(p)
-                name.stripPrefix("v").takeWhile(_ != '.').toLongOption
-                  .filter(_ > committed).foreach(removed += _)
-              } else if (name.startsWith("v")) {
-                val v = name.drop(1).toLongOption
-                if (v.exists(_ > committed)) { deleteRecursively(p); removed += v.get }
-              }
-            }
-            // manifests orphaned by conflicted commits go with their data dirs
-            if (Files.exists(logDir(root))) {
-              val logs = Files.list(logDir(root))
-              try logs.iterator().asScala.foreach { m =>
-                val v = m.getFileName.toString.stripPrefix("v").stripSuffix(".json").toLongOption
-                if (v.exists(_ > committed)) Files.deleteIfExists(m)
-              } finally logs.close()
-            }
-            removed.result().sorted
-          } finally it.close()
+    val committed = currentVersion(root).getOrElse(0L)
+    val versionsDir = Paths.get(root, "_versions")
+    if (!Files.exists(versionsDir)) Seq.empty
+    else {
+      val it = Files.list(versionsDir)
+      try {
+        val orphans = it.iterator()
+        val removed = Seq.newBuilder[Long]
+        orphans.forEachRemaining { p =>
+          val name = p.getFileName.toString
+          if (name.contains(".staging.")) {
+            // staging left by a writer that died mid-build (a live
+            // writer's staging is protected by vacuum's exclusive-
+            // maintenance contract, same as the dirs above _current).
+            // The dir is always deleted, but its version number is
+            // only REPORTED as removed when that version is above
+            // the pointer: a loser's (or crashed claimant's)
+            // staging for an already-committed version is debris
+            // next to a live snapshot, and listing it would tell
+            // callers a committed version was removed.
+            deleteRecursively(p)
+            name.stripPrefix("v").takeWhile(_ != '.').toLongOption
+              .filter(_ > committed).foreach(removed += _)
+          } else if (name.startsWith("v")) {
+            val v = name.drop(1).toLongOption
+            if (v.exists(_ > committed)) { deleteRecursively(p); removed += v.get }
+          }
         }
+        // manifests orphaned by conflicted commits go with their data dirs
+        if (Files.exists(logDir(root))) {
+          val logs = Files.list(logDir(root))
+          try logs.iterator().asScala.foreach { m =>
+            val v = m.getFileName.toString.stripPrefix("v").stripSuffix(".json").toLongOption
+            if (v.exists(_ > committed)) Files.deleteIfExists(m)
+          } finally logs.close()
+        }
+        removed.result().sorted
+      } finally it.close()
     }
   }
 
@@ -1226,10 +1080,6 @@ object TxStore {
     } finally deleteRecursively(staging) // no-op after a winning rename
   }
 
-  /** Write one immutable snapshot through [[claimVersion]]. On a
-    * mid-write failure only this writer's staging is removed, so a
-    * retry of the same version can proceed.
-    */
   /** Recursively nulls out every nullability flag so [[commitAppend]]'s
     * drift check compares TYPES only (Spark's own
     * `DataType.equalsIgnoreNullability` is `private[sql]`).
@@ -1246,10 +1096,6 @@ object TxStore {
       case other => other
     }
   }
-
-  private def writeVersion(df: DataFrame, root: String, v: Long): Unit =
-    claimVersion(root, v)(dir =>
-      df.write.mode(SaveMode.ErrorIfExists).parquet(dir))
 
   /** Persist the streaming fence before the version it rides in is
     * superseded. A writer that crashed between a [[commitBatchAppend]]
@@ -1272,7 +1118,7 @@ object TxStore {
       .foreach(staged => writeFence(root, staged))
   }
 
-  /** Fence file I/O. Writes go through tmp + ATOMIC_MOVE — preserveFence
+  /** Fence file I/O. Writes go through [[writeAtomic]] — preserveFence
     * runs on EVERY commit, so a torn `_last_batch` would block every
     * commit type (upsert, delete, compaction), not just appends; the
     * pointer's torn-write discipline applies here for the same reason.
@@ -1288,24 +1134,30 @@ object TxStore {
     else scala.util.Try(Files.readString(f).trim.toLong).toOption
   }
 
-  private def writeFence(root: String, id: Long): Unit = {
-    val tmp = Paths.get(root, s"_last_batch.tmp.${java.util.UUID.randomUUID}")
-    Files.writeString(tmp, id.toString)
-    Files.move(tmp, Paths.get(root, "_last_batch"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  private def writeFence(root: String, id: Long): Unit =
+    writeAtomic(Paths.get(root, "_last_batch"), id.toString)
+
+  /** Atomic pointer flip. Unconditional replace is sound because only
+    * the process that won [[claimVersion]] for `next` ever flips to
+    * `next`, and claims are totally ordered by the base-version chain.
+    */
+  private def flipPointer(root: String, next: Long): Unit = {
+    preserveFence(root)
+    writeAtomic(currentFile(root), next.toString)
   }
 
-  /** Atomic pointer flip: write aside, ATOMIC_MOVE into place.
-    * Unconditional REPLACE is sound because only the process that won
-    * [[claimVersion]] for `next` ever flips to `next`, and claims are
-    * totally ordered by the expected-version chain.
+  /** Replace a small pointer or marker file whole: write a unique
+    * sibling, then one same-directory `ATOMIC_MOVE` onto `target`, so a
+    * crash leaves the old content or the new, never a torn file.
     */
-  private def flipPointer(root: String, expected: Option[Long], next: Long): Unit = {
-    preserveFence(root)
-    val tmp = Paths.get(root, s"_current.tmp.$next")
-    Files.writeString(tmp, next.toString)
-    Files.move(tmp, currentFile(root), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+  private[graft] def writeAtomic(target: Path, content: String): Unit = {
+    val tmp = target.resolveSibling(
+      s"${target.getFileName}.tmp.${java.util.UUID.randomUUID}")
+    try {
+      Files.writeString(tmp, content)
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
   }
 
   private def deleteRecursively(p: Path): Unit =

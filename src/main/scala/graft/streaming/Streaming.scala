@@ -466,7 +466,7 @@ object Streaming {
     else {
       if (!batch.isEmpty)
         graft.ops.VectorSearch.appendToIvfIndex(batch, idCol, vecCol, cents, path)
-      java.nio.file.Files.writeString(marker, batchId.toString)
+      graft.store.TxStore.writeAtomic(marker, batchId.toString)
       true
     }
   }
@@ -533,7 +533,7 @@ object Streaming {
     merged.write.mode("overwrite")
       .parquet(dir.resolve(s"v$batchId").toString)
     // readers follow the pointer; the flip is the one mutable byte-write
-    java.nio.file.Files.writeString(dir.resolve("_version"), batchId.toString)
+    graft.store.TxStore.writeAtomic(dir.resolve("_version"), batchId.toString)
   }
 
   private def currentSketches(spark: org.apache.spark.sql.SparkSession,
@@ -598,7 +598,7 @@ object Streaming {
     java.nio.file.Files.createDirectories(dir)
     merged.write.mode("overwrite")
       .parquet(dir.resolve(s"v$batchId").toString)
-    java.nio.file.Files.writeString(ptr, batchId.toString)
+    graft.store.TxStore.writeAtomic(ptr, batchId.toString)
   }
 
   /** Live rank statistics: per-key KLL quantile sketches maintained

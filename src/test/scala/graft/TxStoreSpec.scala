@@ -1117,4 +1117,98 @@ class TxStoreSpec extends SparkSuite {
       Seq((2L, "milho", 50.0)).toDF("k", "produto", "v"), batchId = 1L))
     assert(rows(root) == Set((1L, "soja", 100.0), (2L, "milho", 50.0)))
   }
+
+  test("a stale base conflicts before any work, on every commit entry point") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = freshRoot()
+    TxStore.init(Seq((1L, "soja", 100.0), (2L, "milho", 50.0)).toDF("k", "produto", "v"), root)
+    (3L to 4L).foreach(k => TxStore.commitUpsert(spark, root,
+      Seq((k, "trigo", 1.0)).toDF("k", "produto", "v"), Seq("k")))   // -> v3
+    assert(TxStore.expireVersions(root, keepLast = 1) == Seq(1L, 2L))
+    def listing(dir: String): Set[String] = {
+      val s = Files.list(Paths.get(root, dir))
+      try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
+    }
+    val (versions, logs) = (listing("_versions"), listing("_log"))
+    val upd = Seq((9L, "cafe", 9.0)).toDF("k", "produto", "v")
+    val stale = Some(1L) // expired by retention: its directory is gone
+    val entryPoints: Seq[(String, () => Long)] = Seq(
+      "commitUpsert" -> (() => TxStore.commitUpsert(spark, root, upd, Seq("k"), stale)),
+      "commitUpsertEvolve" -> (() =>
+        TxStore.commitUpsertEvolve(spark, root, upd, Seq("k"), stale)),
+      "commitUpsertPartitioned" -> (() =>
+        TxStore.commitUpsertPartitioned(spark, root, upd, Seq("k"), "produto", stale)),
+      "commitUpsertChecked" -> (() => TxStore.commitUpsertChecked(spark, root, upd,
+        Seq("k"), Map("positive" -> (col("v") > 0)), stale)),
+      "commitDelete" -> (() => TxStore.commitDelete(spark, root, col("k") === 1L, stale)),
+      "commitDeleteVectors" -> (() =>
+        TxStore.commitDeleteVectors(spark, root, col("k") === 1L, stale)),
+      "commitPurgeDeletes" -> (() => TxStore.commitPurgeDeletes(spark, root, stale)),
+      "commitRestore" -> (() => TxStore.commitRestore(spark, root, 3L, stale)),
+      "commitCompaction" -> (() => TxStore.commitCompaction(spark, root, 1, stale)),
+      "commitZorder" -> (() => TxStore.commitZorder(spark, root, "k", "v", 1, stale)),
+      "commitRepartition" -> (() =>
+        TxStore.commitRepartition(spark, root, "produto", stale)),
+      "commitReplace" -> (() =>
+        TxStore.commitReplace(spark, root, upd, expectedVersion = stale)),
+      "commitAppend" -> (() => TxStore.commitAppend(spark, root, upd, stale)))
+    entryPoints.foreach { case (name, call) =>
+      val e = intercept[Exception](call())
+      assert(e.isInstanceOf[TxStore.ConcurrentCommitException],
+        s"$name: expected a conflict, got $e")
+      assert(TxStore.currentVersion(root).contains(3L), s"$name moved the pointer")
+      assert(listing("_log") == logs, s"$name left a manifest")
+      assert(listing("_versions") == versions, s"$name left a version directory")
+    }
+  }
+
+  test("vacuum reclaims an orphaned v1 claim on a table with no pointer") {
+    import java.nio.file.{Files, Paths}
+    val root = freshRoot()
+    // a writer that died between claiming v1 and the first flip
+    val v1 = Paths.get(TxStore.versionDir(root, 1L))
+    Files.createDirectories(v1)
+    Files.writeString(v1.resolve("part-0.parquet"), "x")
+    assert(TxStore.currentVersion(root).isEmpty)
+    assert(TxStore.vacuum(root) == Seq(1L))
+    assert(!Files.exists(v1))
+    assert(TxStore.init(Seq((1L, "soja", 100.0)).toDF("k", "produto", "v"), root) == 1L)
+    assert(rows(root) == Set((1L, "soja", 100.0)))
+  }
+
+  test("initHidden with a rejected layout spec leaves no table behind") {
+    import graft.store.Layout
+    val root = freshRoot()
+    val df = Seq((1L, 2L, 3.0)).toDF("k", "a-b c", "v")
+    intercept[IllegalArgumentException] {
+      TxStore.initHidden(df, root, Layout.Bucket("a-b c", 4))
+    }
+    assert(TxStore.currentVersion(root).isEmpty, "rejected layout must not commit v1")
+    assert(TxStore.initHidden(df.withColumnRenamed("a-b c", "cust"), root,
+      Layout.Bucket("cust", 4)) == 1L)
+    assert(TxStore.readHiddenEq(spark, root, lit(2L)).count() == 1)
+  }
+
+  test("writeAtomic replaces the whole file and leaves no tmp sibling") {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft_atomic")
+    val f = dir.resolve("_pointer")
+    TxStore.writeAtomic(f, "12345")
+    TxStore.writeAtomic(f, "7")
+    assert(Files.readString(f) == "7")
+    val s = Files.list(dir)
+    val names = try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
+    assert(names == Set("_pointer"))
+  }
+
+  test("the commit protocol has one call site each of claim, manifest and flip") {
+    import java.nio.file.{Files, Paths}
+    val src = Files.readString(Paths.get("src/main/scala/graft/store/TxStore.scala"))
+    Seq("claimVersion", "writeManifest", "flipPointer").foreach { f =>
+      val calls = s"(?<!def )\\b$f\\(".r.findAllIn(src).size
+      assert(calls == 1, s"$f( has $calls call sites in TxStore.scala; route commits through commit()")
+    }
+  }
 }

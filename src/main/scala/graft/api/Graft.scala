@@ -282,10 +282,12 @@ object Graft {
       cents: Array[Seq[Float]], tau: Double): DataFrame =
     graft.ops.VectorSearch.semDedup(vectors, idCol, vecCol, cents, tau)
 
-  /** Bloom-pruned inner join — [[graft.ops.Bloom.prunedJoin]] (q58). */
+  /** Bloom-pruned inner join — [[graft.ops.Bloom.prunedJoin]] (q58),
+    * its filter sized for `nBuildRows` build keys.
+    */
   def bloomPrunedJoin(probe: DataFrame, build: DataFrame, probeKey: String,
       buildKey: String, nBuildRows: Long): DataFrame =
-    graft.ops.Bloom.prunedJoin(probe, build, probeKey, buildKey, nBuildRows)
+    graft.ops.Bloom.prunedJoin(probe, build, probeKey, buildKey, Some(nBuildRows))
 
   /** Bloom-gated decontamination — [[graft.ops.Curation.decontaminateBloom]]
     * (d16): [[decontaminate]]'s result when the benchmark gram set is

@@ -2,51 +2,21 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Production packaging of the function library: inject every custom
   * expression at session build via
   * `spark.sql.extensions=graft.functions.GraftExtensions` (or
   * `.withExtensions(new GraftExtensions)`), so SQL users get them
-  * without any imperative `register()` call. The same expressions as
-  * [[GraftFunctions.register]]; both paths stay available.
+  * without any imperative `register()` call. Both paths install
+  * [[GraftFunctions.catalogue]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, name)
-
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => CollapseIdempotentNormalization)
-    def one(name: String, f: Expression => Expression): Unit =
-      ext.injectFunction((FunctionIdentifier(name), info(name),
-        (exprs: Seq[Expression]) => f(exprs.head)))
-
-    one("strip_accents", StripAccents)
-    one("normalize_ws", NormalizeWs)
-    one("nfc_normalize", NfcNormalize)
-    one("title_case_pt", TitleCasePt)
-    one("parse_br_decimal", ParseBrDecimal)
-    one("safra_of", SafraOf)
-    one("normalize_safra", NormalizeSafra)
-    one("simhash64", SimHash64)
-    ext.injectFunction((FunctionIdentifier("convert_unit"), info("convert_unit"),
-      (e: Seq[Expression]) => ConvertUnit(e(0), e(1), e(2), e(3))))
-    ext.injectFunction((FunctionIdentifier("hash64"), info("hash64"),
-      (e: Seq[Expression]) => Hash64(e.head, 0L)))
-    ext.injectFunction((FunctionIdentifier("cosine_sim"), info("cosine_sim"),
-      (e: Seq[Expression]) => CosineSim(e(0), e(1))))
-    ext.injectFunction((FunctionIdentifier("minhash_sig"), info("minhash_sig"),
-      (e: Seq[Expression]) => MinHashSig(e.head, 3, 64, 42L)))
-    ext.injectFunction((FunctionIdentifier("winnow"), info("winnow"),
-      (e: Seq[Expression]) => Winnow(e.head, 8, 4)))
-    ext.injectFunction((FunctionIdentifier("hyperplane_lsh"), info("hyperplane_lsh"),
-      (e: Seq[Expression]) => HyperplaneLsh(e.head, 16, 42L)))
-    ext.injectFunction((FunctionIdentifier("mg_topk"), info("mg_topk"),
-      (e: Seq[Expression]) => MisraGriesTopK(e(0),
-        GraftFunctions.literalK(e(1), "mg_topk"))))
-    ext.injectFunction((FunctionIdentifier("kll_quantiles"), info("kll_quantiles"),
-      (e: Seq[Expression]) => KllQuantiles(e(0),
-        GraftFunctions.literalK(e(1), "kll_quantiles"), Seq(0.25, 0.5, 0.75))))
+    for ((name, f) <- GraftFunctions.catalogue)
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), f))
   }
 }

@@ -269,43 +269,47 @@ object GraftFunctions {
         false
       }
     }
-    def raw(name: String, f: Seq[Expression] => Expression): Unit =
-      if (absent(name)) {
-        reg.createOrReplaceTempFunction(name, f, "built-in")
-        wrote.add(name)
-      }
-    def one(name: String, f: Expression => Expression): Unit =
-      raw(name, exprs => f(exprs.head))
-    one("strip_accents", StripAccents)
-    one("normalize_ws", NormalizeWs)
-    one("nfc_normalize", NfcNormalize)
-    one("title_case_pt", TitleCasePt)
-    one("parse_br_decimal", ParseBrDecimal)
-    one("safra_of", SafraOf)
-    one("normalize_safra", NormalizeSafra)
-    one("simhash64", SimHash64)
-    one("gzip_ratio", GzipRatio)
-    one("media_dims", MediaDims)
-    raw("convert_unit",
-      exprs => ConvertUnit(exprs(0), exprs(1), exprs(2), exprs(3)))
-    raw("hash64", exprs => Hash64(exprs.head, 0L))
-    raw("cosine_sim", exprs => CosineSim(exprs(0), exprs(1)))
-    raw("minhash_sig", exprs => MinHashSig(exprs.head, 3, 64, 42L))
-    raw("winnow", exprs => Winnow(exprs.head, 8, 4))
-    raw("hyperplane_lsh", exprs => HyperplaneLsh(exprs.head, 16, 42L))
-    // aggregate: the analyzer wraps a bare AggregateFunction builder
-    raw("mg_topk",
-      exprs => MisraGriesTopK(exprs(0), literalK(exprs(1), "mg_topk")))
-    // SQL form pins the quartiles; arbitrary probs via the Scala API
-    raw("kll_quantiles",
-      exprs => KllQuantiles(exprs(0), literalK(exprs(1), "kll_quantiles"),
-        Seq(0.25, 0.5, 0.75)))
+    for ((name, f) <- catalogue if absent(name)) {
+      reg.createOrReplaceTempFunction(name, f, "built-in")
+      wrote.add(name)
+    }
     if (foreign.nonEmpty)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"graft SQL functions shadowed by pre-existing session functions " +
           s"(user registration wins; SQL calls will NOT use graft's " +
           s"implementation): ${foreign.mkString(", ")}")
     foreign.toSeq
+  }
+
+  /** Every graft SQL function as (name, builder over the call's
+    * arguments): the one list [[register]] and [[GraftExtensions]] both
+    * install.
+    */
+  val catalogue: Seq[(String, Seq[Expression] => Expression)] = {
+    def one(f: Expression => Expression): Seq[Expression] => Expression = e => f(e.head)
+    def args(f: Seq[Expression] => Expression) = f
+    Seq(
+      "strip_accents" -> one(StripAccents),
+      "normalize_ws" -> one(NormalizeWs),
+      "nfc_normalize" -> one(NfcNormalize),
+      "title_case_pt" -> one(TitleCasePt),
+      "parse_br_decimal" -> one(ParseBrDecimal),
+      "safra_of" -> one(SafraOf),
+      "normalize_safra" -> one(NormalizeSafra),
+      "simhash64" -> one(SimHash64),
+      "gzip_ratio" -> one(GzipRatio),
+      "media_dims" -> one(MediaDims),
+      "convert_unit" -> args(e => ConvertUnit(e(0), e(1), e(2), e(3))),
+      "hash64" -> one(Hash64(_, 0L)),
+      "cosine_sim" -> args(e => CosineSim(e(0), e(1))),
+      "minhash_sig" -> one(MinHashSig(_, 3, 64, 42L)),
+      "winnow" -> one(Winnow(_, 8, 4)),
+      "hyperplane_lsh" -> one(HyperplaneLsh(_, 16, 42L)),
+      // aggregate: the analyzer wraps a bare AggregateFunction builder
+      "mg_topk" -> args(e => MisraGriesTopK(e(0), literalK(e(1), "mg_topk"))),
+      // SQL form pins the quartiles; arbitrary probs via the Scala API
+      "kll_quantiles" -> args(e => KllQuantiles(e(0),
+        literalK(e(1), "kll_quantiles"), Seq(0.25, 0.5, 0.75))))
   }
 
   /** k arguments of SQL-registered sketch functions must be literal

@@ -1,69 +1,93 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
+import org.apache.spark.sql.types.{DataType, StringType}
 
-/** Broadcast Bloom-filter join reduction (the runtime-filter pattern
-  * Spark itself applies under `spark.sql.optimizer.runtimeFilter.*`,
-  * here as an explicit, deterministic operator — reference analogue:
-  * `agrobr` pre-filters fact slices by the key set of the dimension
-  * page it just fetched; at 100 TB the key SET doesn't broadcast but
-  * a bit table does).
+/** Bloom-filter join reduction on Spark's own `bloom_filter_agg` and
+  * `might_contain` (the expressions behind
+  * `spark.sql.optimizer.runtimeFilter.*`), placed explicitly.
   *
-  * Shape: the bloom is BUILT DISTRIBUTED — each build row contributes
-  * k bit positions, positions aggregate per 64-bit word with `bit_or`
-  * (map-side combinable), and only the finished words ever reach the
-  * driver (m/64 longs, size-guarded). The probe side then tests all k
-  * bits with native codegen'd expressions (element_at + shiftleft on a
-  * literal word array) BEFORE the shuffle join — false positives are
-  * possible and fine, because the exact join still runs afterwards;
-  * what the bloom buys is that ~(1-sel) of the probe rows never enter
-  * the exchange. No UDFs, no collect of data rows.
+  * [[gate]] is lazy: the filter is a scalar subquery over the build
+  * side, planned, run and reused by the optimizer with the query that
+  * consumes it, so building a gated frame runs no Spark job, collects
+  * nothing to the driver and pins no cache. Probe rows that fail the
+  * test are dropped before any exchange; false positives are possible
+  * and harmless because every caller runs the exact join after the
+  * gate.
+  *
+  * [[Filter]] is the separate JVM-side bloom an always-on sink grows
+  * incrementally ([[union]]) and probes per element
+  * ([[Filter.mightContainString]]).
   */
 object Bloom {
 
-  /** ~10 bits/row ≈ 1% false-positive rate at k = 5 hash functions. */
-  private val BitsPerRow = 10L
-
-  /** 2^24 bits = 2 MiB of words — the broadcast-literal budget. A build
-    * side too big for this bound is too big for a driver-held filter;
-    * at that size use Spark's own runtime filter (AQE) or a semi-join.
+  /** Spark's `bloom_filter_agg` over `xxhash64(key)`: one mergeable
+    * aggregate whose value is the serialized filter, null over an empty
+    * input. `expectedItems` sizes the filter; without it the filter
+    * takes Spark's `spark.sql.optimizer.runtime.bloomFilter.*` defaults.
     */
-  private val MaxBits = 1L << 24
+  def filterAgg(key: Column, expectedItems: Option[Long] = None): Column = {
+    val h = ColumnBridge.expression(xxhash64(key))
+    val agg = expectedItems.fold(new BloomFilterAggregate(h))(n =>
+      new BloomFilterAggregate(h, math.max(1L, n)))
+    ColumnBridge.column(agg.toAggregateExpression())
+  }
 
+  /** `might_contain(filter, xxhash64(key))`: false ⇒ `key` is definitely
+    * absent. `filter` is a [[filterAgg]] scalar subquery or its value as
+    * a literal; a null filter (empty build side) admits nothing.
+    */
+  def mightContain(filter: Column, key: Column): Column =
+    ColumnBridge.column(BloomFilterMightContain(
+      ColumnBridge.expression(filter), ColumnBridge.expression(xxhash64(key))))
+
+  /** `key`, of type `from`, as a value to hash against keys of type
+    * `to` — xxhash64 is type-sensitive. `try_cast`: a value the cast
+    * cannot carry equals no key of type `to`, and its null costs at
+    * most a false positive. A string against a non-string is rejected,
+    * because `=` compares that pair at the non-string type and no one
+    * hash serves both sides.
+    */
+  private[graft] def keyAs(key: Column, from: DataType, to: DataType): Column = {
+    require(from.isInstanceOf[StringType] == to.isInstanceOf[StringType],
+      s"bloom keys must both be strings or neither: $from against $to")
+    if (from == to) key else key.try_cast(to)
+  }
+
+  /** `probe` rows whose `probeKey` may occur in `build`'s `buildKey`,
+    * the probe key hashed at the build key's type ([[keyAs]]).
+    */
+  def gate(probe: DataFrame, probeKey: String, build: DataFrame,
+      buildKey: String, expectedItems: Option[Long] = None): DataFrame = {
+    def keyType(df: DataFrame, c: String): DataType = df.select(col(c)).schema.head.dataType
+    val filter = build.select(filterAgg(col(buildKey), expectedItems)).scalar()
+    probe.filter(mightContain(filter,
+      keyAs(col(probeKey), keyType(probe, probeKey), keyType(build, buildKey))))
+  }
+
+  /** Bloom-pruned inner equi-join: the [[gate]] over `buildDf`, then the
+    * exact join, so the result equals `probe.join(buildDf, keys)` with a
+    * fraction of the probe rows entering the join. `nBuildRows` sizes
+    * the filter.
+    */
+  def prunedJoin(probe: DataFrame, buildDf: DataFrame, probeKey: String,
+      buildKey: String, nBuildRows: Option[Long] = None): DataFrame =
+    gate(probe, probeKey, buildDf, buildKey, nBuildRows)
+      .join(buildDf, probe(probeKey) === buildDf(buildKey))
+
+  /** A JVM-side bit table: k probes per key (Catalyst xxhash64 chained
+    * from seed 42 over (key, i), then pmod mBits), bits packed in longs.
+    */
   final case class Filter(words: Array[Long], mBits: Long, k: Int) {
-    /** Membership test column: true ⇒ key MAY be in the build set,
-      * false ⇒ key is DEFINITELY absent. Pure native expressions, so
-      * the whole test inlines into the probe scan's codegen stage.
-      */
-    def mightContain(key: Column): Column = {
-      // one shared Literal for the word table — k bit tests reference
-      // the same converted array instead of converting it k times
-      val bits = typedlit(words.toSeq)
-      (0 until k).map { i =>
-        val pos = pmod(xxhash64(key, lit(i)), lit(mBits))
-        val word = element_at(bits, (pos / 64).cast("int") + 1)
-        word.bitwiseAND(call_function("shiftleft", lit(1L),
-          pmod(pos, lit(64L)).cast("int"))) =!= 0
-      }.reduce(_ && _)
-    }
 
-    /** JVM-side twin of [[mightContain]] for STRING keys — bit-for-bit
-      * the same k probes (Catalyst xxhash64 chaining from seed 42 over
-      * (key, i), then pmod), pinned equal by BloomSpec. Exists because
-      * the Column form is only fast where codegen reaches it: embedded
-      * in an interpreted higher-order-function lambda (testing each
-      * element of an array column), the word-table literal measured
-      * ~1.4 ms PER ELEMENT — the literal's value participates in
-      * per-eval expression machinery — versus sub-µs here, so per-gram
-      * row paths close over the filter and call this instead.
-      */
     /** Fraction of set bits. The classic estimates follow: FP rate ≈
       * fill^k, and the distinct-key count that produced the fill is
-      * n ≈ -(m/k)·ln(1-fill) — both used by the saturation-regeneration
-      * path (a long-lived incrementally-maintained bloom cannot keep a
-      * frozen geometry forever; see
-      * [[graft.streaming.Streaming.curationSink]]).
+      * n ≈ -(m/k)·ln(1-fill); the curation sink's saturation check
+      * ([[graft.streaming.Streaming.curationSink]]) reads both.
       */
     def fillFraction: Double = {
       var ones = 0L
@@ -82,9 +106,13 @@ object Bloom {
       if (fillFraction >= 1.0) Long.MaxValue
       else math.max(1L, math.round(-(mBits.toDouble / k) * math.log1p(-fillFraction)))
 
+    /** Membership test for a STRING key in plain JVM code, for per-
+      * element paths (a UDF over an array of grams) where an expression
+      * would be interpreted once per element. No false negatives.
+      */
     def mightContainString(key: String): Boolean = {
       import org.apache.spark.sql.catalyst.expressions.XxHash64Function
-      import org.apache.spark.sql.types.{IntegerType, StringType}
+      import org.apache.spark.sql.types.IntegerType
       val u = org.apache.spark.unsafe.types.UTF8String.fromString(key)
       var i = 0
       while (i < k) {
@@ -99,23 +127,12 @@ object Bloom {
     }
   }
 
-  /** Builds the bloom over the distinct values of `keyCol`. `nRows` is
-    * the (approximate) build cardinality used to size the table — a
-    * stats estimate is fine; undersizing only raises the FP rate,
-    * never correctness.
-    */
-  def build(build: DataFrame, keyCol: String, nRows: Long, k: Int = 5): Filter = {
-    val mBits = math.min(MaxBits,
-      math.max(64L, java.lang.Long.highestOneBit(nRows * BitsPerRow) * 2))
-    union(empty(mBits, k), build, keyCol)
-  }
-
   /** An all-zero filter of fixed geometry — the starting point for an
     * INCREMENTALLY-maintained bloom whose key space grows over time
     * (size for the ceiling, not the current cardinality: the geometry
     * is frozen at creation because bit positions depend on mBits).
     */
-  def empty(mBits: Long = MaxBits, k: Int = 5): Filter =
+  def empty(mBits: Long, k: Int = 5): Filter =
     Filter(new Array[Long]((mBits / 64).toInt), mBits, k)
 
   /** Predicted FP rate of a k-hash bloom of `mBits` holding `n` keys:
@@ -126,12 +143,10 @@ object Bloom {
     math.pow(1.0 - math.exp(-k.toDouble * n / mBits), k)
 
   /** Hard ceiling for REGENERATED geometries: 2^27 bits = 16 MiB of
-    * word table. 8× [[MaxBits]] gives a long-lived incrementally-grown
-    * filter real headroom (≈18M keys at 1% FP vs MaxBits' ≈2.3M), but
-    * stays a sane per-batch closure payload and bounds [[union]]'s
-    * driver collect to 2M longs. Past this, one filter is the wrong
-    * tool — shard by key range so each shard keeps a broadcastable
-    * table.
+    * word table, ≈18M keys at 1% FP. It bounds the per-batch closure
+    * payload and [[union]]'s driver collect to 2M longs. Past this, one
+    * filter is the wrong tool — shard by key range so each shard keeps
+    * a broadcastable table.
     */
   val RegenMaxBits: Long = 1L << 27
 
@@ -159,8 +174,7 @@ object Bloom {
     * order-free and replay-safe: re-adding an already-absorbed batch
     * is a no-op, which is what lets an always-on sink maintain its
     * bloom without batch-id bookkeeping. One distributed aggregate;
-    * ≤ m/64 rows reach the driver — bounded by MaxBits/64 = 256 Ki
-    * longs regardless of build size.
+    * at most m/64 rows reach the driver, whatever the build size.
     */
   def union(f: Filter, build: DataFrame, keyCol: String): Filter = {
     val hashCols = (0 until f.k).map(i =>
@@ -174,17 +188,5 @@ object Bloom {
       .collect()
       .foreach(r => words(r.getInt(0)) |= r.getLong(1))
     Filter(words, f.mBits, f.k)
-  }
-
-  /** Bloom-pruned inner equi-join: probe rows failing the membership
-    * test are dropped at the scan; survivors (true hits + ≈1% FPs) go
-    * through the ordinary exact join, so the result is identical to
-    * `probe.join(buildDf, keys)` with a fraction of the shuffle.
-    */
-  def prunedJoin(probe: DataFrame, buildDf: DataFrame, probeKey: String,
-      buildKey: String, nBuildRows: Long): DataFrame = {
-    val f = build(buildDf, buildKey, nBuildRows)
-    probe.filter(f.mightContain(col(probeKey)))
-      .join(buildDf, probe(probeKey) === buildDf(buildKey))
   }
 }

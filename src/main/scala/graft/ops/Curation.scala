@@ -79,30 +79,22 @@ object Curation {
         min(col("bench_doc")).as("first_bench_hit"))
   }
 
-  /** [[decontaminate]]'s 100 TB regime: when the benchmark gram SET is
-    * too large to broadcast as a hash relation (a full eval-suite
-    * 13-gram inventory is GBs of strings), gate the corpus gram stream
-    * through a [[graft.ops.Bloom]] bit table first — 10 bits/gram
-    * instead of the gram bytes, still one broadcast — and run the
-    * exact gram join only over the ≈1% of survivors (true hits + FPs).
-    * The exact join then removes every false positive, so the result
-    * EQUALS [[decontaminate]] by construction: d16 runs under d11's
-    * oracle verbatim.
+  /** [[decontaminate]] for a benchmark gram set too large to broadcast
+    * as a hash relation: the corpus gram stream passes a lazy
+    * [[graft.ops.Bloom.gate]] over the benchmark grams first, and the
+    * exact gram join runs only over the survivors (true hits plus false
+    * positives), which it then filters exactly. The result equals
+    * [[decontaminate]]'s: d16 runs under d11's oracle. The filter is
+    * built over the ungrouped benchmark gram stream (bit-setting is
+    * idempotent, so duplicate grams cost nothing and its partial
+    * aggregates follow the benchmark scan's partitions).
     */
   def decontaminateBloom(corpus: DataFrame, bench: DataFrame,
       idCol: String, textCol: String, n: Int = 8): DataFrame = {
-    // cacheOnce: THREE consumers read the bench gram table — the
-    // sizing count below, the bloom bit aggregation, and the exact
-    // join's broadcast build — and each would otherwise re-run the
-    // full tokenize + n-gram explode + groupBy over the bench docs
-    // (`graft.Bench profile` showed three identical 32-task gram stages per run).
-    // The count() that sizes the bloom doubles as the materialization
-    // barrier. Bounded frame: distinct bench grams only.
-    val benchGrams = cacheOnce(wordGramPositions(bench, idCol, textCol, n)
-      .groupBy(col("g")).agg(min(col(idCol)).as("bench_doc")))
-    val f = Bloom.build(benchGrams, "g", nRows = benchGrams.count())
-    wordGramPositions(corpus, idCol, textCol, n)
-      .filter(f.mightContain(col("g")))
+    val benchGramStream = wordGramPositions(bench, idCol, textCol, n)
+    val benchGrams = benchGramStream
+      .groupBy(col("g")).agg(min(col(idCol)).as("bench_doc"))
+    Bloom.gate(wordGramPositions(corpus, idCol, textCol, n), "g", benchGramStream, "g")
       .join(broadcast(benchGrams), Seq("g"))
       .groupBy(col(idCol))
       .agg(countDistinct(col("g")).as("n_shared_grams"),

@@ -281,15 +281,12 @@ object Dedup {
     *    excerpts, an eval set): probe shingles broadcast, corpus
     *    shingles stream map-side through the hash join, only
     *    co-occurring (probe, doc) pairs reach the count shuffle;
-    *  - `bloomGate = true` (the 100 TB regime, when the probe set
-    *    outgrows the broadcast threshold): the probe shingle SET rides
-    *    as a 10-bits-per-shingle [[Bloom]] bit table — m/64 longs, one
-    *    broadcast, never the shingle hashes themselves — corpus
-    *    shingles failing the bit test never enter the exchange, and
-    *    the exact shuffle join over the ≈1% survivors removes every
-    *    false positive. The result provably EQUALS the broadcast path
-    *    (d18 runs under d14's oracle verbatim; BloomSemDedupSpec
-    *    asserts path equality directly).
+    *  - `bloomGate = true` (the probe set outgrows the broadcast
+    *    threshold): corpus shingles pass a lazy [[Bloom.gate]] over the
+    *    probe shingles, and the exact shuffle join over the survivors
+    *    removes every false positive. The result equals the broadcast
+    *    path (d18 runs under d14's oracle; BloomSemDedupSpec asserts
+    *    path equality).
     * Exact either way — every shared shingle counts, so the oracle
     * brute-force matches (d14).
     */
@@ -306,20 +303,8 @@ object Dedup {
       .select(col("id_small"), size(col("sh")).as("n_small"),
         explode(col("sh")).as("h"))
     val hits =
-      if (bloomGate) {
-        // the bloom literal must exist before the probe plan is built, so
-        // ONE eager pass over the probe shingles is inherent to a
-        // driver-held filter — but only one: pFlat is cached (count, bloom
-        // build, and the exact join all read it), the sizing cardinality
-        // is a single mergeable HLL agg (no distinct shuffle — a Bloom
-        // doc says an estimate is fine), and the build skips dedup
-        // entirely because bit_or bit-setting is idempotent over
-        // duplicate keys
-        val pf = cacheOnce(pFlat)
-        val nKeys = pf.agg(approx_count_distinct(col("h"))).head().getLong(0)
-        c.filter(Bloom.build(pf, "h", nRows = nKeys).mightContain(col("h")))
-          .join(pf, Seq("h"))
-      } else c.join(broadcast(pFlat), Seq("h"))
+      if (bloomGate) Bloom.gate(c, "h", pFlat, "h").join(pFlat, Seq("h"))
+      else c.join(broadcast(pFlat), Seq("h"))
     hits
       .filter(col("id_big") =!= col("id_small"))
       .groupBy(col("id_small"), col("id_big"), col("n_small"))

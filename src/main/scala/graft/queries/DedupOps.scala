@@ -462,11 +462,11 @@ object DedupOps {
 
   /** d11 at the 100 TB operating point
     * ([[graft.ops.Curation.decontaminateBloom]]): the benchmark gram
-    * set rides as a 10-bits-per-gram Bloom bit table instead of a
-    * broadcast hash relation of gram strings; corpus grams that fail
-    * the bit test never reach the exact join, and the exact join then
-    * removes the ≈1% false positives — so the result provably equals
-    * d11's, and this query runs under d11's ORACLE verbatim. The pair
+    * set rides as a Spark bloom filter instead of a broadcast hash
+    * relation of gram strings; corpus grams the filter rejects never
+    * reach the exact join, and the exact join then removes the false
+    * positives — so the result equals d11's, and this query runs under
+    * d11's ORACLE verbatim. The pair
     * (d11, d16) is the broadcast-vs-bloom switchover a real
     * decontamination deployment makes as the eval suite grows.
     */
@@ -630,10 +630,10 @@ object DedupOps {
   /** d14 at the 100 TB operating point
     * ([[graft.ops.Dedup.containmentJoin]] with `bloomGate = true`):
     * when the probe set outgrows the broadcast threshold, its shingle
-    * set rides as a 10-bits-per-shingle Bloom bit table instead of a
-    * broadcast hash relation; corpus shingles that fail the bit test
-    * never enter the exchange, and the exact shuffle join removes the
-    * ≈1% false positives — so the result provably equals d14's, and
+    * set rides as a Spark bloom filter instead of a broadcast hash
+    * relation; corpus shingles the filter rejects never enter the
+    * exchange, and the exact shuffle join removes the false
+    * positives — so the result equals d14's, and
     * this query runs under d14's ORACLE verbatim. The pair (d14, d18)
     * is the broadcast-vs-bloom switchover a real excerpt-detection
     * deployment makes as the probe batch grows — d16's stance, applied

@@ -68,16 +68,13 @@ object SkewOps {
         CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total
       FROM events GROUP BY 1 ORDER BY 1"""))
 
-  /** Bloom-pruned fact join ([[graft.ops.Bloom]]): the filtered orders
-    * slice builds a distributed bit table (per-word `bit_or`, only
-    * m/64 words ever reach the driver), the lineitem scan tests k bits
-    * with codegen'd native expressions and drops ~(1−sel) of its rows
-    * BEFORE the exchange, and the ordinary exact join then removes the
-    * ≈1% false positives — so the bloom is semantically invisible and
-    * the oracle is the plain join. This is Spark's own
-    * `runtimeFilter.bloomFilter` pattern made explicit and
-    * deterministic; at 100 TB it is the difference between shuffling
-    * the whole fact table and shuffling the ~5% that can match.
+  /** Bloom-pruned fact join ([[graft.ops.Bloom.prunedJoin]]): the
+    * lineitem scan passes a lazy bloom gate over the filtered orders
+    * slice and drops most non-matching rows before the exchange; the
+    * exact join then removes the false positives, so the oracle is the
+    * plain join. Spark's runtime-filter pattern, placed explicitly: at
+    * scale it is the difference between shuffling the whole fact table
+    * and shuffling the slice that can match.
     */
   val q58 = Q("q58_bloom_pruned_join",
     (s, dir) => {
@@ -85,11 +82,8 @@ object SkewOps {
         .filter(col("o_orderpriority") === "1-URGENT" &&
           year(col("o_orderdate")) === 1995)
         .select(col("o_orderkey"), col("o_orderdate"))
-      // build-side cardinality for sizing only: a stats estimate works
-      // too — undersizing raises the FP rate, never breaks correctness
-      val n = dim.count()
       graft.ops.Bloom.prunedJoin(load(s, dir, "lineitem"), dim,
-          "l_orderkey", "o_orderkey", nBuildRows = n)
+          "l_orderkey", "o_orderkey")
         .groupBy(month(col("o_orderdate")).cast("long").as("mes"))
         .agg(count(lit(1)).as("n_items"),
           dsum(col("l_extendedprice")).as("revenue"))

@@ -169,8 +169,8 @@ object Skipping {
   private val BloomFileK = 5
 
   /** Build (or rebuild) the per-file Bloom sidecar for point lookups on
-    * `c`. Probe keys must be literals of `c`'s exact type — xxhash64 is
-    * type-sensitive ([[ops.Bloom]]'s contract).
+    * `c`. Probes hash their key at `c`'s type, read from the data schema
+    * ([[graft.ops.Bloom.keyAs]]).
     */
   def writeBloomStats(spark: SparkSession, dir: String, c: String): Unit = {
     val positions = array((0 until BloomFileK).map(i =>
@@ -189,8 +189,17 @@ object Skipping {
       .write.mode(SaveMode.Overwrite).parquet(bloomPath(dir))
   }
 
-  /** Files whose Bloom admits `key`, plus the total file count. */
-  def pruneFilesByBloom(spark: SparkSession, dir: String,
+  /** Files whose Bloom admits `c` = `key`, plus the total file count. */
+  def pruneFilesByBloom(spark: SparkSession, dir: String, c: String,
+      key: Column): (Seq[String], Long) =
+    bloomKept(spark, dir, typedKey(spark.read.parquet(dir), c, key))
+
+  /** `key` at the type of `data`'s column `c`. */
+  private def typedKey(data: DataFrame, c: String, key: Column): Column =
+    graft.ops.Bloom.keyAs(key, data.select(key).schema.head.dataType,
+      data.select(col(c)).schema.head.dataType)
+
+  private def bloomKept(spark: SparkSession, dir: String,
       key: Column): (Seq[String], Long) = {
     val blooms = readSidecar(spark, bloomPath(dir))
     val total = blooms.count()
@@ -209,12 +218,14 @@ object Skipping {
   /** Point read with Bloom file skipping: scan only files that might
     * contain `c` = key, then apply the exact predicate. Identical
     * result to a full scan + filter, I/O ∝ files that (probably)
-    * contain the key.
+    * contain the key. The kept files are read with the directory's
+    * schema, so the schema is inferred once.
     */
   def readPoint(spark: SparkSession, dir: String, c: String,
       key: Column): DataFrame = {
-    val (kept, _) = pruneFilesByBloom(spark, dir, key)
-    if (kept.isEmpty) spark.read.parquet(dir).filter(lit(false))
-    else spark.read.parquet(kept: _*).filter(col(c) === key)
+    val data = spark.read.parquet(dir)
+    val (kept, _) = bloomKept(spark, dir, typedKey(data, c, key))
+    if (kept.isEmpty) data.filter(lit(false))
+    else spark.read.schema(data.schema).parquet(kept: _*).filter(col(c) === key)
   }
 }

@@ -779,8 +779,7 @@ object TxStore {
   }
 
   /** Point read over the committed snapshot with Bloom file skipping —
-    * requires [[writeBloomStats]] for that version; key literal must
-    * match `c`'s type exactly (xxhash64 is type-sensitive).
+    * requires [[writeBloomStats]] for that version ([[Skipping.readPoint]]).
     */
   def readPoint(spark: SparkSession, root: String, c: String,
       key: org.apache.spark.sql.Column): DataFrame = {
@@ -1128,11 +1127,13 @@ object TxStore {
     * still fences replays ([[lastBatchId]] takes the max of both), and
     * [[preserveFence]] re-materializes the file on the next commit.
     */
-  private def readFence(root: String): Option[Long] = {
-    val f = Paths.get(root, "_last_batch")
+  private def readFence(root: String): Option[Long] =
+    readMarker(Paths.get(root, "_last_batch"))
+
+  /** A batch-id marker file's value; missing or unparseable is absent. */
+  private[graft] def readMarker(f: Path): Option[Long] =
     if (!Files.exists(f)) None
     else scala.util.Try(Files.readString(f).trim.toLong).toOption
-  }
 
   private def writeFence(root: String, id: Long): Unit =
     writeAtomic(Paths.get(root, "_last_batch"), id.toString)
@@ -1146,19 +1147,23 @@ object TxStore {
     writeAtomic(currentFile(root), next.toString)
   }
 
-  /** Replace a small pointer or marker file whole: write a unique
-    * sibling, then one same-directory `ATOMIC_MOVE` onto `target`, so a
-    * crash leaves the old content or the new, never a torn file.
+  /** Replace a small pointer, marker or sidecar file whole: write a
+    * unique sibling, then one same-directory `ATOMIC_MOVE` onto
+    * `target`, so a crash leaves the old content or the new, never a
+    * torn file, and concurrent writers never share a tmp file.
     */
-  private[graft] def writeAtomic(target: Path, content: String): Unit = {
+  private[graft] def writeAtomic(target: Path, content: Array[Byte]): Unit = {
     val tmp = target.resolveSibling(
       s"${target.getFileName}.tmp.${java.util.UUID.randomUUID}")
     try {
-      Files.writeString(tmp, content)
+      Files.write(tmp, content)
       Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
         StandardCopyOption.REPLACE_EXISTING)
     } finally Files.deleteIfExists(tmp)
   }
+
+  private[graft] def writeAtomic(target: Path, content: String): Unit =
+    writeAtomic(target, content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   private def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {

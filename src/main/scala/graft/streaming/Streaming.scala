@@ -144,21 +144,17 @@ object Streaming {
     else df
   }
 
-  /** Atomic persist of the maintained gram bloom (tmp + ATOMIC_MOVE,
-    * the same torn-write discipline as the TxStore pointer).
+  /** Atomic persist of the maintained gram bloom
+    * ([[graft.store.TxStore.writeAtomic]]).
     */
   private[graft] def saveGramBloom(path: String,
       f: graft.ops.Bloom.Filter): Unit = {
-    val tmp = java.nio.file.Paths.get(path + ".tmp")
-    val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-      java.nio.file.Files.newOutputStream(tmp)))
-    try {
-      out.writeLong(f.mBits); out.writeInt(f.k); out.writeInt(f.words.length)
-      f.words.foreach(out.writeLong)
-    } finally out.close()
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(path),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    val bytes = new java.io.ByteArrayOutputStream(16 + 8 * f.words.length)
+    val out = new java.io.DataOutputStream(bytes)
+    out.writeLong(f.mBits); out.writeInt(f.k); out.writeInt(f.words.length)
+    f.words.foreach(out.writeLong)
+    out.flush()
+    graft.store.TxStore.writeAtomic(java.nio.file.Paths.get(path), bytes.toByteArray)
   }
 
   private[graft] def loadGramBloom(path: String): Option[graft.ops.Bloom.Filter] = {
@@ -189,9 +185,9 @@ object Streaming {
       textCol: org.apache.spark.sql.Column, k: Int, tau: Double)
       : org.apache.spark.sql.Column = {
     // shingling stays native/codegen; only the per-gram bit test rides
-    // in a deterministic Scala UDF closing over the word table —
-    // measured 9.4 s → 0.35 s per 50-doc gate versus the Column form
-    // inside an interpreted HOF lambda (see mightContainString's doc).
+    // in a deterministic Scala UDF closing over the word table — an
+    // expression inside an interpreted HOF lambda is evaluated per
+    // element (measured 9.4 s against 0.35 s per 50-doc gate).
     // Closure cost is one 2 MiB task-binary per batch job.
     val f = bloom
     val gate = udf { grams: Seq[String] =>
@@ -372,13 +368,13 @@ object Streaming {
     * benchmark leakage): every microbatch's documents are gated
     * against a STATIC held-out benchmark before admission — a doc
     * sharing any verbatim n-gram with the benchmark never enters the
-    * corpus. The benchmark side is prepared ONCE at sink creation: its
-    * distinct grams and a [[graft.ops.Bloom]] bit table over them; per
-    * batch, only grams passing the k-bit test (≈1% of a clean batch)
-    * reach the exact gram join that removes bloom false positives —
-    * d16's shape, run forever. Admissions are TxStore commits with the
-    * batch-id high-water mark, so replays are dropped and readers see
-    * a versioned, time-travelable clean corpus.
+    * corpus. The benchmark filter is built ONCE at sink creation: one
+    * [[graft.ops.Bloom.filterAgg]] evaluated with `head()`, then probed
+    * per batch as a literal, so only the grams it admits (true hits
+    * and false positives) reach the exact gram join that removes the
+    * false positives — d16's shape, run forever. Admissions are
+    * TxStore commits with the batch-id high-water mark, so replays are
+    * dropped and readers see a versioned, time-travelable clean corpus.
     */
   def decontaminationSink(docs: DataFrame, bench: DataFrame, root: String,
       n: Int, checkpoint: String, rowsPerFile: Int = 100000)
@@ -386,15 +382,14 @@ object Streaming {
     val benchGrams = graft.ops.Curation
       .wordGramPositions(bench, "doc_id", "text", n)
       .select(col("g")).distinct()
-    val bloom = graft.ops.Bloom.build(benchGrams, "g",
-      nRows = benchGrams.count())
+    val filter = lit(benchGrams.select(graft.ops.Bloom.filterAgg(col("g"))).head().get(0))
     val commit: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, id) => {
         val b = batch.toDF()
         if (!b.isEmpty) {
           val flagged = graft.ops.Curation
             .wordGramPositions(b, "doc_id", "text", n)
-            .filter(bloom.mightContain(col("g")))
+            .filter(graft.ops.Bloom.mightContain(filter, col("g")))
             .join(broadcast(benchGrams), Seq("g"))
             .select(col("doc_id")).distinct()
           // admitted docs are new doc_ids by construction (the stream's
@@ -458,10 +453,7 @@ object Streaming {
       idCol: String, vecCol: String, cents: Array[Seq[Float]],
       path: String): Boolean = {
     val marker = java.nio.file.Paths.get(path + "_last_batch")
-    val last =
-      if (java.nio.file.Files.exists(marker))
-        java.nio.file.Files.readString(marker).trim.toLong
-      else -1L
+    val last = graft.store.TxStore.readMarker(marker).getOrElse(-1L)
     if (batchId <= last) false
     else {
       if (!batch.isEmpty)

@@ -16,12 +16,11 @@ class BloomSemDedupSpec extends SparkSuite {
 
   test("bloom filter: no false negatives, bounded false positives, real pruning") {
     val build = (0L until 500L).map(i => i * 7L).toDF("k")
-    val f = Bloom.build(build, "k", nRows = 500)
-    // every member answers true — bloom filters cannot false-negative
-    assert(build.filter(!f.mightContain($"k")).count() === 0)
-    // non-members: ~1% FP budget, asserted loosely at 5%
+    // every member passes — bloom filters cannot false-negative
+    assert(Bloom.gate(build, "k", build, "k").count() === 500)
+    // non-members: the sized filter targets 3% FP, asserted loosely at 5%
     val nonMembers = (0L until 2000L).map(i => i * 7L + 3L).toDF("k")
-    val fps = nonMembers.filter(f.mightContain($"k")).count()
+    val fps = Bloom.gate(nonMembers, "k", build, "k", Some(500L)).count()
     assert(fps <= 100, s"false-positive rate too high: $fps/2000")
   }
 
@@ -32,20 +31,97 @@ class BloomSemDedupSpec extends SparkSuite {
       .filter(year($"o_orderdate") === 1995)
       .select($"o_orderkey", $"o_orderdate")
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
-    val n = orders.count()
-    val pruned = Bloom.prunedJoin(li, orders, "l_orderkey", "o_orderkey", n)
+    val pruned = Bloom.prunedJoin(li, orders, "l_orderkey", "o_orderkey")
       .select($"l_orderkey", $"l_linenumber", $"o_orderdate")
     val plain = li.join(orders, li("l_orderkey") === orders("o_orderkey"))
       .select($"l_orderkey", $"l_linenumber", $"o_orderdate")
     assert(pruned.exceptAll(plain).isEmpty && plain.exceptAll(pruned).isEmpty)
-    // the bloom must drop most non-matching probe rows before the join
-    val f = Bloom.build(orders, "o_orderkey", n)
-    val kept = li.filter(f.mightContain($"l_orderkey")).count()
+    // the gate must drop most non-matching probe rows before the join,
+    // in the default form and sized for the build side
     val total = li.count()
     val trueMatches = plain.count()
-    assert(kept < total, "bloom pruned nothing")
-    assert(kept <= trueMatches + (total - trueMatches) / 10,
-      s"bloom kept $kept of $total (true matches $trueMatches) — FP rate way past design")
+    for (n <- Seq(None, Some(orders.count()))) {
+      val kept = Bloom.gate(li, "l_orderkey", orders, "o_orderkey", n).count()
+      assert(kept < total, "bloom pruned nothing")
+      assert(kept <= trueMatches + (total - trueMatches) / 10,
+        s"bloom kept $kept of $total (true matches $trueMatches) — FP rate way past design")
+    }
+  }
+
+  test("bloomPrunedJoin hashes the probe key at the build key's type") {
+    // int probe keys against bigint build keys: the plain join widens
+    // the int side, so the gate must hash both at one type or it drops
+    // every true match
+    val build = (0L until 100L by 10L).map(i => (i, s"b$i")).toDF("bk", "tag")
+    val intProbe = (0 until 100).map(i => (i, s"p$i")).toDF("k", "payload")
+    def same(probe: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame,
+        bk: String): Unit = {
+      val plain = probe.join(b, probe("k") === b(bk)).select($"k".cast("long"), $"tag")
+        .as[(Long, String)].collect().toSet
+      val pruned = graft.api.Graft.bloomPrunedJoin(probe, b, "k", bk, nBuildRows = 10)
+        .select($"k".cast("long"), $"tag").as[(Long, String)].collect().toSet
+      assert(plain.size == 10 && pruned == plain)
+    }
+    same(intProbe, build, "bk")
+    // bigint probe keys against int build keys, one past the int range:
+    // the narrowing cast must not fail the query (ANSI) or drop a match
+    val longProbe = ((0L until 100L) :+ (1L << 32)).map(i => (i, s"p$i")).toDF("k", "payload")
+    same(longProbe, build.select($"bk".cast("int").as("ik"), $"tag"), "ik")
+    // `=` compares a string with a number as the number: no one hash
+    // type serves both sides, so the gate refuses the pair
+    intercept[IllegalArgumentException](graft.api.Graft.bloomPrunedJoin(
+      intProbe.select($"payload".as("k")), build, "k", "bk", nBuildRows = 10))
+  }
+
+  test("building d16, d18 and q58 runs no Spark query; running them pins no cache and aggregates once") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.CacheAccess
+    val sc = spark.sparkContext
+    // (job group, stage names) of every job started by a query execution
+    // — every action on a frame. Reading a parquet table also runs a
+    // schema-inference job at build time; it belongs to no query.
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        if (prop("spark.sql.execution.id").isDefined)
+          jobs.add((prop("spark.jobGroup.id").getOrElse(""), e.stageInfos.map(_.name).mkString(";")))
+      }
+    }
+    // query jobs started in group `g` while `body` ran; a sentinel query
+    // in another group marks the point every earlier event has arrived
+    def queryJobsIn[T](g: String)(body: => T): (T, Seq[String]) = {
+      jobs.clear()
+      sc.setJobGroup(g, "")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$g-sentinel", "")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      def seen = jobs.toArray(Array.empty[(String, String)]).toSeq
+      val deadline = System.nanoTime() + 10000000000L
+      while (!seen.exists(_._1 == s"$g-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.exists(_._1 == s"$g-sentinel"), "listener never saw the sentinel job")
+      (out, seen.collect { case (`g`, stages) => stages })
+    }
+    def stored = (CacheAccess.cachedPlans(spark), sc.getPersistentRDDs.size)
+    sc.addSparkListener(listener)
+    try {
+      for (name <- Seq("d16_bloom_decontaminate", "d18_containment_bloom",
+          "q58_bloom_pruned_join")) {
+        val before = stored
+        val (df, ran) = queryJobsIn(s"build-$name")(
+          graft.queries.QueryRegistry.byName(name).fn(spark, sf))
+        assert(ran.isEmpty, s"$name ran Spark jobs while its frame was built: $ran")
+        assert(df.collect().nonEmpty, s"$name returned no rows")
+        assert(stored == before, s"$name left cached data behind")
+        // the optimizer copies the gate onto the exact join's build side;
+        // subquery reuse still runs the filter's aggregate once
+        val filters = planNodes(df).flatMap(_.expressions).flatMap(_.collect {
+          case s: org.apache.spark.sql.execution.ScalarSubquery => s.plan })
+        assert(filters.count(!_.isInstanceOf[org.apache.spark.sql.execution.ReusedSubqueryExec]) == 1,
+          s"$name ran its bloom aggregate more than once: $filters")
+      }
+    } finally sc.removeSparkListener(listener)
   }
 
   test("containment join: bloom-gated path == broadcast path on planted excerpts") {
@@ -67,23 +143,21 @@ class BloomSemDedupSpec extends SparkSuite {
       "bloom-gated containment must equal the broadcast path exactly")
     assert(viaBroadcast.nonEmpty, "planting produced no containment hits")
     // the gate is structural: the corpus shingle stream passes the
-    // bit-test filter (element_at + shiftleft over the word table)
-    // BEFORE any join — probe shingles never ride a forced broadcast.
-    // (AQE may still choose a broadcast for a small probe side at test
-    // scale; at production scale its size stats pick the shuffle join —
-    // that adaptivity is the point of the bloom regime.)
+    // might_contain filter BEFORE any join — probe shingles never ride
+    // a forced broadcast. (AQE may still choose a broadcast for a small
+    // probe side at test scale; at production scale its size stats pick
+    // the shuffle join — that adaptivity is the point of the bloom regime.)
     val gated = Dedup.containmentJoin(docs, probes, $"doc_id", $"text",
       k = 3, tau = 0.8, bloomGate = true)
-    val hasBitTest = planNodes(gated).exists {
+    val hasGate = planNodes(gated).exists {
       case f: org.apache.spark.sql.execution.FilterExec =>
         f.condition.exists {
-          case _: org.apache.spark.sql.catalyst.expressions.ShiftLeft => true
+          case _: org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain => true
           case _ => false
         }
       case _ => false
     }
-    assert(hasBitTest,
-      "expected a Filter carrying the bloom bit-test (ShiftLeft over the word table) in the bloom-gated plan")
+    assert(hasGate, "expected a Filter carrying might_contain in the bloom-gated plan")
   }
 
   test("semDedup at C>1: planted exact duplicates always drop; pruning only ADDS survivors") {

@@ -96,12 +96,11 @@ class EdgeCasesSpec extends SparkSuite {
     import graft.ops.{Bloom, Curation, VectorSearch => V}
     val emptyDocs = spark.emptyDataset[(Long, String)].toDF("doc_id", "text")
     val docs = Seq((1L, "alpha beta"), (2L, "")).toDF("doc_id", "text")
-    // bloom over an EMPTY build side: no bit set, every probe row
-    // definitively absent, pruned join == plain join == empty
-    val f = Bloom.build(emptyDocs.select($"doc_id".as("k")), "k", nRows = 0)
-    assert(docs.filter(f.mightContain($"doc_id")).count() == 0)
+    // bloom over an EMPTY build side: the filter is null, every probe
+    // row is pruned, pruned join == plain join == empty
+    assert(Bloom.gate(docs, "doc_id", emptyDocs.select($"doc_id".as("k")), "k").count() == 0)
     assert(Bloom.prunedJoin(docs, emptyDocs.select($"doc_id".as("k"), $"text".as("t")),
-      "doc_id", "k", nBuildRows = 0).count() == 0)
+      "doc_id", "k", nBuildRows = Some(0L)).count() == 0)
     // bloom-gated decontamination with an empty benchmark flags nothing
     assert(Curation.decontaminateBloom(docs, emptyDocs, "doc_id", "text").count() == 0)
     // semDedup on a single vector and on an empty frame

@@ -10,10 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ExtensionsSpec extends AnyFunSuite {
 
-  test("extensions inject SQL functions at session build") {
-    // force a FRESH SparkSession (same SparkContext) so resolution must
-    // come from the injected extensions, not any temp registration on
-    // the shared test session
+  /** Runs `f` on a FRESH session (same SparkContext) built only with
+    * [[graft.functions.GraftExtensions]], so resolution must come from
+    * the injected extensions, not any temp registration on the shared
+    * test session.
+    */
+  private def withExtensionSession[T](f: SparkSession => T): T = {
     SparkSuite.session // ensure the context exists
     val prevDefault = SparkSession.getDefaultSession
     val prevActive = SparkSession.getActiveSession
@@ -30,6 +32,15 @@ class ExtensionsSpec extends AnyFunSuite {
         .config("spark.ui.enabled", "false")
         .getOrCreate()
       assert(s ne SparkSuite.session, "must be a fresh session")
+      f(s)
+    } finally {
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  test("extensions inject SQL functions at session build") {
+    withExtensionSession { s =>
       val r = s.sql(
         """SELECT parse_br_decimal('9,75') AS d, strip_accents('Paraná') AS p,
                   safra_of(DATE '2023-12-01') AS sf""").collect()(0)
@@ -48,10 +59,19 @@ class ExtensionsSpec extends AnyFunSuite {
       assert("strip_accents".r.findAllIn(optimized).size == 1,
         s"expected one strip_accents after optimization:\n$optimized")
       assert(doubled.count() == nation.count())
-    } finally {
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
     }
+  }
+
+  test("every catalogue function resolves in a session built only with the extensions") {
+    val names = graft.functions.GraftFunctions.catalogue.map(_._1)
+    val missing = withExtensionSession(s => names.filterNot(n =>
+      s.sessionState.functionRegistry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(n))))
+    assert(missing.isEmpty, s"catalogue names the extensions never inject: $missing")
+    val r = withExtensionSession(_.sql(
+      "SELECT gzip_ratio('aaaaaaaaaaaaaaaa') > 0 AS g, media_dims(X'0000') AS m")
+      .collect()(0))
+    assert(r.getBoolean(0) && r.isNullAt(1))
   }
 
   test("contract castTo: declared order, try_cast, typed null fill") {

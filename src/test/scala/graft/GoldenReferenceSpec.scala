@@ -203,7 +203,7 @@ class GoldenReferenceSpec extends SparkSuite {
 
   test("usda/psd_soja_sample: rename + canonical sort + pivot-first") {
     val base = s"$goldenDir/usda"
-    val caseDir = new java.io.File(base).listFiles()
+    val caseDir = Option(new java.io.File(base).listFiles()).toSeq.flatten
       .find(f => f.isDirectory && available(s"${f.getPath}/response.json"))
     assume(caseDir.isDefined)
     val raw = spark.read.option("multiLine", "true")
@@ -235,7 +235,7 @@ class GoldenReferenceSpec extends SparkSuite {
 
   test("nasa_power/daily_sample: nested param->date dicts unpivoted relationally") {
     val base = s"$goldenDir/nasa_power"
-    val caseDir = new java.io.File(base).listFiles()
+    val caseDir = Option(new java.io.File(base).listFiles()).toSeq.flatten
       .find(f => f.isDirectory && available(s"${f.getPath}/response.json"))
     assume(caseDir.isDefined)
     val raw = spark.read.option("multiLine", "true")

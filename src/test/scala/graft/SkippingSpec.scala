@@ -59,7 +59,7 @@ class SkippingSpec extends SparkSuite {
     assert(totalR == 8 && rangeKept.size == 8,
       s"layout should defeat min/max: kept ${rangeKept.size}")
     // bloom: at most a couple of FP files survive alongside the true one
-    val (bloomKept, totalB) = Skipping.pruneFilesByBloom(spark, dir, lit(1234L))
+    val (bloomKept, totalB) = Skipping.pruneFilesByBloom(spark, dir, "x", lit(1234L))
     assert(totalB == 8 && bloomKept.nonEmpty && bloomKept.size <= 2,
       s"bloom should prune to ~1 file: kept ${bloomKept.size}")
     // result identity, present and absent keys
@@ -68,5 +68,21 @@ class SkippingSpec extends SparkSuite {
       .as[(Long, Long, Long)].collect().toSet
     assert(hit == Set((1234L, 1234L % 97L, 3702L)))
     assert(Skipping.readPoint(spark, dir, "x", lit(999999L)).count() == 0)
+  }
+
+  test("bloom tier: an int key literal finds its row in a bigint column") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bloomtype")
+      .resolve("t").toString
+    (0L until 100L).map(i => (i, s"v$i")).toDF("id", "v")
+      .repartition(4).write.parquet(dir)
+    Skipping.writeBloomStats(spark, dir, "id")
+    val want = spark.read.parquet(dir).filter(col("id") === lit(5))
+      .as[(Long, String)].collect().toSeq
+    assert(want == Seq((5L, "v5")))
+    // xxhash64 of int 5 differs from bigint 5: the key is hashed at the
+    // column's type, or every file's bloom rejects it
+    assert(Skipping.readPoint(spark, dir, "id", lit(5))
+      .as[(Long, String)].collect().toSeq == want)
+    assert(Skipping.pruneFilesByBloom(spark, dir, "id", lit(5))._1.nonEmpty)
   }
 }

@@ -486,4 +486,38 @@ class StreamingRestartSpec extends SparkSuite {
     assert(docs() == Set(1L, 3L),
       "terminal corpus must equal an uninterrupted run's")
   }
+
+  test("ivf index sink: a damaged batch marker reads as absent, so the batch is appended") {
+    import graft.ops.{VectorSearch => V}
+    val live = tmp("graft_rst_ivfbad") + "/index"
+    val cents: Array[Seq[Float]] = Array(Seq(1f, 0f), Seq(0f, 1f))
+    V.buildIvfIndex(Seq((1L, Seq(0.9f, 0.1f))).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", cents, live)
+    val marker = Paths.get(live + "_last_batch")
+    Files.writeString(marker, "7\u0000garbage")
+    // at-least-once: an unreadable fence admits the batch rather than
+    // failing every later one
+    assert(Streaming.ivfAppendBatch(Seq((2L, Seq(0.1f, 0.9f))).toDF("vec_id", "embedding"),
+      0L, "vec_id", "embedding", cents, live))
+    assert(spark.read.parquet(live).count() == 2L)
+    assert(Files.readString(marker) == "0")
+  }
+
+  test("curation gram bloom: concurrent saves to one path never share a tmp file") {
+    val dir = Paths.get(tmp("graft_rst_blsave"))
+    val path = dir.resolve("grams.bloom").toString
+    val filters = (1 to 4).map(i =>
+      graft.ops.Bloom.Filter(Array.fill(1 << 14)(i.toLong), 1L << 20, 5))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(filters.size)
+    try {
+      filters.map(f => pool.submit(new java.util.concurrent.Callable[Unit] {
+        def call(): Unit = (1 to 25).foreach(_ => Streaming.saveGramBloom(path, f))
+      })).foreach(_.get())
+    } finally pool.shutdown()
+    // the survivor is one writer's whole filter, and no tmp file is left
+    val loaded = Streaming.loadGramBloom(path).get
+    assert(filters.exists(f => f.words.sameElements(loaded.words)))
+    assert(Files.list(dir).iterator.asScala.map(_.getFileName.toString).toSeq
+      == Seq("grams.bloom"))
+  }
 }

@@ -183,10 +183,10 @@ object StoreOps {
 
   /** File-level data skipping ([[graft.store.Skipping]]): orders laid
     * out range-partitioned on o_orderkey (8 files, narrow per-file key
-    * ranges), min/max sidecar on the committed version, then a range
-    * read that scans only intersecting files. The oracle is the plain
-    * full-scan filter — skipping must be invisible in the result; the
-    * actual file-prune rate is asserted in TxStoreSpec.
+    * ranges), then a range read that scans only the files whose footer
+    * min/max intersects the range. The oracle is the plain full-scan
+    * filter — skipping must be invisible in the result; the actual
+    * file-prune rate is asserted in TxStoreSpec.
     */
   private[graft] def s06Build(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val root = java.nio.file.Files.createTempDirectory("graft_skip")
@@ -245,21 +245,21 @@ object StoreOps {
       FROM orders GROUP BY 1 ORDER BY 1"""))
 
   /** Z-order-clustered data skipping
-    * ([[graft.store.Skipping.writeZOrdered]]): orders laid out by the
-    * Morton code of (o_custkey, o_orderkey), min/max sidecar over BOTH
-    * columns, then a range read on the customer key — the layout where
-    * single-column sorting would leave the second column unprunable.
+    * ([[graft.store.Skipping.zOrdered]]): orders laid out by the
+    * Morton code of (o_custkey, o_orderkey), so every file's footer
+    * min/max is narrow in BOTH columns, then a range read on the
+    * customer key — the layout where single-column sorting would leave
+    * the second column unprunable.
     * Oracle is the plain full-scan filter; the both-dimension prune
     * rates are asserted in SkippingSpec.
     */
   private[graft] def s08Build(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val path = java.nio.file.Files.createTempDirectory("graft_zorder")
       .resolve("orders").toString
-    graft.store.Skipping.writeZOrdered(
+    graft.store.Skipping.zOrdered(
       load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
-      path, "o_custkey", "o_orderkey", numFiles = 16)
-    graft.store.Skipping.writeStats(s, path, Seq("o_custkey", "o_orderkey"))
+      "o_custkey", "o_orderkey", numFiles = 16).write.parquet(path)
     path
   }
 
@@ -438,8 +438,9 @@ object StoreOps {
     val base = load(s, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       .repartition(8, col("o_custkey"))
-    graft.store.TxStore.init(base, root)
+    // declared before init, so v1's own files carry the blooms
     graft.store.TxStore.writeBloomStats(s, root, "o_orderkey")
+    graft.store.TxStore.init(base, root)
     root
   }
 
@@ -455,14 +456,13 @@ object StoreOps {
       .orderBy(col("o_orderkey"))
   }
 
-  /** Bloom-sidecar point lookups ([[graft.store.Skipping
-    * .writeBloomStats]]/[[graft.store.Skipping.readPoint]] — the THIRD
-    * pruning tier, Delta's bloom-filter-index idea on plain parquet):
-    * the table is hash-laid-out on o_custkey, so every file's
-    * o_orderkey interval spans the keyspace and min/max skipping is
-    * useless — the per-file Bloom still routes each point lookup to
-    * the one file holding the key (plus rare FPs the exact filter
-    * empties). Oracle is the plain IN-list scan; the prune rate and
+  /** Bloom point lookups ([[graft.store.TxStore.writeBloomStats]]/
+    * [[graft.store.Skipping.readPoint]] — the THIRD pruning tier, on the
+    * native parquet blooms each commit writes into its own files): the
+    * table is hash-laid-out on o_custkey, so every file's o_orderkey
+    * interval spans the keyspace and min/max skipping is useless — the
+    * row groups' blooms still route each point lookup to the one file
+    * holding the key (plus rare FPs the exact filter empties). Oracle is the plain IN-list scan; the prune rate and
     * the min/max-prunes-nothing contrast are SkippingSpec territory.
     */
   val s13 = Q("s13_bloom_point_skipping",

@@ -81,7 +81,7 @@ object Layout {
     * would corrupt it silently. Rejected at write time — identifier
     * characters only, which every real column name satisfies.
     */
-  private def requireSafeCol(col: String): Unit =
+  private[store] def requireSafeCol(col: String): Unit =
     require(col.nonEmpty && col.forall(ch =>
       ch.isLetterOrDigit || ch == '_' || ch == '.' || ch == '-'),
       s"layout column name must be [A-Za-z0-9_.-]+ (got: '$col')")

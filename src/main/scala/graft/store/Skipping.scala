@@ -2,81 +2,59 @@ package graft.store
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Alias
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** File-level min/max data skipping — the second pruning tier of the
-  * fact store. Directory partitioning ([[Store.writePartitioned]],
-  * [[TxStore.initPartitioned]]) prunes on the partition key; the stats
-  * sidecar built here prunes on any OTHER clustered column (a sorted or
-  * range-partitioned layout makes per-file ranges narrow), the idea
-  * behind Delta/Iceberg file statistics and parquet row-group min/max,
-  * lifted to the file level where a planner can drop whole files from
-  * the scan list before any I/O.
+/** File skipping from the parquet files themselves — the second and
+  * third pruning tiers of the fact store, after directory partitioning
+  * ([[Store.writePartitioned]], [[TxStore.initPartitioned]]):
   *
-  * The sidecar is one parquet table `(file, min_<c>, max_<c>, ...)`
-  * computed in a single aggregate scan grouped by `_metadata.file_name`
-  * and stored UNDER the data directory as `_stats` — the underscore
-  * prefix keeps every normal table read blind to it. Stats rows are
-  * metadata-scale (one per file), so collecting the pruned file list to
-  * the driver is bounded by design.
+  *  - '''min/max''': every parquet footer carries per-row-group min/max,
+  *    so a range on a clustered column (sorted, range-partitioned or
+  *    [[zOrdered]]) drops files whose intervals miss it;
+  *  - '''bloom''': a point lookup on a column the layout was not
+  *    clustered by probes the native parquet bloom of each row group,
+  *    written by the parquet writer itself when [[bloomOptions]] are
+  *    set (every [[TxStore]] commit sets them for its declared columns).
   *
-  * Sidecars are keyed by file NAME, not absolute path (same contract
-  * as [[TxStore]]'s deletion vectors, and unpartitioned-layout-only
-  * for the same reason): names survive the commit machinery that
-  * moves or re-links whole directories — staging-claim renames,
-  * RESTORE/clone hard-link carry-forward — where a recorded absolute
-  * path would dangle. Readers resolve names against the directory
-  * being read.
+  * Pruning reads footers (and blooms) on the driver with plain JVM IO —
+  * no sidecar, no Spark job — and keeps every file it cannot rule out:
+  * a chunk with no statistics or no bloom, a column the footer lacks, a
+  * key that does not fold to a literal of the column's type. The exact
+  * predicate then runs over the kept files, so results equal a full scan
+  * plus filter.
   */
 object Skipping {
 
-  private def statsPath(dir: String) = s"$dir/_stats"
-
-  /** The parquet part-files of a sidecar directory, listed explicitly.
-    * Sidecar dirs are underscore-prefixed so DATA reads stay blind to
-    * them — but handing such a path straight to `spark.read` makes the
-    * source's hidden-path filter log a `All paths were ignored` WARN
-    * for every read (it still reads correctly). Passing the leaf files
-    * avoids the warning and skips one driver-side glob.
+  /** Parquet writer options that give each row group a native bloom
+    * per column in `cols`. Adaptive sizing picks the smallest of five
+    * power-of-two sizes up to 1 MiB that holds the group's distinct
+    * values at a 5% false-positive rate: a false positive costs one
+    * extra file read, while a 1% bloom (~1.2 B/key) grows a table of
+    * narrow compressed rows (~5.5 B/row on the store benchmark) by over
+    * a fifth.
     */
-  private[store] def sidecarFiles(dir: String): Seq[String] = {
-    val p = java.nio.file.Paths.get(dir)
-    // fail CLOSED with a pointer to the fix: a version with no sidecar
-    // (e.g. one minted by TxStore.commitAppend, which deliberately does
-    // not carry the base's now-stale sidecars forward) must never be
-    // answered from another version's stats — rebuild for this version
-    if (!java.nio.file.Files.isDirectory(p))
-      throw new IllegalStateException(
-        s"no skipping sidecar at $dir — rebuild it for THIS version " +
-          "(TxStore.writeStats/writeBloomStats) before skipping reads")
-    val s = java.nio.file.Files.list(p)
-    try s.iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .map(_.toString).toSeq
-    finally s.close()
+  def bloomOptions(cols: Seq[String]): Map[String, String] = {
+    import org.apache.parquet.hadoop.ParquetOutputFormat._
+    cols.flatMap(c => Seq(s"$BLOOM_FILTER_ENABLED#$c" -> "true", s"$BLOOM_FILTER_FPP#$c" -> "0.05",
+      ADAPTIVE_BLOOM_FILTER_ENABLED -> "true")).toMap
   }
-
-  private def readSidecar(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(sidecarFiles(dir): _*)
-
-  /** Resolve a sidecar `file` entry against the directory being read.
-    * Current sidecars store bare file NAMES (see class doc); sidecars
-    * written before that format change stored absolute URIs
-    * (`file:///...` from `_metadata.file_path`). An absolute URI run
-    * through the name-keyed prepend would produce a nonexistent
-    * `$dir/file:/...` path and fail the read with no hint of the format
-    * mismatch — so legacy rows (any value carrying a URI scheme) are
-    * used verbatim instead. Rebuilding the sidecar upgrades it.
-    */
-  private def resolveFile(dir: String, stored: String): String =
-    if (stored.contains(":/")) stored else s"$dir/$stored"
 
   /** Morton (Z-order) interleave of the low `bits` of two non-negative
     * integer columns — the multi-dimensional clustering key behind
     * Delta's OPTIMIZE ZORDER: range-partitioning + sorting on the
     * z-value keeps every file's range NARROW IN BOTH columns at once,
-    * so the min/max sidecar prunes on either predicate column, where
+    * so min/max pruning works on either predicate column, where
     * single-column sorting only ever prunes on one. Plain shift/mask
     * arithmetic — stays in whole-stage codegen.
     */
@@ -87,51 +65,29 @@ object Skipping {
       abit.bitwiseOR(bbit)
     }.reduce(_ bitwiseOR _)
 
-  /** Z-order-clustered write: range-partition and sort by the Morton
-    * code of the two clustering columns, so [[writeStats]] stats over
-    * BOTH columns become selective. `numFiles` bounds the layout like
-    * a compaction target.
+  /** `df` range-partitioned into `numFiles` and sorted by the Morton
+    * code of two clustering columns, so each written file's min/max is
+    * narrow in BOTH columns.
     */
-  def writeZOrdered(df: DataFrame, path: String, colA: String, colB: String,
-      numFiles: Int, bits: Int = 24): Unit = {
+  def zOrdered(df: DataFrame, colA: String, colB: String, numFiles: Int,
+      bits: Int = 24): DataFrame = {
     val z = zValue(col(colA), col(colB), bits)
-    df.withColumn("__z", z)
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode(SaveMode.Overwrite).parquet(path)
-  }
-
-  /** Build (or rebuild) the min/max sidecar for `cols` over every
-    * parquet file in `dir`. One scan; at real scale this folds into the
-    * writer (collect stats while writing, as table formats do) — the
-    * separate pass keeps plain-parquet tables retrofittable.
-    */
-  def writeStats(spark: SparkSession, dir: String, cols: Seq[String]): Unit = {
-    val aggs = cols.flatMap(c =>
-      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    spark.read.parquet(dir)
-      .groupBy(col("_metadata.file_name").as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .coalesce(1) // one row per data file — metadata-scale
-      .write.mode(SaveMode.Overwrite).parquet(statsPath(dir))
+    df.repartitionByRange(numFiles, z).sortWithinPartitions(z)
   }
 
   /** Files whose [min,max] interval for `c` intersects [lo, hi], plus
-    * the total file count (for skip-rate reporting). Files with a null
-    * min/max (all-null column chunk) are kept — pruning must never be
-    * lossy.
+    * the total file count (for skip-rate reporting).
     */
   def pruneFiles(spark: SparkSession, dir: String, c: String,
-      lo: Column, hi: Column): (Seq[String], Long) = {
-    val stats = readSidecar(spark, statsPath(dir))
-    val total = stats.count()
-    val kept = stats.filter(
-        col(s"max_$c").isNull || col(s"min_$c").isNull ||
-        (col(s"max_$c") >= lo && col(s"min_$c") <= hi))
-      .select(col("file")).collect().map(r => resolveFile(dir, r.getString(0))).toSeq
-    (kept, total)
-  }
+      lo: Column, hi: Column): (Seq[String], Long) =
+    survey(spark, dir, c, lo, hi, bloom = false).files
+
+  /** Files with a row group whose min/max and bloom both admit
+    * `c` = `key`, plus the total file count.
+    */
+  def pruneFilesByBloom(spark: SparkSession, dir: String, c: String,
+      key: Column): (Seq[String], Long) =
+    survey(spark, dir, c, key, key, bloom = true).files
 
   /** Range read with file skipping: scan only the files that can
     * contain `c` ∈ [lo, hi], then apply the exact predicate (which
@@ -139,93 +95,113 @@ object Skipping {
     * groups). Result is identical to a full scan + filter.
     */
   def readRange(spark: SparkSession, dir: String, c: String,
-      lo: Column, hi: Column): DataFrame = {
-    val (kept, _) = pruneFiles(spark, dir, c, lo, hi)
-    val pred = col(c) >= lo && col(c) <= hi
-    if (kept.isEmpty) spark.read.parquet(dir).filter(lit(false))
-    else spark.read.parquet(kept: _*).filter(pred)
-  }
+      lo: Column, hi: Column): DataFrame =
+    survey(spark, dir, c, lo, hi, bloom = false).read(spark, dir, col(c) >= lo && col(c) <= hi)
 
-  // ---- third pruning tier: per-file BLOOM sidecars (point lookups) ----
-  //
-  // min/max intervals prune RANGES on clustered columns; they are
-  // useless for point lookups on a column the layout was not sorted by
-  // (every file's interval spans the key). A small Bloom filter per
-  // file answers "could this key be in this file?" for ANY layout —
-  // Delta's bloom-filter-index idea on plain parquet. Build is one
-  // distributed aggregate (k bit positions per row, bit_or per 64-bit
-  // word, sparse words as a map — files only pay for bits they set);
-  // the probe evaluates the k-bit test over the metadata-scale sidecar
-  // and reads surviving files only. No false negatives by
-  // construction, so pruning is never lossy; false positives only cost
-  // an extra file read that the exact filter then empties.
-
-  private def bloomPath(dir: String) = s"$dir/_blooms"
-
-  /** 2^16 bits = 8 KiB/file: ~1% FP at 5 hashes up to ~6.5k distinct
-    * keys per file; undersizing only raises FP rate, never correctness.
+  /** Point read with bloom file skipping: scan only files that might
+    * contain `c` = key, then apply the exact predicate. Identical result
+    * to a full scan + filter, I/O ∝ files that (probably) hold the key.
     */
-  private val BloomFileBits = 1L << 16
-  private val BloomFileK = 5
+  def readPoint(spark: SparkSession, dir: String, c: String, key: Column): DataFrame =
+    survey(spark, dir, c, key, key, bloom = true).read(spark, dir, col(c) === key)
 
-  /** Build (or rebuild) the per-file Bloom sidecar for point lookups on
-    * `c`. Probes hash their key at `c`'s type, read from the data schema
-    * ([[graft.ops.Bloom.keyAs]]).
+  /** The columns of `dir`'s table, partition columns included. */
+  private[store] def columns(spark: SparkSession, dir: String): Seq[String] =
+    survey(spark, dir, "", lit(0), lit(0), bloom = false).read(spark, dir, lit(true)).columns.toSeq
+
+  /** The outcome of one footer pass: the kept files, the file count and
+    * the table schema of the first footer (None: not written by Spark).
     */
-  def writeBloomStats(spark: SparkSession, dir: String, c: String): Unit = {
-    val positions = array((0 until BloomFileK).map(i =>
-      pmod(xxhash64(col(c), lit(i)), lit(BloomFileBits))): _*)
-    spark.read.parquet(dir)
-      .select(col("_metadata.file_name").as("file"), explode(positions).as("pos"))
-      .select(col("file"), shiftright(col("pos"), 6).cast("int").as("idx"),
-        call_function("shiftleft", lit(1L),
-          col("pos").bitwiseAND(lit(63L)).cast("int")).as("bit"))
-      .groupBy(col("file"), col("idx")).agg(bit_or(col("bit")).as("word"))
-      .groupBy(col("file"))
-      .agg(map_from_entries(collect_list(struct(col("idx"), col("word"))))
-        .as("words"))
-      .withColumn("mbits", lit(BloomFileBits))
-      .coalesce(1) // one row per data file — metadata-scale
-      .write.mode(SaveMode.Overwrite).parquet(bloomPath(dir))
+  private final case class Survey(kept: Seq[String], total: Long,
+      schema: Option[StructType]) {
+
+    def files: (Seq[String], Long) = (kept, total)
+
+    /** The kept files filtered by `pred`, read as `dir`'s table:
+      * `basePath` keeps partition columns, and the footer schema spares
+      * a schema-inference job. With nothing kept the whole directory is
+      * read under a false filter, so the schema stays intact.
+      */
+    def read(spark: SparkSession, dir: String, pred: Column): DataFrame = {
+      val r = spark.read.option("basePath", dir)
+      schema.fold(r)(r.schema).parquet((if (kept.isEmpty) Seq(dir) else kept): _*)
+        .filter(if (kept.isEmpty) lit(false) else pred)
+    }
   }
 
-  /** Files whose Bloom admits `c` = `key`, plus the total file count. */
-  def pruneFilesByBloom(spark: SparkSession, dir: String, c: String,
-      key: Column): (Seq[String], Long) =
-    bloomKept(spark, dir, typedKey(spark.read.parquet(dir), c, key))
-
-  /** `key` at the type of `data`'s column `c`. */
-  private def typedKey(data: DataFrame, c: String, key: Column): Column =
-    graft.ops.Bloom.keyAs(key, data.select(key).schema.head.dataType,
-      data.select(col(c)).schema.head.dataType)
-
-  private def bloomKept(spark: SparkSession, dir: String,
-      key: Column): (Seq[String], Long) = {
-    val blooms = readSidecar(spark, bloomPath(dir))
-    val total = blooms.count()
-    val test = (0 until BloomFileK).map { i =>
-      val pos = pmod(xxhash64(key, lit(i)), col("mbits"))
-      val word = coalesce(
-        element_at(col("words"), shiftright(pos, 6).cast("int")), lit(0L))
-      word.bitwiseAND(call_function("shiftleft", lit(1L),
-        pos.bitwiseAND(lit(63L)).cast("int"))) =!= lit(0L)
-    }.reduce(_ && _)
-    val kept = blooms.filter(test)
-      .select(col("file")).collect().map(r => resolveFile(dir, r.getString(0))).toSeq
-    (kept, total)
-  }
-
-  /** Point read with Bloom file skipping: scan only files that might
-    * contain `c` = key, then apply the exact predicate. Identical
-    * result to a full scan + filter, I/O ∝ files that (probably)
-    * contain the key. The kept files are read with the directory's
-    * schema, so the schema is inferred once.
+  /** Read every data file's footer under `dir` on the driver and keep
+    * the files with a row group whose chunk of `c` has min/max admitting
+    * [lo, hi] and, with `bloom`, a bloom admitting `lo`. Keys are folded
+    * to the chunk's physical values; a group with no chunk of `c`, a
+    * chunk with no bloom and a file whose keys do not fold are kept.
+    * The read options are built once: `open` without them spends ~12 ms
+    * per file copying `conf`.
     */
-  def readPoint(spark: SparkSession, dir: String, c: String,
-      key: Column): DataFrame = {
-    val data = spark.read.parquet(dir)
-    val (kept, _) = bloomKept(spark, dir, typedKey(data, c, key))
-    if (kept.isEmpty) data.filter(lit(false))
-    else spark.read.schema(data.schema).parquet(kept: _*).filter(col(c) === key)
+  private def survey(spark: SparkSession, dir: String, c: String, lo: Column, hi: Column,
+      bloom: Boolean): Survey = {
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = new HPath(dir).getFileSystem(conf)
+    def dataFiles(p: HPath): Seq[FileStatus] = fs.listStatus(p).toSeq.filterNot { s =>
+      val n = s.getPath.getName // what Spark's reader ignores, partition dirs aside
+      n.startsWith(".") || (n.startsWith("_") && !n.contains('='))
+    }.sortBy(_.getPath.getName).flatMap(s => if (s.isDirectory) dataFiles(s.getPath) else Seq(s))
+    val opts = HadoopReadOptions.builder(conf).build()
+    val folded = collection.mutable.HashMap.empty[(DataType, Any), Seq[Option[Any]]]
+    val seen = dataFiles(new HPath(dir)).map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf), opts)
+      try {
+        val schema = sparkSchema(reader)
+        val keys = for {
+          field <- schema.flatMap(_.find(_.name == c))
+          t <- reader.getFileMetaData.getSchema.getFields.asScala
+            .find(f => f.getName == c && f.isPrimitive).map(_.asPrimitiveType.getPrimitiveTypeName)
+          k = folded.getOrElseUpdate((field.dataType, t), fold(spark, Seq(lo, hi), field.dataType, t))
+          if k.forall(_.isDefined)
+        } yield k.flatten
+        val keep = keys.forall { case Seq(l, h) => reader.getRowGroups.asScala.exists(g =>
+          g.getColumns.asScala.find(_.getPath.toDotString == c).forall(chunk => inRange(chunk, l, h) &&
+            (!bloom || Option(reader.readBloomFilter(chunk)).forall(b => b.findHash(b.hash(l)))))) }
+        (f.getPath.toString, keep, schema)
+      } finally reader.close()
+    }
+    Survey(seen.collect { case (p, true, _) => p }, seen.size.toLong, seen.headOption.flatMap(_._3))
   }
+
+  /** The chunk's min/max admits a value in [lo, hi]; a chunk with no
+    * statistics admits anything.
+    */
+  private def inRange(chunk: ColumnChunkMetaData, lo: Any, hi: Any): Boolean = {
+    val s = chunk.getStatistics
+    val cmp = s.comparator().asInstanceOf[java.util.Comparator[Any]]
+    !s.hasNonNullValue || (cmp.compare(s.genericGetMax, lo) >= 0 && cmp.compare(s.genericGetMin, hi) <= 0)
+  }
+
+  /** `keys` at type `to` ([[graft.ops.Bloom.keyAs]]), analyzed and
+    * evaluated on the driver, as the values a parquet column of physical
+    * type `t` stores. None for a key that is not a foldable expression
+    * of a castable type (or is null), and for types whose stored value
+    * or ordering may differ from Spark's (dates and timestamps can be
+    * calendar-rebased, floats have -0.0/NaN, decimals vary in encoding).
+    */
+  private def fold(spark: SparkSession, keys: Seq[Column], to: DataType, t: Any): Seq[Option[Any]] =
+    scala.util.Try {
+      def analyzed(cs: Seq[Column]) =
+        spark.range(1).select(cs.zipWithIndex.map { case (c, i) => c.as(s"k$i") }: _*)
+          .queryExecution.analyzed.expressions.map(_.asInstanceOf[Alias].child)
+      val es = analyzed(keys)
+      val typed = if (es.forall(_.dataType == to)) es
+        else analyzed(keys.zip(es).map { case (k, e) => graft.ops.Bloom.keyAs(k, e.dataType, to) })
+      typed.map(e => (t, if (e.foldable) e.eval() else null, to) match {
+        case (INT32, n: Number, IntegerType | ShortType | ByteType) => Some(n.intValue)
+        case (INT64, n: Number, LongType) => Some(n.longValue)
+        case (BINARY, s: UTF8String, StringType) => Some(Binary.fromConstantByteArray(s.getBytes))
+        case _ => None
+      })
+    }.getOrElse(keys.map(_ => None))
+
+  /** The Spark schema Spark's writer recorded in the footer. */
+  private def sparkSchema(reader: ParquetFileReader): Option[StructType] =
+    Option(reader.getFileMetaData.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      .flatMap(j => scala.util.Try(DataType.fromJson(j).asInstanceOf[StructType]).toOption)
+
 }

@@ -178,19 +178,23 @@ object TxStore {
 
   /** Write one immutable snapshot: `df` as a version's parquet files
     * (partitioned by `partitionBy`, if given) — the staging body of
-    * every commit that writes fresh data. On a mid-write failure only
-    * this writer's staging is removed ([[claimVersion]]), so a retry of
-    * the same version can proceed.
+    * every commit that writes fresh data. The files carry native blooms
+    * for the table's declared columns ([[writeBloomStats]]), so a
+    * version's skipping metadata is staged with its data and nothing is
+    * written after the flip. On a mid-write failure only this writer's
+    * staging is removed ([[claimVersion]]), so a retry of the same
+    * version can proceed.
     */
-  private def writeParquet(df: DataFrame, dir: String,
+  private def writeParquet(root: String, df: DataFrame, dir: String,
       partitionBy: Option[String] = None): Unit = {
-    val w = df.write.mode(SaveMode.ErrorIfExists)
+    val w = df.write.options(Skipping.bloomOptions(bloomColumns(root)))
+      .mode(SaveMode.ErrorIfExists)
     partitionBy.fold(w)(c => w.partitionBy(c)).parquet(dir)
   }
 
   /** Initialize the table at version 1. */
   def init(df: DataFrame, root: String): Long =
-    commit(root, Some(0L), "init")((_, dir) => writeParquet(df, dir))
+    commit(root, Some(0L), "init")((_, dir) => writeParquet(root, df, dir))
 
   // ---- deletion vectors (merge-on-read DELETE) ----
   //
@@ -213,12 +217,16 @@ object TxStore {
 
   private def dvPath(dir: String): Path = Paths.get(dir, "_dv")
 
-  /** Read a version's deletion-vector sidecar by explicit file list
-    * ([[Skipping.sidecarFiles]] — avoids the hidden-path WARN an
-    * underscore-leaf input path triggers on every read).
+  /** Read a version's deletion-vector sidecar by its explicit part
+    * files: handing the underscore-prefixed directory itself to
+    * `spark.read` logs an `All paths were ignored` WARN on every read.
     */
-  private def readDv(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(Skipping.sidecarFiles(dvPath(dir).toString): _*)
+  private def readDv(spark: SparkSession, dir: String): DataFrame = {
+    val s = Files.list(dvPath(dir))
+    try spark.read.parquet(s.iterator().asScala.map(_.toString)
+      .filter(_.endsWith(".parquet")).toSeq: _*)
+    finally s.close()
+  }
 
   /** The logical rows of version `v`: raw files minus the
     * deletion-vector positions, when a `_dv/` sidecar exists.
@@ -307,7 +315,7 @@ object TxStore {
   def commitPurgeDeletes(spark: SparkSession, root: String,
       expectedVersion: Option[Long] = None): Long =
     commit(root, expectedVersion, "purge_deletes")((base, dir) =>
-      writeParquet(snapshot(spark, root, base), dir))
+      writeParquet(root, snapshot(spark, root, base), dir))
 
   /** The committed snapshot (throws for an uninitialized table). */
   def read(spark: SparkSession, root: String): DataFrame =
@@ -325,12 +333,12 @@ object TxStore {
     */
   def cloneTable(spark: SparkSession, srcRoot: String, dstRoot: String): Long = {
     val srcV = committed(srcRoot)
-    // hidden-partitioning layout (if any) is part of the table's identity
-    val layout = Paths.get(srcRoot, "_layout.json")
+    // the hidden-partitioning layout and the declared blooms (if any)
+    // are part of the table's identity
     val copyLayout: Long => Unit = _ =>
-      if (Files.exists(layout))
-        Files.copy(layout, Paths.get(dstRoot, "_layout.json"),
-          StandardCopyOption.REPLACE_EXISTING)
+      Seq("_layout.json", SkippingFile).map(Paths.get(srcRoot, _)).filter(Files.exists(_))
+        .foreach(f => Files.copy(f, Paths.get(dstRoot).resolve(f.getFileName),
+          StandardCopyOption.REPLACE_EXISTING))
     // The source commit lock is NOT held (a clone must not block the
     // source's writers), so a concurrent expireVersions on the source
     // can delete v$srcV mid-link. A bare post-link `exists(srcDir)`
@@ -365,7 +373,7 @@ object TxStore {
     // the layout is part of v1: written before the flip, so a rejected
     // spec tears the claim down instead of leaving a layout-less table
     commit(root, Some(0L), "init", beforeFlip = _ => Layout.write(root, t)) { (_, dir) =>
-      writeParquet(df.withColumn(Layout.PartCol, t(col(t.col))), dir,
+      writeParquet(root, df.withColumn(Layout.PartCol, t(col(t.col))), dir,
         Some(Layout.PartCol))
     }
   }
@@ -470,7 +478,7 @@ object TxStore {
   def commitUpsert(spark: SparkSession, root: String, updates: DataFrame,
       pk: Seq[String], expectedVersion: Option[Long] = None): Long =
     commit(root, expectedVersion, "upsert")((base, dir) =>
-      writeParquet(Store.upsert(snapshot(spark, root, base), updates, pk), dir))
+      writeParquet(root, Store.upsert(snapshot(spark, root, base), updates, pk), dir))
 
   /** Schema-EVOLVING MERGE-commit: [[commitUpsert]] where `updates`
     * may carry columns the committed snapshot lacks (backfilled null
@@ -486,13 +494,13 @@ object TxStore {
   def commitUpsertEvolve(spark: SparkSession, root: String, updates: DataFrame,
       pk: Seq[String], expectedVersion: Option[Long] = None): Long =
     commit(root, expectedVersion, "upsert_evolve")((base, dir) =>
-      writeParquet(Store.upsertEvolve(snapshot(spark, root, base), updates, pk), dir))
+      writeParquet(root, Store.upsertEvolve(snapshot(spark, root, base), updates, pk), dir))
 
   /** Initialize a PARTITIONED table at version 1 (directory layout
     * `v1/<partCol>=<value>/part-*.parquet`).
     */
   def initPartitioned(df: DataFrame, root: String, partCol: String): Long =
-    commit(root, Some(0L), "init")((_, dir) => writeParquet(df, dir, Some(partCol)))
+    commit(root, Some(0L), "init")((_, dir) => writeParquet(root, df, dir, Some(partCol)))
 
   /** Incremental MERGE-commit on a partitioned table — the 100 TB shape
     * of [[commitUpsert]]: only partitions containing updated keys are
@@ -515,7 +523,7 @@ object TxStore {
         .map(_.get(0)).toSet
       val touchedBase = snapshot(spark, root, base)
         .filter(col(partCol).isInCollection(touched))
-      writeParquet(Store.upsert(touchedBase, updates, pk), nextDir, Some(partCol))
+      writeParquet(root, Store.upsert(touchedBase, updates, pk), nextDir, Some(partCol))
       // carry untouched partitions forward as hard links
       val writtenParts = partitionDirs(nextDir)
       partitionDirs(baseDir).filterNot(writtenParts.contains).foreach { p =>
@@ -617,7 +625,7 @@ object TxStore {
   def commitCompaction(spark: SparkSession, root: String, numFiles: Int,
       expectedVersion: Option[Long] = None): Long =
     commit(root, expectedVersion, "compaction")((base, dir) =>
-      writeParquet(snapshot(spark, root, base).coalesce(numFiles), dir))
+      writeParquet(root, snapshot(spark, root, base).coalesce(numFiles), dir))
 
   /** DELETE-commit: the committed snapshot minus rows matching
     * `predicate`, as the next version — same all-or-nothing pointer
@@ -632,7 +640,7 @@ object TxStore {
     commit(root, expectedVersion, "delete") { (base, dir) =>
       // SQL DELETE semantics: only rows where the predicate is TRUE go;
       // a NULL predicate keeps the row (bare !predicate would drop it)
-      writeParquet(snapshot(spark, root, base)
+      writeParquet(root, snapshot(spark, root, base)
         .filter(!org.apache.spark.sql.functions.coalesce(predicate,
           org.apache.spark.sql.functions.lit(false))), dir)
     }
@@ -673,7 +681,7 @@ object TxStore {
         val counts = cs.indices.map(i => cs(i)._1 -> row.getLong(i)).toMap
         val bad = counts.filter(_._2 > 0)
         if (bad.nonEmpty) throw new ContractViolationException(bad)
-        writeParquet(merged, dir)
+        writeParquet(root, merged, dir)
       } finally merged.unpersist()
     }
   }
@@ -698,21 +706,18 @@ object TxStore {
 
   /** OPTIMIZE ZORDER as a commit: rewrite the committed snapshot
     * z-order-clustered on two columns (Morton-code range partitioning
-    * + in-file sort, [[Skipping.writeZOrdered]]) with a fresh min/max
-    * stats sidecar INSIDE the new version directory — data-identical,
-    * pure layout change, same all-or-nothing pointer flip. Prior
-    * versions keep their own layout and stats; readers mid-scan of the
-    * old version are untouched. This is the recurring maintenance
-    * command of a 100 TB fact table: re-cluster after a week of
-    * appends so range predicates on EITHER column go back to pruning
-    * most files.
+    * + in-file sort, [[Skipping.zOrdered]]), so the new files' footer
+    * min/max is narrow in both — data-identical, pure layout change,
+    * same all-or-nothing pointer flip. Prior versions keep their own
+    * layout; readers mid-scan of the old version are untouched. This is
+    * the recurring maintenance command of a 100 TB fact table:
+    * re-cluster after a week of appends so range predicates on EITHER
+    * column go back to pruning most files.
     */
   def commitZorder(spark: SparkSession, root: String, colA: String,
       colB: String, numFiles: Int, expectedVersion: Option[Long] = None): Long =
-    commit(root, expectedVersion, "zorder") { (base, nextDir) =>
-      Skipping.writeZOrdered(snapshot(spark, root, base), nextDir, colA, colB, numFiles)
-      Skipping.writeStats(spark, nextDir, Seq(colA, colB))
-    }
+    commit(root, expectedVersion, "zorder")((base, dir) =>
+      writeParquet(root, Skipping.zOrdered(snapshot(spark, root, base), colA, colB, numFiles), dir))
 
   /** Partition-evolution commit: rewrite the committed snapshot
     * PARTITIONED BY a (new) column as the next version — data-identical,
@@ -727,7 +732,7 @@ object TxStore {
   def commitRepartition(spark: SparkSession, root: String, partCol: String,
       expectedVersion: Option[Long] = None): Long =
     commit(root, expectedVersion, "repartition")((base, dir) =>
-      writeParquet(snapshot(spark, root, base), dir, Some(partCol)))
+      writeParquet(root, snapshot(spark, root, base), dir, Some(partCol)))
 
   /** REPLACE-commit: the next version's content is `df` wholesale —
     * nothing carried from the parent. This is the commit a rebuild
@@ -748,20 +753,21 @@ object TxStore {
     // always has its own sidecars on disk, while a sidecar orphaned by a
     // crash in this window describes an uncommitted version and is inert
     commit(root, expectedVersion, "replace", beforeFlip)((_, dir) =>
-      writeParquet(df, dir, partitionBy))
+      writeParquet(root, df, dir, partitionBy))
 
-  /** Attach a min/max stats sidecar to a committed version (see
-    * [[Skipping]]). Stats live inside the immutable version directory,
-    * so time travel keeps each version's own stats, and hard-linked
-    * partition carry-forward never interacts with them.
+  /** Check that `cols` exist in a committed version. Nothing is
+    * written: every parquet footer already carries per-row-group min/max,
+    * which [[readRange]] prunes on.
     */
   def writeStats(spark: SparkSession, root: String, cols: Seq[String],
       version: Option[Long] = None): Unit = {
-    Skipping.writeStats(spark, versionDir(root, version.getOrElse(committed(root))), cols)
+    val have = Skipping.columns(spark, versionDir(root, version.getOrElse(committed(root))))
+    val missing = cols.filterNot(have.contains)
+    require(missing.isEmpty, s"no column ${missing.mkString(", ")} at $root")
   }
 
-  /** Range read over the committed snapshot with file-level skipping —
-    * requires [[writeStats]] to have covered `c` for that version.
+  /** Range read over the committed snapshot, skipping the files whose
+    * footer min/max misses [lo, hi] ([[Skipping.readRange]]).
     */
   def readRange(spark: SparkSession, root: String, c: String,
       lo: org.apache.spark.sql.Column, hi: org.apache.spark.sql.Column): DataFrame = {
@@ -770,16 +776,45 @@ object TxStore {
       Skipping.readRange(spark, versionDir(root, v), c, lo, hi))
   }
 
-  /** Per-file Bloom sidecar over the committed snapshot — the
-    * point-lookup pruning tier ([[Skipping.writeBloomStats]]).
+  /** Declare a native parquet bloom on `c` in the table's
+    * `_skipping.json`: every later commit writes it into its own files
+    * ([[writeParquet]]). Versions written before the declaration have
+    * no bloom, so [[readPoint]] prunes them by min/max only. May be
+    * called before [[init]], so v1 carries blooms too; `c` must exist in
+    * the committed version (`version`, else `_current`) when there is
+    * one.
     */
   def writeBloomStats(spark: SparkSession, root: String, c: String,
-      version: Option[Long] = None): Unit = {
-    Skipping.writeBloomStats(spark, versionDir(root, version.getOrElse(committed(root))), c)
+      version: Option[Long] = None): Unit = withCommitLock(root) {
+    if (version.isDefined || currentVersion(root).isDefined) writeStats(spark, root, Seq(c), version)
+    val cols = bloomColumns(root)
+    if (!cols.contains(c)) {
+      Layout.requireSafeCol(c)
+      Files.createDirectories(Paths.get(root))
+      writeAtomic(Paths.get(root, SkippingFile),
+        (cols :+ c).map(x => s""""$x"""").mkString("""{"bloom":[""", ",", "]}\n"))
+    }
   }
 
-  /** Point read over the committed snapshot with Bloom file skipping —
-    * requires [[writeBloomStats]] for that version ([[Skipping.readPoint]]).
+  private val SkippingFile = "_skipping.json"
+
+  /** The bloom columns `_skipping.json` declares. A missing, damaged or
+    * unparseable spec declares none: it steers pruning, never results.
+    */
+  private def bloomColumns(root: String): Seq[String] = {
+    val f = Paths.get(root, SkippingFile)
+    val spec = """\{"bloom":\[(.*)\]\}""".r
+    val name = "\"([A-Za-z0-9_.-]+)\"".r
+    if (!Files.exists(f)) Nil
+    else scala.util.Try(Files.readString(f).trim match {
+      case spec("") => Nil
+      case spec(list) => list.split(',').toSeq.map { case name(c) => c }
+    }).getOrElse(Nil)
+  }
+
+  /** Point read over the committed snapshot, skipping the files whose
+    * footer min/max or native bloom rules `key` out
+    * ([[Skipping.readPoint]]).
     */
   def readPoint(spark: SparkSession, root: String, c: String,
       key: org.apache.spark.sql.Column): DataFrame = {
@@ -878,7 +913,7 @@ object TxStore {
       require(drifted.isEmpty,
         s"append column types drifted from the committed schema " +
           s"(cast the batch or use commitUpsertEvolve): ${drifted.mkString("; ")}")
-      writeParquet(rows.select(baseSchema.fieldNames.toSeq.map(
+      writeParquet(root, rows.select(baseSchema.fieldNames.toSeq.map(
         org.apache.spark.sql.functions.col): _*), nextDir)
       // the streaming fence rides INSIDE the staged dir so it commits
       // atomically with the version (see lastBatchId); the underscore
@@ -888,17 +923,10 @@ object TxStore {
       // carry the base forward: part-file names are job-UUID-unique, so
       // only writer-job artifacts (_SUCCESS and its crc) collide — the
       // new job already wrote those, keep its own. The base's own
-      // _batch_id marker must NOT travel (it fences a different batch),
-      // and neither may the `_stats`/`_blooms` skipping sidecars: they
-      // describe the BASE file set, so a carried copy would make
-      // readRange/readPoint on the appended version silently drop every
-      // appended row. Excluding them fails those reads closed ("no
-      // sidecar for this version") until the caller rebuilds stats.
+      // _batch_id marker must NOT travel (it fences a different batch).
       // `_dv` DOES travel: deletion vectors are per-file-name facts that
       // stay true for the linked base files and match no appended file.
-      linkFiles(baseDir, Paths.get(nextDir), rel =>
-        rel.getFileName.toString != "_batch_id" &&
-          !Set("_stats", "_blooms").contains(rel.getName(0).toString))
+      linkFiles(baseDir, Paths.get(nextDir), _.getFileName.toString != "_batch_id")
     }
 
   /** [[commitBatch]]'s insert-only sibling: [[commitAppend]] under the
@@ -929,7 +957,7 @@ object TxStore {
         // atomically with v1 (init() + a marker written after the flip
         // would reopen the crash gap for the very first batch)
         commit(root, Some(0L), "init") { (_, dir) =>
-          writeParquet(batch, dir)
+          writeParquet(root, batch, dir)
           Files.writeString(Paths.get(dir, "_batch_id"), batchId.toString)
         }
       else if (!batch.isEmpty)

@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.store.Skipping
 
-/** Z-order clustering: after a Morton-code layout, the min/max sidecar
-  * must prune files on EITHER clustering column — the property a
-  * single-column sort can't give — and skipping must stay invisible in
-  * results.
+/** File skipping from parquet footers and native blooms: after a
+  * Morton-code layout, footer min/max must prune files on EITHER
+  * clustering column — the property a single-column sort can't give —
+  * blooms must prune point lookups on a hash layout, and skipping must
+  * stay invisible in results, partition columns included.
   */
 class SkippingSpec extends SparkSuite {
   import spark.implicits._
@@ -18,8 +19,7 @@ class SkippingSpec extends SparkSuite {
     // one-dimensional sorting
     val df = (0L until 4096L).map(i => (i % 64L, i / 64L, i))
       .toDF("x", "y", "payload")
-    Skipping.writeZOrdered(df, p, "x", "y", numFiles = 16, bits = 8)
-    Skipping.writeStats(spark, p, Seq("x", "y"))
+    Skipping.zOrdered(df, "x", "y", numFiles = 16, bits = 8).write.parquet(p)
     (p, df)
   }
 
@@ -50,9 +50,7 @@ class SkippingSpec extends SparkSuite {
     // hash layout on y: every file's x-interval spans the keyspace
     val df = (0L until 4096L).map(i => (i, i % 97L, i * 3L))
       .toDF("x", "y", "payload")
-    df.repartition(8, col("y")).write.parquet(dir)
-    Skipping.writeStats(spark, dir, Seq("x"))
-    Skipping.writeBloomStats(spark, dir, "x")
+    df.repartition(8, col("y")).write.options(Skipping.bloomOptions(Seq("x"))).parquet(dir)
     // min/max: the point range [1234, 1234] intersects EVERY file
     val (rangeKept, totalR) = Skipping.pruneFiles(spark, dir, "x",
       lit(1234L), lit(1234L))
@@ -74,8 +72,7 @@ class SkippingSpec extends SparkSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_bloomtype")
       .resolve("t").toString
     (0L until 100L).map(i => (i, s"v$i")).toDF("id", "v")
-      .repartition(4).write.parquet(dir)
-    Skipping.writeBloomStats(spark, dir, "id")
+      .repartition(4).write.options(Skipping.bloomOptions(Seq("id"))).parquet(dir)
     val want = spark.read.parquet(dir).filter(col("id") === lit(5))
       .as[(Long, String)].collect().toSeq
     assert(want == Seq((5L, "v5")))
@@ -84,5 +81,90 @@ class SkippingSpec extends SparkSuite {
     assert(Skipping.readPoint(spark, dir, "id", lit(5))
       .as[(Long, String)].collect().toSeq == want)
     assert(Skipping.pruneFilesByBloom(spark, dir, "id", lit(5))._1.nonEmpty)
+  }
+
+  /** A directory written with `partitionBy("p")`: 3 partitions, several files each. */
+  private lazy val (partDir, partBase) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_partskip")
+      .resolve("t").toString
+    val df = (0L until 600L).map(i => (i, s"v$i", i % 3L)).toDF("x", "v", "p")
+    df.repartition(4, col("x") % 4L).write.partitionBy("p")
+      .options(Skipping.bloomOptions(Seq("x"))).parquet(dir)
+    (dir, spark.read.parquet(dir))
+  }
+
+  private def sameAs(got: org.apache.spark.sql.DataFrame,
+      want: org.apache.spark.sql.DataFrame): Unit = {
+    assert(got.columns.toSeq == want.columns.toSeq)
+    assert(got.as[(Long, String, Long)].collect().toSet ==
+      want.as[(Long, String, Long)].collect().toSet)
+  }
+
+  test("a point read over a partitioned directory equals read + filter") {
+    val (kept, total) = Skipping.pruneFilesByBloom(spark, partDir, "x", lit(301L))
+    assert(total >= 6 && kept.nonEmpty && kept.size <= 2,
+      s"bloom should prune partition files: kept ${kept.size} of $total")
+    sameAs(Skipping.readPoint(spark, partDir, "x", lit(301L)),
+      partBase.filter(col("x") === 301L))
+    // a key on the partition column itself has no footer chunk: nothing is pruned
+    sameAs(Skipping.readPoint(spark, partDir, "p", lit(2L)),
+      partBase.filter(col("p") === 2L))
+    assert(Skipping.readPoint(spark, partDir, "x", lit(9999L)).count() == 0)
+  }
+
+  test("a range read over a partitioned directory equals read + filter") {
+    sameAs(Skipping.readRange(spark, partDir, "x", lit(100L), lit(130L)),
+      partBase.filter(col("x").between(100L, 130L)))
+    val (kept0, _) = Skipping.pruneFiles(spark, partDir, "x", lit(5000L), lit(6000L))
+    assert(kept0.isEmpty)
+    val empty = Skipping.readRange(spark, partDir, "x", lit(5000L), lit(6000L))
+    assert(empty.count() == 0 && empty.columns.toSeq == partBase.columns.toSeq)
+  }
+
+  test("keys that do not fold to the column's type keep every file") {
+    // a string key against a bigint column and a key that is a column
+    // reference cannot be probed; the exact filter still answers
+    for (key <- Seq(lit("301"), col("x"))) {
+      val (kept, total) = Skipping.pruneFilesByBloom(spark, partDir, "x", key)
+      assert(kept.size == total)
+    }
+    sameAs(Skipping.readPoint(spark, partDir, "x", lit("301")),
+      partBase.filter(col("x") === lit("301")))
+  }
+
+  test("building a readPoint or readRange frame runs no SQL query") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.store.TxStore
+    val root = java.nio.file.Files.createTempDirectory("graft_skipjobs")
+      .resolve("t").toString
+    TxStore.writeBloomStats(spark, root, "x")
+    TxStore.init((0L until 1000L).map(i => (i, s"v$i")).toDF("x", "v").repartition(4), root)
+    val sc = spark.sparkContext
+    // job group of every job started by a query execution
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        if (prop("spark.sql.execution.id").isDefined)
+          groups.add(prop("spark.jobGroup.id").getOrElse(""))
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("skipping-build", "")
+      val (point, range) = try (TxStore.readPoint(spark, root, "x", lit(42L)),
+          TxStore.readRange(spark, root, "x", lit(10L), lit(20L)))
+        finally sc.clearJobGroup()
+      // a sentinel query in another group marks the point every earlier
+      // event has arrived
+      sc.setJobGroup("skipping-sentinel", "")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!groups.contains("skipping-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(groups.contains("skipping-sentinel"), "listener never saw the sentinel job")
+      assert(!groups.contains("skipping-build"), "a SQL job ran while the frames were built")
+      assert(point.count() == 1 && range.count() == 11)
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -354,10 +354,11 @@ class TxStoreSpec extends SparkSuite {
     val root = freshRoot()
     val base = (1L to 100L).map(k => (k, s"p$k", k * 1.0)).toDF("k", "produto", "v")
     TxStore.init(base, root)
-    TxStore.writeStats(spark, root, Seq("k"))
-    assert(TxStore.read(spark, root).count() == 100) // _stats not unioned in
+    TxStore.writeStats(spark, root, Seq("k")) // a check: nothing is written
+    intercept[IllegalArgumentException](TxStore.writeStats(spark, root, Seq("nope")))
+    assert(TxStore.read(spark, root).count() == 100)
     assert(TxStore.read(spark, root).columns.toSeq == Seq("k", "produto", "v"))
-    // next version without stats: readRange on v2 must fail cleanly, v1 range path intact
+    // each version's footers are its own: v1's range path stays intact after v2
     TxStore.commitUpsert(spark, root,
       Seq((101L, "x", 1.0)).toDF("k", "produto", "v"), Seq("k"))
     assert(TxStore.read(spark, root).count() == 101)
@@ -442,7 +443,7 @@ class TxStoreSpec extends SparkSuite {
     val hist = TxStore.history(spark, root)
       .select("version", "action").as[(Long, String)].collect().toMap
     assert(hist(2L) == "zorder")
-    // the new version's own stats sidecar prunes on BOTH columns
+    // the new version's own footers prune on BOTH columns
     val v2 = TxStore.versionDir(root, 2L)
     val (keptK, totalK) = graft.store.Skipping.pruneFiles(spark, v2, "k", lit(1L), lit(100L))
     val (keptG, totalG) = graft.store.Skipping.pruneFiles(spark, v2, "g", lit(0L), lit(100L))
@@ -851,14 +852,13 @@ class TxStoreSpec extends SparkSuite {
     val base = (1L to 2000L).map(k => (k, (k * 2654435761L) % 1000L, s"p${k % 7}"))
       .toDF("k", "g", "produto")
     TxStore.init(base.repartitionByRange(8, col("k")), root)
-    TxStore.commitZorder(spark, root, "k", "g", numFiles = 8) // v2 + _stats
-    TxStore.writeBloomStats(spark, root, "k")                 // v2 + _blooms
+    TxStore.commitZorder(spark, root, "k", "g", numFiles = 8) // v2
+    TxStore.writeBloomStats(spark, root, "k")                 // blooms from v3 on
     // layout churn on top, then roll back to the z-ordered version
     TxStore.commitRepartition(spark, root, "produto")         // v3
     TxStore.commitRestore(spark, root, toVersion = 2L)        // v4 links v2
     // expire everything below the restore — the restored version's
-    // sidecars must keep working with their SOURCE files gone
-    // (path-keyed sidecars dangled here before round 10's name keying)
+    // footers must keep working with their SOURCE files gone
     TxStore.expireVersions(root, keepLast = 1)
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(TxStore.versionDir(root, 2L))))
@@ -1000,36 +1000,105 @@ class TxStoreSpec extends SparkSuite {
     assert(rows(root2) == Set((1L, "soja", 100.0), (2L, "milho", 50.0)))
   }
 
-  test("skipping sidecars do not travel with appends (stale stats would drop appended rows)") {
+  test("an appended version answers readRange/readPoint with its new row, no rebuild") {
     val root = freshRoot()
     val base = (1L to 100L).map(k => (k, s"p$k", k * 1.0)).toDF("k", "produto", "v")
       .repartitionByRange(4, $"k")
+    TxStore.writeBloomStats(spark, root, "k")
     TxStore.init(base, root)
     TxStore.writeStats(spark, root, Seq("k"))
-    TxStore.writeBloomStats(spark, root, "k")
     assert(TxStore.readRange(spark, root, "k", lit(1L), lit(10L)).count() == 10)
     TxStore.commitAppend(spark, root,
       Seq((101L, "novo", 1.0)).toDF("k", "produto", "v"))
-    // the appended version must NOT carry v1's sidecars: they describe
-    // the BASE file set, so a carried copy would silently drop every
-    // appended row from readRange/readPoint
-    val v2 = java.nio.file.Paths.get(TxStore.versionDir(root, 2L))
-    assert(!java.nio.file.Files.exists(v2.resolve("_stats")))
-    assert(!java.nio.file.Files.exists(v2.resolve("_blooms")))
-    // skipping reads fail CLOSED until stats are rebuilt for v2
-    val e = intercept[IllegalStateException] {
-      TxStore.readRange(spark, root, "k", lit(90L), lit(200L)).count()
-    }
-    assert(e.getMessage.contains("no skipping sidecar"))
-    intercept[IllegalStateException] {
-      TxStore.readPoint(spark, root, "k", lit(101L)).count()
-    }
-    // rebuild for THIS version -> appended row visible to skipping reads
-    TxStore.writeStats(spark, root, Seq("k"))
-    TxStore.writeBloomStats(spark, root, "k")
+    // the appended file carries its own footer and bloom; the linked
+    // base files keep theirs, so no metadata describes a stale file set
     assert(TxStore.readRange(spark, root, "k", lit(90L), lit(200L))
       .select("k").as[Long].collect().toSet == (90L to 101L).toSet)
     assert(TxStore.readPoint(spark, root, "k", lit(101L)).count() == 1L)
+    val (kept, total) = graft.store.Skipping.pruneFilesByBloom(spark,
+      TxStore.versionDir(root, 2L), "k", lit(101L))
+    assert(total == 5 && kept.size == 1, s"point read kept ${kept.size} of $total")
+  }
+
+  /** Whether the files of `root`'s version `v` carry blooms on `k`: an
+    * absent key inside every file's [min,max] survives only a bloom-less
+    * file (or a false positive).
+    */
+  private def bloomed(root: String, v: Long, absent: Long): Boolean = {
+    val (kept, total) = graft.store.Skipping.pruneFilesByBloom(spark,
+      TxStore.versionDir(root, v), "k", lit(absent))
+    kept.size < total
+  }
+
+  /** Even keys 0..1998 hash-laid over 4 files: every file spans the keyspace. */
+  private def evens = (0L until 1000L).map(i => (i * 2, s"p$i", i * 1.0))
+    .toDF("k", "produto", "v").repartition(4, $"produto")
+
+  test("s13's layout: the TxStore point read prunes to <= 2 of 8 files") {
+    val sf = "/root/testdata/sf0.001"
+    val root = graft.queries.StoreOps.s13Build(spark, sf)
+    val key = spark.read.parquet(s"$sf/orders.parquet").select("o_orderkey")
+      .orderBy("o_orderkey").head().getLong(0)
+    val df = TxStore.readPoint(spark, root, "o_orderkey", lit(key))
+    assert(df.count() == 1L)
+    val (_, total) = graft.store.Skipping.pruneFiles(spark,
+      TxStore.versionDir(root, 1L), "o_orderkey", lit(key), lit(key))
+    assert(total == 8 && df.inputFiles.length <= 2,
+      s"kept ${df.inputFiles.length} of $total files")
+  }
+
+  test("a clone carries the declared blooms: its next commit writes them") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_clonebloom")
+    val (src, dst) = (tmp.resolve("src").toString, tmp.resolve("dst").toString)
+    TxStore.writeBloomStats(spark, src, "k")
+    TxStore.init(evens, src)
+    assert(bloomed(src, 1L, absent = 1001L))
+    TxStore.cloneTable(spark, src, dst)
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dst, "_skipping.json")))
+    TxStore.commitCompaction(spark, dst, numFiles = 4)
+    assert(bloomed(dst, 2L, absent = 1001L), "the clone's own commit wrote no blooms")
+    assert(TxStore.readPoint(spark, dst, "k", lit(1000L)).count() == 1L)
+  }
+
+  test("a commit that throws after staging bloom-bearing files leaves nothing behind") {
+    import java.nio.file.{Files => JFiles, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = freshRoot()
+    TxStore.writeBloomStats(spark, root, "k")
+    TxStore.init(evens, root)
+    intercept[IllegalStateException] {
+      TxStore.commitReplace(spark, root, evens,
+        beforeFlip = _ => throw new IllegalStateException("crash before the flip"))
+    }
+    assert(TxStore.currentVersion(root).contains(1L))
+    assert(!JFiles.exists(Paths.get(root, "_log", "v2.json")))
+    val left = {
+      val w = JFiles.walk(Paths.get(root))
+      try w.iterator().asScala.map(p => Paths.get(root).relativize(p).toString).toSeq
+      finally w.close()
+    }
+    assert(!left.exists(p => p.startsWith("_versions/v2") || p.contains(".tmp")),
+      s"left behind: ${left.filter(p => p.startsWith("_versions/v2") || p.contains(".tmp"))}")
+    // the next commit takes v2 and carries blooms
+    assert(TxStore.commitCompaction(spark, root, numFiles = 4) == 2L)
+    assert(bloomed(root, 2L, absent = 1001L))
+  }
+
+  test("a damaged _skipping.json declares no blooms; results never depend on it") {
+    val root = freshRoot()
+    TxStore.init(evens, root)
+    val spec = java.nio.file.Paths.get(root, "_skipping.json")
+    for (junk <- Seq("""{"bloom":["k"""", "not json", """{"bloom":["k;drop"]}""")) {
+      java.nio.file.Files.writeString(spec, junk)
+      val v = TxStore.commitCompaction(spark, root, numFiles = 4)
+      assert(!bloomed(root, v, absent = 1001L), s"blooms written under '$junk'")
+      assert(TxStore.readPoint(spark, root, "k", lit(1000L)).count() == 1L)
+      assert(TxStore.readPoint(spark, root, "k", lit(1001L)).count() == 0L)
+    }
+    // declaring again repairs the spec; the next commit writes blooms
+    TxStore.writeBloomStats(spark, root, "k")
+    val v = TxStore.commitCompaction(spark, root, numFiles = 4)
+    assert(bloomed(root, v, absent = 1001L))
   }
 
   test("append fence survives maintenance commits minted inside the crash gap") {

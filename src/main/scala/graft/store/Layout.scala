@@ -81,10 +81,11 @@ object Layout {
     * would corrupt it silently. Rejected at write time — identifier
     * characters only, which every real column name satisfies.
     */
+  private[store] def safeCol(col: String): Boolean =
+    col.nonEmpty && col.forall(ch => ch.isLetterOrDigit || ch == '_' || ch == '.' || ch == '-')
+
   private[store] def requireSafeCol(col: String): Unit =
-    require(col.nonEmpty && col.forall(ch =>
-      ch.isLetterOrDigit || ch == '_' || ch == '.' || ch == '-'),
-      s"layout column name must be [A-Za-z0-9_.-]+ (got: '$col')")
+    require(safeCol(col), s"column name must be letters, digits, '_', '.' or '-' (got: '$col')")
 
   def write(root: String, t: Transform): Unit = {
     requireSafeCol(t.col)

@@ -37,17 +37,18 @@ import org.apache.spark.unsafe.types.UTF8String
 object Skipping {
 
   /** Parquet writer options that give each row group a native bloom
-    * per column in `cols`. Adaptive sizing picks the smallest of five
-    * power-of-two sizes up to 1 MiB that holds the group's distinct
-    * values at a 5% false-positive rate: a false positive costs one
-    * extra file read, while a 1% bloom (~1.2 B/key) grows a table of
-    * narrow compressed rows (~5.5 B/row on the store benchmark) by over
-    * a fifth.
+    * per column in `cols`. Adaptive sizing picks the smallest of eleven
+    * power-of-two sizes from 1 KiB to 1 MiB that holds the group's
+    * distinct values at a 5% false-positive rate. A false positive
+    * costs one extra file read, while a 1% bloom (~1.2 B/key) grows a
+    * table of narrow compressed rows (~5.5 B/row on the store
+    * benchmark) by over a fifth; so does parquet's default ladder of
+    * five sizes, whose 64 KiB floor is twice what a 40k-row file needs.
     */
   def bloomOptions(cols: Seq[String]): Map[String, String] = {
     import org.apache.parquet.hadoop.ParquetOutputFormat._
     cols.flatMap(c => Seq(s"$BLOOM_FILTER_ENABLED#$c" -> "true", s"$BLOOM_FILTER_FPP#$c" -> "0.05",
-      ADAPTIVE_BLOOM_FILTER_ENABLED -> "true")).toMap
+      s"$BLOOM_FILTER_CANDIDATES_NUMBER#$c" -> "11", ADAPTIVE_BLOOM_FILTER_ENABLED -> "true")).toMap
   }
 
   /** Morton (Z-order) interleave of the low `bits` of two non-negative

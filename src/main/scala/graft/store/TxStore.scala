@@ -781,12 +781,10 @@ object TxStore {
     * ([[writeParquet]]). Versions written before the declaration have
     * no bloom, so [[readPoint]] prunes them by min/max only. May be
     * called before [[init]], so v1 carries blooms too; `c` must exist in
-    * the committed version (`version`, else `_current`) when there is
-    * one.
+    * the committed version when there is one.
     */
-  def writeBloomStats(spark: SparkSession, root: String, c: String,
-      version: Option[Long] = None): Unit = withCommitLock(root) {
-    if (version.isDefined || currentVersion(root).isDefined) writeStats(spark, root, Seq(c), version)
+  def writeBloomStats(spark: SparkSession, root: String, c: String): Unit = withCommitLock(root) {
+    if (currentVersion(root).isDefined) writeStats(spark, root, Seq(c))
     val cols = bloomColumns(root)
     if (!cols.contains(c)) {
       Layout.requireSafeCol(c)
@@ -800,15 +798,16 @@ object TxStore {
 
   /** The bloom columns `_skipping.json` declares. A missing, damaged or
     * unparseable spec declares none: it steers pruning, never results.
+    * Names are checked by the rule [[writeBloomStats]] writes them with.
     */
   private def bloomColumns(root: String): Seq[String] = {
     val f = Paths.get(root, SkippingFile)
     val spec = """\{"bloom":\[(.*)\]\}""".r
-    val name = "\"([A-Za-z0-9_.-]+)\"".r
+    val name = "\"(.*)\"".r
     if (!Files.exists(f)) Nil
     else scala.util.Try(Files.readString(f).trim match {
       case spec("") => Nil
-      case spec(list) => list.split(',').toSeq.map { case name(c) => c }
+      case spec(list) => list.split(',').toSeq.map { case name(c) if Layout.safeCol(c) => c }
     }).getOrElse(Nil)
   }
 

@@ -849,11 +849,12 @@ class TxStoreSpec extends SparkSuite {
 
   test("stats/bloom sidecars survive RESTORE after the source version expires (name-keyed)") {
     val root = freshRoot()
-    val base = (1L to 2000L).map(k => (k, (k * 2654435761L) % 1000L, s"p${k % 7}"))
+    // every key but 1001, so 1001 is an absent key inside the keyspace
+    val base = (1L to 2000L).filter(_ != 1001L).map(k => (k, (k * 2654435761L) % 1000L, s"p${k % 7}"))
       .toDF("k", "g", "produto")
     TxStore.init(base.repartitionByRange(8, col("k")), root)
+    TxStore.writeBloomStats(spark, root, "k")                 // blooms from v2 on
     TxStore.commitZorder(spark, root, "k", "g", numFiles = 8) // v2
-    TxStore.writeBloomStats(spark, root, "k")                 // blooms from v3 on
     // layout churn on top, then roll back to the z-ordered version
     TxStore.commitRepartition(spark, root, "produto")         // v3
     TxStore.commitRestore(spark, root, toVersion = 2L)        // v4 links v2
@@ -874,6 +875,9 @@ class TxStoreSpec extends SparkSuite {
     val v4 = TxStore.versionDir(root, 4L)
     val (kept, total) = graft.store.Skipping.pruneFiles(spark, v4, "g", lit(0L), lit(100L))
     assert(total == 8 && kept.size < total, s"pruning intact: ${kept.size}/$total")
+    // v4's files are v2's, blooms included: they rule out the absent key
+    assert(bloomed(root, 4L, absent = 1001L), "blooms intact after restore + expiry")
+    assert(TxStore.readPoint(spark, root, "k", lit(1001L)).count() == 0L)
   }
 
   test("clone racing retention: every successful clone is a complete committed snapshot") {
@@ -1099,6 +1103,19 @@ class TxStoreSpec extends SparkSuite {
     TxStore.writeBloomStats(spark, root, "k")
     val v = TxStore.commitCompaction(spark, root, numFiles = 4)
     assert(bloomed(root, v, absent = 1001L))
+  }
+
+  test("a bloom on a non-ASCII column is kept with the earlier declarations") {
+    val root = freshRoot()
+    TxStore.init(evens.withColumn("região", $"k" + 1), root)
+    TxStore.writeBloomStats(spark, root, "k")
+    TxStore.writeBloomStats(spark, root, "região")
+    val v = TxStore.commitCompaction(spark, root, numFiles = 4)
+    assert(bloomed(root, v, absent = 1001L), "the earlier bloom on k was dropped")
+    val (kept, total) = graft.store.Skipping.pruneFilesByBloom(spark,
+      TxStore.versionDir(root, v), "região", lit(1000L)) // região holds odd values only
+    assert(kept.size < total, s"no bloom on região: kept ${kept.size} of $total")
+    assert(TxStore.readPoint(spark, root, "região", lit(1001L)).count() == 1L)
   }
 
   test("append fence survives maintenance commits minted inside the crash gap") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.store.Skipping
 
 /** D10 — CLI over the library (reference `cli.py:23-419` exposes
   * cepea/conab/ibge/cache/snapshot/health subcommands; here the
@@ -148,7 +149,7 @@ object Cli {
       kv.load()
       val legacy = store.Policies.isLegacyKey _
       // re-read entries through the public surface: per-key hit counts
-      val keys = session().read.parquet(path)
+      val keys = Skipping.readParquet(session(), path)
         .select("key", "hitCount", "ttlSeconds").collect()
         .sortBy(_.getString(0))
       println(s"entries: ${keys.length}")

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.store.Skipping
 
 /** Executable tour of the driver-side surface that the oracle queries
   * can't reach: ingestion scans, the semantic-layer fallback chain and
@@ -58,7 +59,7 @@ object Demo {
     store.Store.writePartitioned(
       Seq(("soja", 130.5), ("milho", 62.0)).toDF("produto", "valor"),
       factDir, Seq("produto"))
-    val pruned = spark.read.parquet(factDir).filter(col("produto") === "soja")
+    val pruned = Skipping.readParquet(spark, factDir).filter(col("produto") === "soja")
     println(s"[demo] partition pruning: rows=${pruned.count()} " +
       s"pruned=${pruned.queryExecution.executedPlan.toString.contains("PartitionFilters")}")
 
@@ -114,12 +115,12 @@ object Demo {
     // training-data pipeline in four lines: train a quality classifier
     // (distributed full-batch GD), score+gate the corpus, and keep one
     // canonical survivor per near-dup cluster
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val emb = Skipping.readParquet(spark, "/root/testdata/sf0.001/embeddings.parquet")
     val model = ops.Model.trainLogReg(emb, "embedding",
       (col("label") % 2 === 1).cast("double"), dims = 64, epochs = 3).last
     val kept = emb.filter(ops.Model.predict(col("embedding"), model) >= 0.5)
     println(s"[demo] trained gate keeps ${kept.count()}/${emb.count()} vectors")
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = Skipping.readParquet(spark, "/root/testdata/sf0.001/documents.parquet")
     val clusters = ops.Graph.nearDupClusters(ops.Dedup.minhashLshPairs(
       docs, col("doc_id"), col("text")))
     println(s"[demo] near-dup clusters found: ${clusters.count()}")

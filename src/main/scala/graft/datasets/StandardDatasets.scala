@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.validate.ContractRegistry
 import graft.functions.{GraftFunctions => G}
+import graft.store.Skipping
 
 /** The standard dataset catalog (reference: 14 semantic datasets at
   * `datasets/__init__.py:25-47`). Deployment shape: scheduled ingests
@@ -16,7 +17,7 @@ import graft.functions.{GraftFunctions => G}
 object StandardDatasets {
 
   private def parquetSource(spark: SparkSession, path: String): () => DataFrame =
-    () => spark.read.parquet(path)
+    () => Skipping.readParquet(spark, path)
 
   /** Register the catalog against a landing dir; returns the names. */
   def register(spark: SparkSession, baseDir: String,

@@ -2,6 +2,7 @@ package graft.examples
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.store.Skipping
 
 /** Runnable end-to-end examples — the `examples/` directory of the
   * reference (`/root/reference/examples/analise_soja.py`,
@@ -19,7 +20,7 @@ import org.apache.spark.sql.functions._
 object Examples {
 
   private def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Skipping.readParquet(spark, s"$dir/$name.parquet")
 
   /** Example 1 — the reference's core loop (load → validate → query →
     * store → export): read a fact table, gate it with a contract-style

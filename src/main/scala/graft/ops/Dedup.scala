@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{GraftFunctions => G}
+import graft.store.Skipping
 
 /** Document deduplication pipelines for the training-data use case.
   * Every variant is bucket-based — candidates only ever meet inside a
@@ -57,7 +58,7 @@ object Dedup {
       shingleSize: Int = 3, numHashes: Int = 64): DataFrame = {
     minhashSignatures(df, idCol, textCol, shingleSize, numHashes)
       .write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
+    Skipping.readParquet(df.sparkSession, path)
   }
 
   /** MinHash-LSH candidate pairs from a signature table: `bands`

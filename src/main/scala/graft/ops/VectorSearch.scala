@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{GraftFunctions => G}
+import graft.store.Skipping
 
 /** Approximate-nearest-neighbor search over an embedding column.
   * Three paths:
@@ -503,7 +504,7 @@ object VectorSearch {
       .select(explode(G.cellProbes(col("q_vec"), cents.toSeq, nprobe)).as("cell"))
       .distinct().collect().map(_.getInt(0)).toSeq
     val qb = broadcast(query.select(col(vecCol).as("q_vec")))
-    spark.read.parquet(dir)
+    Skipping.readParquet(spark, dir)
       .filter(col("cell").isin(cells: _*))
       .crossJoin(qb)
       .withColumn("sim", round(G.cosineSim(col(vecCol), col("q_vec")), 6))
@@ -546,7 +547,7 @@ object VectorSearch {
       .select(explode(G.cellProbes(col("q_vec"), cents.toSeq, nprobe)).as("cell"))
       .distinct().collect().map(_.getInt(0)).toSeq
     val qb = broadcast(query.select(col(vecCol).as("q_vec")))
-    spark.read.parquet(path)
+    Skipping.readParquet(spark, path)
       .filter(col("cell").isin(cells: _*))
       .crossJoin(qb)
       .withColumn("sim", round(G.cosineSim(col(vecCol), col("q_vec")), 6))
@@ -595,7 +596,7 @@ object VectorSearch {
       .withColumn("cell", explode(G.cellProbes(col("q_vec"), cents.toSeq, nprobe)))
     // bounded by Q × nprobe — the partition filter for the single scan
     val cells = qb.select(col("cell")).distinct().collect().map(_.getInt(0)).toSeq
-    spark.read.parquet(path)
+    Skipping.readParquet(spark, path)
       .filter(col("cell").isin(cells: _*))
       .join(broadcast(qb), Seq("cell"))
       .withColumn("sim", round(G.cosineSim(col(vecCol), col("q_vec")), 6))
@@ -882,12 +883,12 @@ object VectorSearch {
       val n = math.sqrt(cv.map(x => x.toDouble * x).sum)
       (if (n > 0) dot / n else -2.0, i)
     }.sortBy(-_._1).take(nprobe).map(_._2).toSeq
-    val shortIds = spark.read.parquet(s"$path/codes")
+    val shortIds = Skipping.readParquet(spark, s"$path/codes")
       .filter(col("cell").isin(cells: _*))
       .withColumn("adc", pqScore(col("codes"), lut))
       .orderBy(col("adc").desc, col(idCol)).limit(shortlist)
       .select(col(idCol))
-    spark.read.parquet(s"$path/vectors")
+    Skipping.readParquet(spark, s"$path/vectors")
       .join(shortIds, Seq(idCol))
       .withColumn("sim", round(G.dotLit(col("nv"), queryVec), 6))
       .select(col(idCol), col("sim"))
@@ -930,13 +931,13 @@ object VectorSearch {
       val n = math.sqrt(cv.map(x => x.toDouble * x).sum)
       (if (n > 0) dot / n else -2.0, i)
     }.sortBy(-_._1).take(nprobe).map(_._2).toSeq
-    val scored = spark.read.parquet(s"$path/codes")
+    val scored = Skipping.readParquet(spark, s"$path/codes")
       .filter(col("cell").isin(cells: _*))
       .withColumn("adc", sqScore(col("codes"), queryVec, mins, maxs))
     val shortIds = batchTopK(scored.select(lit(0L).as("_qid"),
         col(idCol), col("adc")), "_qid", idCol, "adc", k = shortlist)
       .select(col(idCol))
-    spark.read.parquet(s"$path/vectors")
+    Skipping.readParquet(spark, s"$path/vectors")
       .join(shortIds, Seq(idCol))
       .withColumn("sim", round(G.dotLit(col("nv"), queryVec), 6))
       .select(col(idCol), col("sim"))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.store.Skipping
 
 /** One operator-demonstrating query: a Spark implementation plus (when
   * exactly expressible) the equivalent DuckDB SQL oracle. Column names
@@ -50,7 +51,7 @@ object T {
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val raw = if (name == "events") loadEventsRaw(spark, dir)
-      else spark.read.parquet(s"$dir/$name.parquet")
+      else Skipping.readParquet(spark, s"$dir/$name.parquet")
     timestampCols.get(name).fold(raw)(cols => normalizeTs(raw, cols))
   }
 
@@ -70,7 +71,7 @@ object T {
     */
   def loadEventsRaw(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/events.parquet")
+    Skipping.readParquet(spark, s"$dir/events.parquet")
   }
 
   /** Normalizes the named columns to TIMESTAMP_NTZ whatever the

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.queries.T._
 import graft.store.Store
+import graft.store.Skipping
 
 /** Store-operation family (SURVEY §2.1 S7-S10): MERGE upsert and
   * content-hash export, both oracle-checked. S7 (predicate scan) and
@@ -487,7 +488,7 @@ object StoreOps {
     val basePath = tmp.resolve("orders").toString
     val mvPath = tmp.resolve("orders_monthly").toString
     load(s, dir, "orders").write.mode("overwrite").parquet(basePath)
-    val base = s.read.parquet(basePath)
+    val base = Skipping.readParquet(s, basePath)
     val key = date_trunc("month", col("o_orderdate")).cast("date")
     // the maintained summary (the s07 mergeAggregates artifact): one
     // partial per algebraic aggregate the rewrite may need
@@ -505,7 +506,7 @@ object StoreOps {
         ("count", lit(1L), "n"),
         ("min", col("o_totalprice"), "mn"),
         ("max", col("o_totalprice"), "mx")),
-      mv = s.read.parquet(mvPath))
+      mv = Skipping.readParquet(s, mvPath))
     if (!s.experimental.extraOptimizations.contains(MvRewrite.RewriteAggregateToMv))
       s.experimental.extraOptimizations =
         s.experimental.extraOptimizations :+ MvRewrite.RewriteAggregateToMv

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.queries.T._
 import graft.ops.{VectorSearch => V}
 import graft.functions.{GraftFunctions => G}
+import graft.store.Skipping
 
 /** Similarity-search family over `embeddings.parquet` (500 × 64-dim
   * float at sf0.01). Brute-force cosine top-k is the oracle-checked
@@ -341,7 +342,7 @@ object VectorSearch {
         x * qv(i * subLen + j)
       }.sum.toDouble)
     }
-    val scored = s.read.parquet(path)
+    val scored = Skipping.readParquet(s, path)
       .withColumn("adc", round(V.pqScore(col("codes"), lut), 6))
     val cand = V.batchTopK(scored.select(lit(0L).as("qid"),
         col("vec_id"), col("adc")), "qid", "vec_id", "adc", k = 50)
@@ -634,7 +635,7 @@ object VectorSearch {
         x * qv(i * subLen + j)
       }.sum.toDouble)
     }
-    val coded = s.read.parquet(path)
+    val coded = Skipping.readParquet(s, path)
       .withColumn("adc", V.pqScore(col("codes"), lut))
     val cand = V.batchTopK(coded.select(lit(0L).as("qid"),
         col("vec_id"), col("adc")), "qid", "vec_id", "adc", k = 1000000)
@@ -1307,7 +1308,7 @@ object VectorSearch {
     val e = load(s, dir, "embeddings")
     val qv = a10Normalized(e.filter(col("vec_id") === 0))
       .select(col("nv")).head().getSeq[Double](0)
-    val coded = s.read.parquet(path)
+    val coded = Skipping.readParquet(s, path)
       .withColumn("adc", V.sqScore(col("codes"), qv, bounds._1, bounds._2))
     val cand = V.batchTopK(coded.select(lit(0L).as("qid"),
         col("vec_id"), col("adc")), "qid", "vec_id", "adc", k = shortlist)

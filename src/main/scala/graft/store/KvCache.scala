@@ -88,7 +88,7 @@ final class KvCache(spark: SparkSession, path: String,
     */
   def load(): Unit = {
     import spark.implicits._
-    val df = spark.read.parquet(path)
+    val df = Skipping.readParquet(spark, path)
     val n = df.count()
     require(n <= maxEntries,
       s"KvCache at $path has $n entries (> $maxEntries): this is no longer " +

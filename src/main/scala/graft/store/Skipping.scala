@@ -2,15 +2,16 @@ package graft.store
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -108,10 +109,34 @@ object Skipping {
 
   /** The columns of `dir`'s table, partition columns included. */
   private[store] def columns(spark: SparkSession, dir: String): Seq[String] =
-    survey(spark, dir, "", lit(0), lit(0), bloom = false).read(spark, dir, lit(true)).columns.toSeq
+    readParquet(spark, dir).columns.toSeq
+
+  /** `path` — a parquet file, or a directory of them with or without
+    * partition directories — read with the schema in the footer of its
+    * first data file in name order. Spark's own inference takes the
+    * same one footer through the same function under the same session
+    * flags (`nanosAsLong`, `inferTimestampNTZ`, ...), but reads it in a
+    * one-task Spark job; this reads it on the driver, so building the
+    * frame runs no job. Partition columns come from Spark's directory
+    * discovery. A path with no readable data file is left to Spark's
+    * inference, so its error stays Spark's own.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new HPath(path)
+    val fs = p.getFileSystem(conf)
+    val schema = (if (fs.exists(p)) dataFiles(fs, p).nextOption() else None).flatMap { f =>
+      scala.util.Try {
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf),
+          HadoopReadOptions.builder(conf).build())
+        try footerSchema(spark, f, reader) finally reader.close()
+      }.toOption
+    }
+    schema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
 
   /** The outcome of one footer pass: the kept files, the file count and
-    * the table schema of the first footer (None: not written by Spark).
+    * the table schema of the first footer (None: no data file).
     */
   private final case class Survey(kept: Seq[String], total: Long,
       schema: Option[StructType]) {
@@ -120,8 +145,9 @@ object Skipping {
 
     /** The kept files filtered by `pred`, read as `dir`'s table:
       * `basePath` keeps partition columns, and the footer schema spares
-      * a schema-inference job. With nothing kept the whole directory is
-      * read under a false filter, so the schema stays intact.
+      * a schema-inference job, as in [[readParquet]]. With nothing kept
+      * the whole directory is read under a false filter, so the schema
+      * stays intact.
       */
     def read(spark: SparkSession, dir: String, pred: Column): DataFrame = {
       val r = spark.read.option("basePath", dir)
@@ -135,25 +161,21 @@ object Skipping {
     * [lo, hi] and, with `bloom`, a bloom admitting `lo`. Keys are folded
     * to the chunk's physical values; a group with no chunk of `c`, a
     * chunk with no bloom and a file whose keys do not fold are kept.
-    * The read options are built once: `open` without them spends ~12 ms
-    * per file copying `conf`.
+    * The read options are built once from `conf`: `open` without them
+    * spends ~12 ms per file loading a fresh Hadoop configuration.
     */
   private def survey(spark: SparkSession, dir: String, c: String, lo: Column, hi: Column,
       bloom: Boolean): Survey = {
     val conf = spark.sessionState.newHadoopConf()
-    val fs = new HPath(dir).getFileSystem(conf)
-    def dataFiles(p: HPath): Seq[FileStatus] = fs.listStatus(p).toSeq.filterNot { s =>
-      val n = s.getPath.getName // what Spark's reader ignores, partition dirs aside
-      n.startsWith(".") || (n.startsWith("_") && !n.contains('='))
-    }.sortBy(_.getPath.getName).flatMap(s => if (s.isDirectory) dataFiles(s.getPath) else Seq(s))
+    val p = new HPath(dir)
     val opts = HadoopReadOptions.builder(conf).build()
     val folded = collection.mutable.HashMap.empty[(DataType, Any), Seq[Option[Any]]]
-    val seen = dataFiles(new HPath(dir)).map { f =>
+    val seen = dataFiles(p.getFileSystem(conf), p).toSeq.map { f =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf), opts)
       try {
-        val schema = sparkSchema(reader)
+        val schema = footerSchema(spark, f, reader)
         val keys = for {
-          field <- schema.flatMap(_.find(_.name == c))
+          field <- schema.find(_.name == c)
           t <- reader.getFileMetaData.getSchema.getFields.asScala
             .find(f => f.getName == c && f.isPrimitive).map(_.asPrimitiveType.getPrimitiveTypeName)
           k = folded.getOrElseUpdate((field.dataType, t), fold(spark, Seq(lo, hi), field.dataType, t))
@@ -165,7 +187,7 @@ object Skipping {
         (f.getPath.toString, keep, schema)
       } finally reader.close()
     }
-    Survey(seen.collect { case (p, true, _) => p }, seen.size.toLong, seen.headOption.flatMap(_._3))
+    Survey(seen.collect { case (f, true, _) => f }, seen.size.toLong, seen.headOption.map(_._3))
   }
 
   /** The chunk's min/max admits a value in [lo, hi]; a chunk with no
@@ -200,9 +222,22 @@ object Skipping {
       })
     }.getOrElse(keys.map(_ => None))
 
-  /** The Spark schema Spark's writer recorded in the footer. */
-  private def sparkSchema(reader: ParquetFileReader): Option[StructType] =
-    Option(reader.getFileMetaData.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
-      .flatMap(j => scala.util.Try(DataType.fromJson(j).asInstanceOf[StructType]).toOption)
+  /** The data files under `p` (or `p` itself, a file) in name order,
+    * listed lazily: what Spark's reader reads, partition dirs entered.
+    */
+  private def dataFiles(fs: FileSystem, p: HPath): Iterator[FileStatus] =
+    fs.listStatus(p).filterNot { s =>
+      val n = s.getPath.getName
+      n.startsWith(".") || (n.startsWith("_") && !n.contains('='))
+    }.sortBy(_.getPath.getName).iterator
+      .flatMap(s => if (s.isDirectory) dataFiles(fs, s.getPath) else Iterator(s))
+
+  /** The Spark schema of `f`'s footer, as Spark's inference reads it:
+    * the schema Spark's writer recorded, else the parquet schema
+    * converted under the session's parquet flags.
+    */
+  private def footerSchema(spark: SparkSession, f: FileStatus, reader: ParquetFileReader): StructType =
+    ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, reader.getFooter),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
 
 }

@@ -49,7 +49,7 @@ object Snapshots {
 
   def load(spark: SparkSession, baseDir: String, name: String,
       source: String, dataset: String): DataFrame =
-    spark.read.parquet(Paths.get(baseDir, name, source, dataset).toString)
+    Skipping.readParquet(spark, Paths.get(baseDir, name, source, dataset).toString)
 
   def manifest(baseDir: String, name: String): String =
     Files.readString(Paths.get(baseDir, name, "manifest.json"))

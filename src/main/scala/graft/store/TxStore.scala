@@ -220,20 +220,23 @@ object TxStore {
   /** Read a version's deletion-vector sidecar by its explicit part
     * files: handing the underscore-prefixed directory itself to
     * `spark.read` logs an `All paths were ignored` WARN on every read.
+    * Its schema is fixed, so no footer is read.
     */
   private def readDv(spark: SparkSession, dir: String): DataFrame = {
     val s = Files.list(dvPath(dir))
-    try spark.read.parquet(s.iterator().asScala.map(_.toString)
+    try spark.read.schema(DvSchema).parquet(s.iterator().asScala.map(_.toString)
       .filter(_.endsWith(".parquet")).toSeq: _*)
     finally s.close()
   }
+
+  private val DvSchema = org.apache.spark.sql.types.StructType.fromDDL("file_name string, row_index long")
 
   /** The logical rows of version `v`: raw files minus the
     * deletion-vector positions, when a `_dv/` sidecar exists.
     */
   private def snapshot(spark: SparkSession, root: String, v: Long): DataFrame = {
     val dir = versionDir(root, v)
-    applyDv(spark, dir, spark.read.parquet(dir))
+    applyDv(spark, dir, Skipping.readParquet(spark, dir))
   }
 
   /** Anti-join `df` (still a file-source frame over `dir`'s files, so
@@ -279,7 +282,7 @@ object TxStore {
       // the file-source relation. DV sidecars are keyed by file NAME,
       // so computing them against the staging path stays valid after
       // the claim rename.
-      val withMeta = spark.read.parquet(nextDir)
+      val withMeta = Skipping.readParquet(spark, nextDir)
         .withColumn("__dv_file", col("_metadata.file_name"))
         .withColumn("__dv_row", col("_metadata.row_index"))
       val hadDv = Files.exists(dvPath(nextDir))
@@ -833,14 +836,21 @@ object TxStore {
     * re-upserting identical rows is value-idempotent — but appends
     * are not, so [[commitBatchAppend]] stages one on every commit.)
     */
-  def lastBatchId(root: String): Option[Long] = {
-    val fenced = readFence(root)
-    val staged = currentVersion(root).flatMap { v =>
+  def lastBatchId(root: String): Option[Long] =
+    (readFence(root) ++ stagedBatchId(root)).reduceOption(_ max _)
+
+  /** The current version's staged `_batch_id` marker, if it has one.
+    * Strict, unlike [[readFence]]: the marker may be the only record of
+    * an appended batch, so reading damage as absent would let a replay
+    * double-append. Damage throws, naming the marker.
+    */
+  private def stagedBatchId(root: String): Option[Long] =
+    currentVersion(root).flatMap { v =>
       val m = Paths.get(versionDir(root, v), "_batch_id")
-      if (Files.exists(m)) Some(Files.readString(m).trim.toLong) else None
+      if (!Files.exists(m)) None
+      else Some(Files.readString(m).trim.toLongOption.getOrElse(throw new IllegalStateException(
+        s"damaged batch-id marker $m of committed version v$v: not a batch id")))
     }
-    (fenced ++ staged).reduceOption(_ max _)
-  }
 
   /** Idempotent per-microbatch MERGE — the streaming sink contract
     * (see [[graft.streaming.Streaming.upsertSink]]): Structured
@@ -889,7 +899,7 @@ object TxStore {
       val baseDir = Paths.get(versionDir(root, base))
       // align column order to the committed schema so every part file in
       // the mixed version dir carries one physical layout
-      val baseSchema = spark.read.parquet(baseDir.toString).schema
+      val baseSchema = Skipping.readParquet(spark, baseDir.toString).schema
       require(rows.columns.toSet == baseSchema.fieldNames.toSet,
         s"append schema ${rows.columns.toSeq.sorted} != " +
           s"table ${baseSchema.fieldNames.toSeq.sorted} (use commitUpsertEvolve)")
@@ -1136,11 +1146,7 @@ object TxStore {
     */
   private def preserveFence(root: String): Unit = {
     val fenced = readFence(root)
-    currentVersion(root)
-      .map(v => Paths.get(versionDir(root, v), "_batch_id"))
-      .filter(Files.exists(_))
-      .map(m => Files.readString(m).trim.toLong)
-      .filter(staged => fenced.forall(_ < staged))
+    stagedBatchId(root).filter(staged => fenced.forall(_ < staged))
       .foreach(staged => writeFence(root, staged))
   }
 

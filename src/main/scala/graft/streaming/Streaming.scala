@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.store.Skipping
 
 /** Structured Streaming shapes for the `events` stream: the streaming
   * twins of the batch queries q35 (tumbling window) and q36
@@ -532,7 +533,7 @@ object Streaming {
       path: String): Option[DataFrame] = {
     val ptr = java.nio.file.Paths.get(path, "_version")
     if (java.nio.file.Files.exists(ptr))
-      Some(spark.read.parquet(
+      Some(Skipping.readParquet(spark,
         java.nio.file.Paths.get(path,
           s"v${java.nio.file.Files.readString(ptr).trim}").toString))
     else None

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.store.Skipping
 
 /** Second-substrate generator for the correctness gate: a
   * deterministic, seed-parameterized VALUE perturbation of the
@@ -44,7 +45,7 @@ object Reseed {
       SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
     val spark = preexisting.getOrElse(graft.SparkBoot.session(cpus))
 
-    def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
+    def read(t: String): DataFrame = Skipping.readParquet(spark, s"$src/$t.parquet")
     def write(df: DataFrame, t: String): Unit = {
       df.write.mode("overwrite").parquet(s"$dst/$t.parquet")
       println(s"reseeded $t")
@@ -143,7 +144,7 @@ object Reseed {
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
       val (a, b) = (read(t).count(),
-        spark.read.parquet(s"$dst/$t.parquet").count())
+        Skipping.readParquet(spark, s"$dst/$t.parquet").count())
       require(a == b, s"$t: $a != $b")
     }
     println(s"wrote $dst (seed $seed perturbation of $src)")

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.store.Skipping
 
 /** Synthesize a larger scale factor from the driver's testdata by
   * stamping out N key-shifted replicas of each fact table (dimensions
@@ -98,7 +99,7 @@ object ScaleUp {
       // small-SF tables arrive as one or two parquet splits; spread the
       // source across cores BEFORE the ×factor fan-out or the whole
       // replica stamp-out (and its write) runs on a couple of tasks
-      val df = spark.read.parquet(s"$src/$table.parquet")
+      val df = Skipping.readParquet(spark, s"$src/$table.parquet")
         .repartition(cpus.toInt)
       val fanned = df.crossJoin(broadcast(reps))
       val shifted = keys.foldLeft(fanned) { (d, k) =>
@@ -110,7 +111,7 @@ object ScaleUp {
     }
 
     def copy(table: String): Unit = {
-      spark.read.parquet(s"$src/$table.parquet")
+      Skipping.readParquet(spark, s"$src/$table.parquet")
         .write.mode("overwrite").parquet(s"$dst/$table.parquet")
       println(s"copied $table (dimension, single copy)")
     }
@@ -138,14 +139,14 @@ object ScaleUp {
 
     // verification: row counts are exactly ×factor (dims ×1)
     Seq("region", "nation").foreach { t =>
-      val (s, d) = (spark.read.parquet(s"$src/$t.parquet").count(),
-        spark.read.parquet(s"$dst/$t.parquet").count())
+      val (s, d) = (Skipping.readParquet(spark, s"$src/$t.parquet").count(),
+        Skipping.readParquet(spark, s"$dst/$t.parquet").count())
       require(s == d, s"$t: $s != $d")
     }
     Seq("customer", "supplier", "part", "orders", "lineitem", "events",
       "documents", "embeddings").foreach { t =>
-      val (s, d) = (spark.read.parquet(s"$src/$t.parquet").count(),
-        spark.read.parquet(s"$dst/$t.parquet").count())
+      val (s, d) = (Skipping.readParquet(spark, s"$src/$t.parquet").count(),
+        Skipping.readParquet(spark, s"$dst/$t.parquet").count())
       require(s * factor == d, s"$t: $s×$factor != $d")
     }
     println(s"wrote $dst (×$factor of $src)")

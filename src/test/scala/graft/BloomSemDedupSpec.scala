@@ -74,54 +74,23 @@ class BloomSemDedupSpec extends SparkSuite {
   }
 
   test("building d16, d18 and q58 runs no Spark query; running them pins no cache and aggregates once") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.CacheAccess
     val sc = spark.sparkContext
-    // (job group, stage names) of every job started by a query execution
-    // — every action on a frame. Reading a parquet table also runs a
-    // schema-inference job at build time; it belongs to no query.
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
-        if (prop("spark.sql.execution.id").isDefined)
-          jobs.add((prop("spark.jobGroup.id").getOrElse(""), e.stageInfos.map(_.name).mkString(";")))
-      }
-    }
-    // query jobs started in group `g` while `body` ran; a sentinel query
-    // in another group marks the point every earlier event has arrived
-    def queryJobsIn[T](g: String)(body: => T): (T, Seq[String]) = {
-      jobs.clear()
-      sc.setJobGroup(g, "")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$g-sentinel", "")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      def seen = jobs.toArray(Array.empty[(String, String)]).toSeq
-      val deadline = System.nanoTime() + 10000000000L
-      while (!seen.exists(_._1 == s"$g-sentinel") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(seen.exists(_._1 == s"$g-sentinel"), "listener never saw the sentinel job")
-      (out, seen.collect { case (`g`, stages) => stages })
-    }
     def stored = (CacheAccess.cachedPlans(spark), sc.getPersistentRDDs.size)
-    sc.addSparkListener(listener)
-    try {
-      for (name <- Seq("d16_bloom_decontaminate", "d18_containment_bloom",
-          "q58_bloom_pruned_join")) {
-        val before = stored
-        val (df, ran) = queryJobsIn(s"build-$name")(
-          graft.queries.QueryRegistry.byName(name).fn(spark, sf))
-        assert(ran.isEmpty, s"$name ran Spark jobs while its frame was built: $ran")
-        assert(df.collect().nonEmpty, s"$name returned no rows")
-        assert(stored == before, s"$name left cached data behind")
-        // the optimizer copies the gate onto the exact join's build side;
-        // subquery reuse still runs the filter's aggregate once
-        val filters = planNodes(df).flatMap(_.expressions).flatMap(_.collect {
-          case s: org.apache.spark.sql.execution.ScalarSubquery => s.plan })
-        assert(filters.count(!_.isInstanceOf[org.apache.spark.sql.execution.ReusedSubqueryExec]) == 1,
-          s"$name ran its bloom aggregate more than once: $filters")
-      }
-    } finally sc.removeSparkListener(listener)
+    for (name <- Seq("d16_bloom_decontaminate", "d18_containment_bloom",
+        "q58_bloom_pruned_join")) {
+      val before = stored
+      val (df, ran) = jobsStartedBy(graft.queries.QueryRegistry.byName(name).fn(spark, sf))
+      assert(ran.isEmpty, s"$name ran Spark jobs while its frame was built: $ran")
+      assert(df.collect().nonEmpty, s"$name returned no rows")
+      assert(stored == before, s"$name left cached data behind")
+      // the optimizer copies the gate onto the exact join's build side;
+      // subquery reuse still runs the filter's aggregate once
+      val filters = planNodes(df).flatMap(_.expressions).flatMap(_.collect {
+        case s: org.apache.spark.sql.execution.ScalarSubquery => s.plan })
+      assert(filters.count(!_.isInstanceOf[org.apache.spark.sql.execution.ReusedSubqueryExec]) == 1,
+        s"$name ran its bloom aggregate more than once: $filters")
+    }
   }
 
   test("containment join: bloom-gated path == broadcast path on planted excerpts") {

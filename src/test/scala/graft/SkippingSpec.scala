@@ -132,39 +132,15 @@ class SkippingSpec extends SparkSuite {
       partBase.filter(col("x") === lit("301")))
   }
 
-  test("building a readPoint or readRange frame runs no SQL query") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  test("building a readPoint or readRange frame runs no Spark job") {
     import graft.store.TxStore
     val root = java.nio.file.Files.createTempDirectory("graft_skipjobs")
       .resolve("t").toString
     TxStore.writeBloomStats(spark, root, "x")
     TxStore.init((0L until 1000L).map(i => (i, s"v$i")).toDF("x", "v").repartition(4), root)
-    val sc = spark.sparkContext
-    // job group of every job started by a query execution
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
-        if (prop("spark.sql.execution.id").isDefined)
-          groups.add(prop("spark.jobGroup.id").getOrElse(""))
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("skipping-build", "")
-      val (point, range) = try (TxStore.readPoint(spark, root, "x", lit(42L)),
-          TxStore.readRange(spark, root, "x", lit(10L), lit(20L)))
-        finally sc.clearJobGroup()
-      // a sentinel query in another group marks the point every earlier
-      // event has arrived
-      sc.setJobGroup("skipping-sentinel", "")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 10000000000L
-      while (!groups.contains("skipping-sentinel") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(groups.contains("skipping-sentinel"), "listener never saw the sentinel job")
-      assert(!groups.contains("skipping-build"), "a SQL job ran while the frames were built")
-      assert(point.count() == 1 && range.count() == 11)
-    } finally sc.removeSparkListener(listener)
+    val ((point, range), jobs) = jobsStartedBy((TxStore.readPoint(spark, root, "x", lit(42L)),
+      TxStore.readRange(spark, root, "x", lit(10L), lit(20L))))
+    assert(jobs.isEmpty, s"Spark jobs ran while the frames were built: $jobs")
+    assert(point.count() == 1 && range.count() == 11)
   }
 }

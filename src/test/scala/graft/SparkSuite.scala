@@ -27,6 +27,38 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     flatten(df.queryExecution.executedPlan)
   }
 
+  /** `body`'s result and the stage names of every Spark job it started,
+    * of any kind: an action's jobs carry a SQL execution id, a parquet
+    * schema-inference job carries none. `body` runs under a job group of
+    * its own; a sentinel job in another group marks the point every
+    * earlier listener event has arrived.
+    */
+  def jobsStartedBy[T](body: => T): (T, Seq[String]) = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"build-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add((Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""),
+          e.stageInfos.map(_.name).mkString(";")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-sentinel", "")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      def seen = jobs.asScala.toSeq
+      val deadline = System.nanoTime() + 10000000000L
+      while (!seen.exists(_._1 == s"$group-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.exists(_._1 == s"$group-sentinel"), "listener never saw the sentinel job")
+      (out, seen.collect { case (`group`, stages) => stages })
+    } finally sc.removeSparkListener(listener)
+  }
+
   override def afterAll(): Unit = () // shared session; JVM exit cleans up
 }
 

@@ -1204,6 +1204,26 @@ class TxStoreSpec extends SparkSuite {
     assert(rows(root) == Set((1L, "soja", 100.0), (2L, "milho", 50.0)))
   }
 
+  test("a damaged _batch_id marker fails reads and commits, naming the marker and its version") {
+    import java.nio.file.{Files, Paths}
+    val root = freshRoot()
+    TxStore.commitBatchAppend(spark, root, Seq((1L, "soja", 100.0)).toDF("k", "produto", "v"),
+      batchId = 0L)
+    val marker = Paths.get(TxStore.versionDir(root, 1L), "_batch_id")
+    Files.writeString(marker, "not-a-number\n")
+    def failsNamingMarker(body: => Any): Unit = {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage.contains(marker.toString) && e.getMessage.contains("v1"), e.getMessage)
+    }
+    // the marker may be the only record of its batch: the fence stays
+    // strict instead of reading the damage as absent
+    failsNamingMarker(TxStore.lastBatchId(root))
+    failsNamingMarker(TxStore.commitCompaction(spark, root, numFiles = 1))
+    assert(TxStore.currentVersion(root).contains(1L))
+    assert(!Files.exists(Paths.get(TxStore.versionDir(root, 2L))))
+    assert(rows(root) == Set((1L, "soja", 100.0)))
+  }
+
   test("a stale base conflicts before any work, on every commit entry point") {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._

@@ -107,10 +107,6 @@ object Skipping {
   def readPoint(spark: SparkSession, dir: String, c: String, key: Column): DataFrame =
     survey(spark, dir, c, key, key, bloom = true).read(spark, dir, col(c) === key)
 
-  /** The columns of `dir`'s table, partition columns included. */
-  private[store] def columns(spark: SparkSession, dir: String): Seq[String] =
-    readParquet(spark, dir).columns.toSeq
-
   /** `path` — a parquet file, or a directory of them with or without
     * partition directories — read with the schema in the footer of its
     * first data file in name order. Spark's own inference takes the

@@ -764,8 +764,8 @@ object TxStore {
     */
   def writeStats(spark: SparkSession, root: String, cols: Seq[String],
       version: Option[Long] = None): Unit = {
-    val have = Skipping.columns(spark, versionDir(root, version.getOrElse(committed(root))))
-    val missing = cols.filterNot(have.contains)
+    val dir = versionDir(root, version.getOrElse(committed(root)))
+    val missing = cols.filterNot(Skipping.readParquet(spark, dir).columns.contains)
     require(missing.isEmpty, s"no column ${missing.mkString(", ")} at $root")
   }
 

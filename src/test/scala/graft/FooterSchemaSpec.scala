@@ -46,7 +46,7 @@ class FooterSchemaSpec extends SparkSuite {
   }
 
   /** A parquet file written by parquet-mr itself (no Spark schema in the
-    * footer): `id` int64 and `ts` int64 under the `ts` annotation given.
+    * footer): `event_id` int64 and `ts` int64 under `tsAnnotation`.
     */
   private def writeForeign(path: Path, tsAnnotation: String, ts: Long => Long): Unit = {
     val schema = MessageTypeParser.parseMessageType(
@@ -62,6 +62,15 @@ class FooterSchemaSpec extends SparkSuite {
   test("the footer schema is Spark's inferred schema for every sf0.01 table") {
     assert(tables.size >= 10, s"tables under $sf: $tables")
     tables.foreach(t => assertInferredSchema(s"$sf/$t.parquet"))
+  }
+
+  test("a path with no data file fails as Spark's own read does") {
+    val empty = freshDir("graft_footer_empty")
+    for (p <- Seq(empty.toString, empty.resolve("missing").toString)) {
+      val want = intercept[Exception](spark.read.parquet(p))
+      val got = intercept[Exception](Skipping.readParquet(spark, p))
+      assert(got.getClass == want.getClass && got.getMessage == want.getMessage, got)
+    }
   }
 
   test("the footer schema follows Spark's inference for both events ts layouts") {
@@ -136,7 +145,7 @@ class FooterSchemaSpec extends SparkSuite {
         "readHidden" -> (() => TxStore.readHidden(spark, stores("hidden"))),
         "read of a partitioned table" -> (() => TxStore.read(spark, stores("partitioned"))),
         "read of a deletion-vector table" -> (() => TxStore.read(spark, stores("dv"))))
-    stores // built outside the measured calls
+    assert(stores.size == 6) // the tables are built outside the measured calls
     for ((name, build) <- builds) {
       val (df, jobs) = jobsStartedBy(build())
       assert(jobs.isEmpty, s"$name started Spark jobs while its frame was built: $jobs")

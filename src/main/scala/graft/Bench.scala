@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.collection.concurrent.TrieMap
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -129,7 +134,7 @@ object Bench {
     }
 
   private def profile(named: Seq[(String, Query)])(spark: SparkSession, sfDir: String): Unit = {
-    val listener = new tools.TaskListener
+    val listener = new TaskListener
     spark.sparkContext.addSparkListener(listener)
     named.foreach { case (name, fn) =>
       // the untraced cold run leaves codegen/cache state as in the
@@ -142,6 +147,55 @@ object Bench {
       listener.settle()
       listener.trace = false
       println(f"[total] $name warm ${warm}%.3f s")
+    }
+  }
+
+  /** `profile`'s listener: while `trace` is on it prints one line per
+    * completed stage and per job started under trace. It counts
+    * finished tasks so [[settle]] can tell when the listener bus has
+    * drained.
+    */
+  private final class TaskListener extends SparkListener {
+    private val tasks = new AtomicLong
+    @volatile var trace = false
+    private val jobStart = TrieMap.empty[Int, (Long, Int, String)]
+
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = tasks.incrementAndGet()
+
+    override def onJobStart(js: SparkListenerJobStart): Unit = if (trace) {
+      val desc = Option(js.properties)
+        .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+      jobStart(js.jobId) = (System.nanoTime(), js.stageIds.size, desc)
+    }
+
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = if (trace) {
+      val i = sc.stageInfo
+      val m = i.taskMetrics
+      val wall = (for (a <- i.submissionTime; b <- i.completionTime) yield b - a).getOrElse(-1L)
+      println(f"[stage] id=${i.stageId}%4d wall=${wall}%5d ms tasks=${i.numTasks}%3d " +
+        f"run=${m.executorRunTime}%5d deser=${m.executorDeserializeTime}%4d " +
+        f"gc=${m.jvmGCTime}%4d cpu=${m.executorCpuTime / 1000000}%5d  ${i.name.take(60)}")
+    }
+
+    override def onJobEnd(je: SparkListenerJobEnd): Unit =
+      jobStart.remove(je.jobId).foreach { case (t0, nStages, desc) =>
+        val ms = (System.nanoTime() - t0) / 1e6
+        println(f"[job] id=${je.jobId}%4d  ${ms}%9.1f ms  stages=$nStages%3d  $desc")
+      }
+
+    /** Waits until the async listener bus has drained the task events
+      * of the work so far: the task count must hold still for three
+      * consecutive 100 ms polls (5 s at most).
+      */
+    def settle(): Unit = {
+      var last = tasks.get
+      var stable = 0
+      var waited = 0
+      while (stable < 3 && waited < 5000) {
+        Thread.sleep(100); waited += 100
+        val now = tasks.get
+        if (now == last) stable += 1 else { stable = 0; last = now }
+      }
     }
   }
 

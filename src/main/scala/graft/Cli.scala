@@ -13,11 +13,9 @@ import graft.store.Skipping
   * sbt "runMain graft.Cli verify <sfDir> <outDir>"   # correctness dump
   * sbt "runMain graft.Cli bench"                     # timed run (env-config)
   * sbt "runMain graft.Cli explain <query...>"        # plan audit (= Bench plan)
-  * sbt "runMain graft.Cli scale [query...]"          # scale-trend bench (SCALE.md)
   * sbt "runMain graft.Cli scaleup [src] [dst] [factor]" # synthesize a bigger SF
   * sbt "runMain graft.Cli reseed [src] [dst] [seed]" # seed-perturbed substrate
   * sbt "runMain graft.Cli solobench <query...>"      # solo min-of-3 timing (= Bench solo)
-  * sbt "runMain graft.Cli streambench"               # streaming-sink artifact (STREAM.md)
   * sbt "runMain graft.Cli demo"                      # library tour
   * sbt "runMain graft.Cli queries"                   # list registered queries
   * sbt "runMain graft.Cli plugins"                   # list registered plugins
@@ -62,17 +60,14 @@ object Cli {
     case "verify" :: rest if rest.size == 2 => Verify.main(rest.toArray)
     case "bench" :: _ => Bench.main(Array.empty)
     case "explain" :: rest if rest.nonEmpty => Bench.main(("plan" :: rest).toArray)
-    case "scale" :: rest => tools.ScaleBench.main(rest.toArray)
-    // synthesize a larger scale factor for the two-point scale proof
-    // (src dst factor all optional — ScaleUp's defaults)
+    // synthesize a larger scale factor (src dst factor all optional —
+    // ScaleUp's defaults)
     case "scaleup" :: rest if rest.size <= 3 => tools.ScaleUp.main(rest.toArray)
     // seed-perturbed substrate for the second-seed oracle sweep
     case "reseed" :: rest if rest.size <= 3 => tools.Reseed.main(rest.toArray)
     // fresh-JVM-grade single-query timing (run `graft.Bench solo` via
     // runMain for a truly fresh JVM; the verb exists for discoverability)
     case "solobench" :: rest if rest.nonEmpty => Bench.main(("solo" :: rest).toArray)
-    // streaming sink throughput + state-boundedness artifact (STREAM.md)
-    case "streambench" :: _ => tools.StreamBench.main(Array.empty)
     case "demo" :: _ => Demo.main(Array.empty)
     case "queries" :: _ =>
       queries.QueryRegistry.all.sortBy(_.name).foreach { q =>
@@ -239,8 +234,8 @@ object Cli {
     case other =>
       System.err.println(
         s"unknown command ${other.mkString(" ")}; use: verify <sfDir> <outDir> | bench | " +
-          "explain <q...> | scale [q...] | scaleup [src] [dst] [factor] | " +
-          "reseed [src] [dst] [seed] | solobench <q...> | streambench | " +
+          "explain <q...> | scaleup [src] [dst] [factor] | " +
+          "reseed [src] [dst] [seed] | solobench <q...> | " +
           "demo | queries | plugins | health | doctor | " +
           "config show | cache stats|purge-legacy|clear <path> | " +
           "snapshot list|show|create|delete ... | dataset list|fetch <landing> ... | " +

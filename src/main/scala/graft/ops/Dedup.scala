@@ -113,13 +113,10 @@ object Dedup {
     // of the band-bucket self-join, which AQE launches CONCURRENTLY —
     // both race to compute the uncached partitions (duplicate work + the
     // BlockManager "already exists" WARN). The count materializes the
-    // cache once; do not "optimize" it away.
-    // Settled by interleaved solo A/B (r14, 3 rounds, min-of-3 each):
-    // barrier 0.72-0.82 s, no barrier 0.80-0.85 s (+2 WARNs back),
-    // fanOut-before-cacheOnce 0.85-1.07 s — the barrier is free at the
-    // warm operating point (the pass it fronts is the cache
-    // materialization the first consumer pays anyway) and the fanned
-    // cache layout costs more than its parallel materialization saves.
+    // cache once; do not "optimize" it away. It is free when warm (it
+    // fronts the materialization the first consumer pays anyway):
+    // interleaved solo A/B read 0.72-0.82 s with it, 0.80-0.85 s and
+    // two WARNs without, 0.85-1.07 s with fanOut before cacheOnce.
     sigs.count()
     minhashLshPairsFromSigs(sigs, numHashes, bands, minSim)
   }
@@ -358,14 +355,12 @@ object Dedup {
     // materialization barrier (same race as minhashLshPairs: the two
     // candidate self-join sides below are AQE-concurrent first readers
     // of the uncached prefix — duplicate-block WARNs observed in a full
-    // Verify run). Interleaved solo A/B (r14): neutral within noise
+    // Verify run). Interleaved solo A/B: neutral within noise
     // (d06 0.60-0.91 vs 0.71-0.91, d08 1.56-1.75 vs 1.51-2.01,
     // d10 0.54-0.67 vs 0.59-0.74), so the race retirement is free.
     prefix.count()
-    // CACHED as of round 13: the pre-fanOut measurement ("2.3x slower
-    // when materialized") flipped once the docs cache went 32-way —
-    // recomputing both self-join sides now redoes the tokenDf join and
-    // the per-doc rarity window TWICE, while the cache pays one
+    // Cached: uncached, both self-join sides redo the tokenDf join and
+    // the per-doc rarity window, while the cache pays one
     // materialization (interleaved solo: d06 1.95->0.98, d08 2.97->1.94,
     // d10 2.81->0.82 s). Storage is bounded: prefixes are the pruned
     // ~(1-tau) fraction of the shingle inventory, MEMORY_AND_DISK

@@ -160,18 +160,12 @@ object Graph {
       .union(e.select(col("dst").as("node"))).distinct()
     // node count rides along as a column (single-row cross join stays a
     // broadcast); no driver-side count action.
-    // DELIBERATELY a bare localCheckpoint even though it freezes the
-    // AQE-coalesced 1-4 partition layout for every iteration (r14
-    // measured the iteration stages at 2-4 tasks on 32 cores):
-    // re-widening the checkpoints to the session parallelism
-    // (repartition + re-checkpoint, keyed or round-robin) LOST a
-    // consistent ~15% in interleaved solo A/B — q61 2.48/2.66/2.51 s
-    // narrow vs 2.88/2.90/3.16 s widened — because at sf0.1 the
-    // kernels' serial CPU chunks are ≤0.25 s while 32-way scheduling
-    // overhead plus the extra materialization cost more. At real edge
-    // counts the builder shuffles are byte-large, AQE stops coalescing
-    // them, and the frozen layout is wide on its own — the starvation
-    // is a small-data artifact, not a scale risk. Don't re-try blind.
+    // A bare localCheckpoint, keeping AQE's coalesced layout (2-4
+    // tasks per iteration stage at sf0.1 on 32 cores): widening it to
+    // the session parallelism costs ~15% (interleaved solo A/B, q61
+    // 2.48-2.66 s narrow vs 2.88-3.16 s widened), since the serial CPU
+    // chunks are ≤0.25 s. At real edge counts AQE stops coalescing the
+    // byte-large builder shuffles, so the layout is wide on its own.
     val n = nodes.crossJoin(nodes.agg(count(lit(1)).as("n")))
       .localCheckpoint(true)
     val ed = e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")

@@ -957,9 +957,8 @@ object VectorSearch {
     val base = cacheOnce(vectors.select(col(idCol).as("id"), col(vecCol).as("v")))
     // materialization barrier (see minhashLshPairs): the bucket
     // self-join's two sides race the uncached partitions otherwise.
-    // Settled by interleaved solo A/B (r14): barrier 0.41-0.46 s vs no
-    // barrier 0.39-0.48 s (a03) — free when warm; fanOut-before-cache
-    // lost (0.62-0.68 s). Keep.
+    // Free when warm: interleaved solo A/B on a03 read 0.41-0.46 s with
+    // it, 0.39-0.48 s without, 0.62-0.68 s with fanOut before the cache.
     base.count()
     val b = base.select(col("id"), explode(array(tableCols: _*)).as("e"))
       .select(col("id"), col("e.tbl"), col("e.bucket"))

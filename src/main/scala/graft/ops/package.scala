@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
@@ -46,7 +48,8 @@ package object ops {
     * inputs total under 1 GiB is "narrow" on any sensible config (at
     * most ~8 default-size splits) and costs nothing to round-robin;
     * inputs past it get their parallelism from file splitting, so the
-    * exchange is skipped.
+    * exchange is skipped. A frame whose leaf size is unknown
+    * ([[leafBytes]] gives None) is left as is, like a wide one.
     *
     * Leaf sizes, not the frame's own estimate: every call site wraps a
     * pre-kernel ROW frame (scans, filters, 1:1 unions/joins of base
@@ -60,24 +63,26 @@ package object ops {
     * gram-explode + bloom-probe kernel (860 ms pipeline) running on the
     * 2 tasks of the raw union instead of 32.
     */
-  private[graft] def fanOut(df: DataFrame): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val leafBytes = df.queryExecution.optimizedPlan.collectLeaves()
-      .map(_.stats.sizeInBytes).sum
-    if (leafBytes < BigInt(1L << 30)) df.repartition(par)
-    else df
+  private[graft] def fanOut(df: DataFrame): DataFrame = leafBytes(df) match {
+    case Some(b) if b < (1L << 30) =>
+      df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    case _ => df
   }
 
-  // NOTE (r14): a "wideCheckpoint" sibling — localCheckpoint that
-  // re-widens an AQE-coalesced 1-4 partition layout to the session
-  // parallelism before freezing it (materialized partition count read
-  // off the LogicalRDD, since join-lineage stats defeat the 1 GiB
-  // guard above) — was built for the iterative graph kernels and
-  // REVERTED on measurement: interleaved solo A/B at sf0.1 read q61
-  // 2.48-2.66 s narrow vs 2.88-3.16 s widened and q62 1.99-2.17 s vs
-  // 2.66-3.13 s. The kernels' serial chunks are ≤0.25 s at this SF,
-  // so 32-way scheduling overhead plus the extra materialization
-  // outweigh the parallelism; at real edge counts the builder
-  // shuffles are byte-large and never coalesce narrow in the first
-  // place. See Graph.pageRank/triangleCount for the in-place notes.
+  /** Bytes under the optimized plan's leaf relations: post-pruning file
+    * sizes for parquet scans, materialized sizes for cached frames and
+    * for checkpoints of planned frames. None when any leaf has no static
+    * size: a frame built over a raw RDD carries the optimizer's
+    * unknown-size sentinel (`spark.sql.defaultSizeInBytes`, Long.MaxValue
+    * by default), so any leaf at or past 1 TiB, or whose stats throw,
+    * makes the whole frame unknown instead of a sum poisoned by the
+    * sentinel.
+    */
+  private[graft] def leafBytes(df: DataFrame): Option[Long] = {
+    val sizes = df.queryExecution.optimizedPlan.collectLeaves().map { leaf =>
+      try leaf.stats.sizeInBytes catch { case NonFatal(_) => BigInt(-1) }
+    }
+    if (sizes.exists(s => s < 0 || s >= (BigInt(1L) << 40))) None
+    else Some(sizes.sum.toLong)
+  }
 }

@@ -43,11 +43,10 @@ object T {
     * The drift contract is pinned by EventsLayoutSpec.
     *
     * The same normalization guards EVERY known timestamp column
-    * ([[timestampCols]]) — the driver regenerates testdata between
-    * rounds and has already flipped one table's physical layout once
-    * (round 7 cost: 33 queries); any table's timestamp drifting to
-    * LTZ, NANOS-as-long, or µs-NTZ now lands in the identical NTZ
-    * shape instead of failing analysis.
+    * ([[timestampCols]]): a regenerated testdata set has flipped one
+    * table's physical layout once (33 queries failed analysis), and
+    * any table's timestamp drifting to LTZ, NANOS-as-long, or µs-NTZ
+    * now lands in the identical NTZ shape instead.
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val raw = if (name == "events") loadEventsRaw(spark, dir)

@@ -300,7 +300,7 @@ object VectorSearch {
     // expressions evaluated their lambdas interpreted on every row of
     // every build pass (guide: eliminate non-codegen expressions on hot
     // paths). NULL marks exactly the rows the old `nrm > 0` filter
-    // dropped; arithmetic is bit-identical (hash-gated, r14).
+    // dropped; arithmetic is bit-identical (the oracle hash gates it).
     .withColumn("nv", G.l2Normalize(col("embedding").cast("array<double>")))
     .filter(col("nv").isNotNull)
 

@@ -1,11 +1,12 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Bloom-filter join reduction on Spark's own `bloom_filter_agg` and
   * `might_contain` (the expressions behind
@@ -19,9 +20,10 @@ import org.apache.spark.sql.types.{DataType, StringType}
   * and harmless because every caller runs the exact join after the
   * gate.
   *
-  * [[Filter]] is the separate JVM-side bloom an always-on sink grows
-  * incrementally ([[union]]) and probes per element
-  * ([[Filter.mightContainString]]).
+  * [[collect]] brings the same aggregate's filter to the driver as a
+  * `BloomFilter`, for an always-on sink that merges it into a held
+  * filter (`mergeInPlace`), probes it per element and persists it
+  * (`writeTo`/`readFrom`).
   */
 object Bloom {
 
@@ -44,6 +46,21 @@ object Bloom {
   def mightContain(filter: Column, key: Column): Column =
     ColumnBridge.column(BloomFilterMightContain(
       ColumnBridge.expression(filter), ColumnBridge.expression(xxhash64(key))))
+
+  /** `bloom_filter_agg` over `key` itself at `items` expected items and
+    * `bits` bits, collected: what `df.stat.bloomFilter(key, items, bits)`
+    * runs, but None over an empty input, where the aggregate is null and
+    * `stat.bloomFilter` fails. A string key goes in as its UTF-8 bytes,
+    * so `mightContainString` probes it. The session's
+    * `spark.sql.optimizer.runtime.bloomFilter.maxNumItems`/`maxNumBits`
+    * cap both sizes, so filters collected at one size in one session
+    * merge.
+    */
+  def collect(df: DataFrame, key: Column, items: Long, bits: Long): Option[BloomFilter] = {
+    val agg = new BloomFilterAggregate(ColumnBridge.expression(key), Literal(items), Literal(bits))
+    Option(df.select(ColumnBridge.column(agg.toAggregateExpression())).head().getAs[Array[Byte]](0))
+      .map(BloomFilter.readFrom)
+  }
 
   /** `key`, of type `from`, as a value to hash against keys of type
     * `to` — xxhash64 is type-sensitive. `try_cast`: a value the cast
@@ -78,115 +95,4 @@ object Bloom {
       buildKey: String, nBuildRows: Option[Long] = None): DataFrame =
     gate(probe, probeKey, buildDf, buildKey, nBuildRows)
       .join(buildDf, probe(probeKey) === buildDf(buildKey))
-
-  /** A JVM-side bit table: k probes per key (Catalyst xxhash64 chained
-    * from seed 42 over (key, i), then pmod mBits), bits packed in longs.
-    */
-  final case class Filter(words: Array[Long], mBits: Long, k: Int) {
-
-    /** Fraction of set bits. The classic estimates follow: FP rate ≈
-      * fill^k, and the distinct-key count that produced the fill is
-      * n ≈ -(m/k)·ln(1-fill); the curation sink's saturation check
-      * ([[graft.streaming.Streaming.curationSink]]) reads both.
-      */
-    def fillFraction: Double = {
-      var ones = 0L
-      var i = 0
-      while (i < words.length) { ones += java.lang.Long.bitCount(words(i)); i += 1 }
-      ones.toDouble / mBits
-    }
-
-    def fpEstimate: Double = math.pow(fillFraction, k)
-
-    /** Inverted fill formula; clamped to ≥1 so a sizing loop always
-      * terminates. A fully-saturated filter (fill = 1.0) has lost the
-      * information to estimate n — callers size from their own count.
-      */
-    def estimatedKeys: Long =
-      if (fillFraction >= 1.0) Long.MaxValue
-      else math.max(1L, math.round(-(mBits.toDouble / k) * math.log1p(-fillFraction)))
-
-    /** Membership test for a STRING key in plain JVM code, for per-
-      * element paths (a UDF over an array of grams) where an expression
-      * would be interpreted once per element. No false negatives.
-      */
-    def mightContainString(key: String): Boolean = {
-      import org.apache.spark.sql.catalyst.expressions.XxHash64Function
-      import org.apache.spark.sql.types.IntegerType
-      val u = org.apache.spark.unsafe.types.UTF8String.fromString(key)
-      var i = 0
-      while (i < k) {
-        val h = XxHash64Function.hash(i, IntegerType,
-          XxHash64Function.hash(u, StringType, 42L))
-        val pos = java.lang.Math.floorMod(h, mBits)
-        if ((words((pos / 64).toInt) & (1L << (pos % 64).toInt)) == 0L)
-          return false
-        i += 1
-      }
-      true
-    }
-  }
-
-  /** An all-zero filter of fixed geometry — the starting point for an
-    * INCREMENTALLY-maintained bloom whose key space grows over time
-    * (size for the ceiling, not the current cardinality: the geometry
-    * is frozen at creation because bit positions depend on mBits).
-    */
-  def empty(mBits: Long, k: Int = 5): Filter =
-    Filter(new Array[Long]((mBits / 64).toInt), mBits, k)
-
-  /** Predicted FP rate of a k-hash bloom of `mBits` holding `n` keys:
-    * (1 - e^(-kn/m))^k. Used to size a REGENERATED geometry before
-    * paying the rebuild scan.
-    */
-  def predictedFp(mBits: Long, k: Int, n: Long): Double =
-    math.pow(1.0 - math.exp(-k.toDouble * n / mBits), k)
-
-  /** Hard ceiling for REGENERATED geometries: 2^27 bits = 16 MiB of
-    * word table, ≈18M keys at 1% FP. It bounds the per-batch closure
-    * payload and [[union]]'s driver collect to 2M longs. Past this, one
-    * filter is the wrong tool — shard by key range so each shard keeps
-    * a broadcastable table.
-    */
-  val RegenMaxBits: Long = 1L << 27
-
-  /** Smallest power-of-two doubling of `fromBits` whose predicted FP
-    * for `n` keys is ≤ `targetFp`, capped at [[RegenMaxBits]] — past
-    * that a bit table stops being a broadcastable gate. Hitting the cap
-    * with the target still unmet logs a loud warning (the caller should
-    * shard the key space); the returned geometry is still the best
-    * available and stays CORRECT (a hotter bloom only admits more
-    * false-positive suspects to the exact join behind it).
-    */
-  def sizeFor(n: Long, targetFp: Double, fromBits: Long, k: Int = 5): Long = {
-    var m = fromBits
-    while (m < RegenMaxBits && predictedFp(m, k, n) > targetFp) m *= 2
-    if (predictedFp(m, k, n) > targetFp)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"bloom regeneration capped at $RegenMaxBits bits but $n keys " +
-          f"predict FP ${predictedFp(m, k, n)}%.3f > target $targetFp%.3f; " +
-          "shard the key space across multiple filters")
-    m
-  }
-
-  /** `f` plus the keys of `build` — the incremental maintenance step.
-    * Bit-setting is monotone and idempotent (bit_or), so unions are
-    * order-free and replay-safe: re-adding an already-absorbed batch
-    * is a no-op, which is what lets an always-on sink maintain its
-    * bloom without batch-id bookkeeping. One distributed aggregate;
-    * at most m/64 rows reach the driver, whatever the build size.
-    */
-  def union(f: Filter, build: DataFrame, keyCol: String): Filter = {
-    val hashCols = (0 until f.k).map(i =>
-      pmod(xxhash64(col(keyCol), lit(i)), lit(f.mBits)))
-    val words = f.words.clone()
-    build.select(explode(array(hashCols: _*)).as("pos"))
-      .select((col("pos") / 64).cast("int").as("w"),
-        call_function("shiftleft", lit(1L),
-          pmod(col("pos"), lit(64L)).cast("int")).as("b"))
-      .groupBy(col("w")).agg(expr("bit_or(b)").as("word"))
-      .collect()
-      .foreach(r => words(r.getInt(0)) |= r.getLong(1))
-    Filter(words, f.mBits, f.k)
-  }
 }

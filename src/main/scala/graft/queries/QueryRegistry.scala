@@ -66,12 +66,11 @@ object T {
     * legacy layout (predicates that should reach the parquet scan must
     * then be applied on the longs BEFORE conversion) and TIMESTAMP_NTZ
     * under the µs layout (NTZ predicates push down natively — see q02's
-    * µs branch and the ApiSpec plan test).
+    * µs branch and the ApiSpec plan test). The session's conf is left
+    * as it was.
     */
-  def loadEventsRaw(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    Skipping.readParquet(spark, s"$dir/events.parquet")
-  }
+  def loadEventsRaw(spark: SparkSession, dir: String): DataFrame =
+    Skipping.readParquet(spark, s"$dir/events.parquet", nanosAsLong = true)
 
   /** Normalizes the named columns to TIMESTAMP_NTZ whatever the
     * physical layout. The nanos→NTZ branch goes through an instant

@@ -115,9 +115,12 @@ object Skipping {
     * one-task Spark job; this reads it on the driver, so building the
     * frame runs no job. Partition columns come from Spark's directory
     * discovery. A path with no readable data file is left to Spark's
-    * inference, so its error stays Spark's own.
+    * inference, so its error stays Spark's own. `nanosAsLong` reads a
+    * TIMESTAMP(NANOS) column as its raw `LongType` nanos, as under
+    * `spark.sql.legacy.parquet.nanosAsLong`, without setting that conf
+    * on the session: the scan takes the given schema as it is.
     */
-  def readParquet(spark: SparkSession, path: String): DataFrame = {
+  def readParquet(spark: SparkSession, path: String, nanosAsLong: Boolean = false): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
     val p = new HPath(path)
     val fs = p.getFileSystem(conf)
@@ -125,7 +128,7 @@ object Skipping {
       scala.util.Try {
         val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf),
           HadoopReadOptions.builder(conf).build())
-        try footerSchema(spark, f, reader) finally reader.close()
+        try footerSchema(spark, f, reader, nanosAsLong) finally reader.close()
       }.toOption
     }
     schema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
@@ -230,10 +233,19 @@ object Skipping {
 
   /** The Spark schema of `f`'s footer, as Spark's inference reads it:
     * the schema Spark's writer recorded, else the parquet schema
-    * converted under the session's parquet flags.
+    * converted under the session's parquet flags, with `nanosAsLong`
+    * on top of them.
     */
-  private def footerSchema(spark: SparkSession, f: FileStatus, reader: ParquetFileReader): StructType =
+  private def footerSchema(spark: SparkSession, f: FileStatus, reader: ParquetFileReader,
+      nanosAsLong: Boolean = false): StructType = {
+    val conf = spark.sessionState.conf
+    val flags = if (!nanosAsLong) conf else {
+      val c = conf.clone()
+      c.setConf(org.apache.spark.sql.internal.SQLConf.LEGACY_PARQUET_NANOS_AS_LONG, true)
+      c
+    }
     ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, reader.getFooter),
-      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      new ParquetToSparkSchemaConverter(flags))
+  }
 
 }

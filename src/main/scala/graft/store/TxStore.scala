@@ -120,10 +120,14 @@ object TxStore {
       .orderBy(col("version"))
   }
 
-  /** The committed version, or None for an uninitialized table. */
+  /** The committed version, or None for an uninitialized table. Strict:
+    * the pointer is the table, so damage throws, naming the pointer.
+    */
   def currentVersion(root: String): Option[Long] = {
     val f = currentFile(root)
-    if (Files.exists(f)) Some(Files.readString(f).trim.toLong) else None
+    if (!Files.exists(f)) None
+    else Some(Files.readString(f).trim.toLongOption.getOrElse(throw new IllegalStateException(
+      s"damaged version pointer $f of the table at $root: not a version number")))
   }
 
   /** The committed version (throws for an uninitialized table). */
@@ -141,7 +145,9 @@ object TxStore {
     *     BEFORE any work: a stale base is a conflict, never a read of
     *     a directory retention may have expired;
     *  1. build base+1 through [[claimVersion]]: `stage(base, dir)`
-    *     writes the version's content at a writer-unique staging path;
+    *     writes the version's content at a writer-unique staging path,
+    *     then `batchId`, if given, is staged beside it as the
+    *     `_batch_id` marker ([[lastBatchId]]);
     *  1. re-check `_current` (the cross-process guard: another JVM's
     *     flip is invisible to the in-process monitor);
     *  1. `beforeFlip(next)` — sidecars the version must carry;
@@ -152,7 +158,8 @@ object TxStore {
     * version, no manifest and no blocked version number behind.
     */
   private def commit(root: String, expected: Option[Long], action: String,
-      beforeFlip: Long => Unit = _ => ())(stage: (Long, String) => Unit): Long =
+      beforeFlip: Long => Unit = _ => (), batchId: Option[Long] = None)(
+      stage: (Long, String) => Unit): Long =
     withCommitLock(root) {
       val base = expected.getOrElse(committed(root))
       if (currentVersion(root).getOrElse(0L) != base) {
@@ -161,7 +168,13 @@ object TxStore {
       }
       val next = base + 1
       Files.createDirectories(Paths.get(root, "_versions"))
-      claimVersion(root, next)(stage(base, _))
+      claimVersion(root, next) { dir =>
+        stage(base, dir)
+        // the streaming fence rides INSIDE the staged dir so it commits
+        // atomically with the version; the underscore prefix hides it
+        // from Spark/DuckDB readers and the file counter
+        batchId.foreach(id => Files.writeString(Paths.get(dir, "_batch_id"), id.toString))
+      }
       try {
         if (currentVersion(root).getOrElse(0L) != base) throw conflict(root, base)
         beforeFlip(next)
@@ -745,17 +758,20 @@ object TxStore {
     * expires it, and the history records `replace` so lineage shows
     * WHERE wholesale rebuilds happened. With `partitionBy`, the new
     * snapshot is laid out partitioned (the IVF-index shape:
-    * `cell=N/` directories probes prune on).
+    * `cell=N/` directories probes prune on). With `batchId`, the
+    * version carries that streaming batch's `_batch_id` marker
+    * ([[lastBatchId]]), as [[commitBatchAppend]]'s versions do.
     */
   def commitReplace(spark: SparkSession, root: String, df: DataFrame,
       partitionBy: Option[String] = None,
       expectedVersion: Option[Long] = None,
-      beforeFlip: Long => Unit = _ => ()): Long =
+      beforeFlip: Long => Unit = _ => (),
+      batchId: Option[Long] = None): Long =
     // sidecars the candidate version must carry (e.g. the IVF quantizer
     // geometry) are written BEFORE the pointer flip: a committed version
     // always has its own sidecars on disk, while a sidecar orphaned by a
     // crash in this window describes an uncommitted version and is inert
-    commit(root, expectedVersion, "replace", beforeFlip)((_, dir) =>
+    commit(root, expectedVersion, "replace", beforeFlip, batchId)((_, dir) =>
       writeParquet(root, df, dir, partitionBy))
 
   /** Check that `cols` exist in a committed version. Nothing is
@@ -833,8 +849,9 @@ object TxStore {
     * the version's pointer flip — a writer that dies between the flip
     * and the fence-file write leaves a committed version whose marker
     * still fences the replay. (MERGE commits don't need the marker —
-    * re-upserting identical rows is value-idempotent — but appends
-    * are not, so [[commitBatchAppend]] stages one on every commit.)
+    * re-upserting identical rows is value-idempotent — but appends and
+    * sketch merges are not, so [[commitBatchAppend]] and the streaming
+    * sketch sinks' [[commitReplace]] stage one on every commit.)
     */
   def lastBatchId(root: String): Option[Long] =
     (readFence(root) ++ stagedBatchId(root)).reduceOption(_ max _)
@@ -895,7 +912,7 @@ object TxStore {
   def commitAppend(spark: SparkSession, root: String, rows: DataFrame,
       expectedVersion: Option[Long] = None,
       batchId: Option[Long] = None): Long =
-    commit(root, expectedVersion, "append") { (base, nextDir) =>
+    commit(root, expectedVersion, "append", batchId = batchId) { (base, nextDir) =>
       val baseDir = Paths.get(versionDir(root, base))
       // align column order to the committed schema so every part file in
       // the mixed version dir carries one physical layout
@@ -924,11 +941,6 @@ object TxStore {
           s"(cast the batch or use commitUpsertEvolve): ${drifted.mkString("; ")}")
       writeParquet(root, rows.select(baseSchema.fieldNames.toSeq.map(
         org.apache.spark.sql.functions.col): _*), nextDir)
-      // the streaming fence rides INSIDE the staged dir so it commits
-      // atomically with the version (see lastBatchId); the underscore
-      // prefix hides it from Spark/DuckDB readers and the file counter
-      batchId.foreach(id =>
-        Files.writeString(Paths.get(nextDir, "_batch_id"), id.toString))
       // carry the base forward: part-file names are job-UUID-unique, so
       // only writer-job artifacts (_SUCCESS and its crc) collide — the
       // new job already wrote those, keep its own. The base's own
@@ -965,10 +977,8 @@ object TxStore {
         // inline init so the first batch's fence marker is staged
         // atomically with v1 (init() + a marker written after the flip
         // would reopen the crash gap for the very first batch)
-        commit(root, Some(0L), "init") { (_, dir) =>
-          writeParquet(root, batch, dir)
-          Files.writeString(Paths.get(dir, "_batch_id"), batchId.toString)
-        }
+        commit(root, Some(0L), "init", batchId = Some(batchId))((_, dir) =>
+          writeParquet(root, batch, dir))
       else if (!batch.isEmpty)
         commitAppend(spark, root, batch, batchId = Some(batchId))
       writeFence(root, batchId)

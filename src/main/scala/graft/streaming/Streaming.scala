@@ -2,10 +2,11 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.store.Skipping
+import org.apache.spark.util.sketch.BloomFilter
+import graft.store.TxStore
 
 /** Structured Streaming shapes for the `events` stream: the streaming
   * twins of the batch queries q35 (tumbling window) and q36
@@ -93,7 +94,7 @@ object Streaming {
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
     val commit: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, id) => {
-        graft.store.TxStore.commitBatch(batch.sparkSession, root,
+        TxStore.commitBatch(batch.sparkSession, root,
           batch.toDF(), pk, id)
         ()
       }
@@ -145,30 +146,37 @@ object Streaming {
     else df
   }
 
-  /** Atomic persist of the maintained gram bloom
+  /** Bits per expected gram: `BloomFilter.optimalNumOfBits` gives ≈ 9.6
+    * at a 1% false-positive rate, rounded up. Every gram bloom's
+    * expected-item count is its bit size over this, so the bit size is
+    * the one geometry a filter carries, and two filters of one size
+    * built in one session merge.
+    */
+  private val BitsPerGram = 10L
+
+  /** The bloom of `grams`' column `g` at `bits` bits ([[graft.ops.Bloom
+    * .collect]]); None when there are no grams.
+    */
+  private[graft] def gramBloom(grams: DataFrame, bits: Long): Option[BloomFilter] =
+    graft.ops.Bloom.collect(grams, col("g"), math.max(1L, bits / BitsPerGram), bits)
+
+  /** Atomic persist of the maintained gram bloom in Spark's own format
     * ([[graft.store.TxStore.writeAtomic]]).
     */
-  private[graft] def saveGramBloom(path: String,
-      f: graft.ops.Bloom.Filter): Unit = {
-    val bytes = new java.io.ByteArrayOutputStream(16 + 8 * f.words.length)
-    val out = new java.io.DataOutputStream(bytes)
-    out.writeLong(f.mBits); out.writeInt(f.k); out.writeInt(f.words.length)
-    f.words.foreach(out.writeLong)
-    out.flush()
-    graft.store.TxStore.writeAtomic(java.nio.file.Paths.get(path), bytes.toByteArray)
+  private[graft] def saveGramBloom(path: String, f: BloomFilter): Unit = {
+    val bytes = new java.io.ByteArrayOutputStream()
+    f.writeTo(bytes)
+    TxStore.writeAtomic(java.nio.file.Paths.get(path), bytes.toByteArray)
   }
 
-  private[graft] def loadGramBloom(path: String): Option[graft.ops.Bloom.Filter] = {
+  /** The persisted gram bloom; a missing file or one that fails to read
+    * (truncated, an older format) is absent, and the sink rebuilds it
+    * from the corpus.
+    */
+  private[graft] def loadGramBloom(path: String): Option[BloomFilter] = {
     val p = java.nio.file.Paths.get(path)
     if (!java.nio.file.Files.exists(p)) None
-    else {
-      val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
-        java.nio.file.Files.newInputStream(p)))
-      try {
-        val mBits = in.readLong(); val k = in.readInt(); val n = in.readInt()
-        Some(graft.ops.Bloom.Filter(Array.fill(n)(in.readLong()), mBits, k))
-      } finally in.close()
-    }
+    else scala.util.Try(BloomFilter.readFrom(java.nio.file.Files.readAllBytes(p))).toOption
   }
 
   /** TRUE iff a batch doc could have word-shingle Jaccard ≥ tau against
@@ -182,7 +190,7 @@ object Streaming {
     * The ε-slack keeps the integer boundary (hits = tau·|A| exactly)
     * on the suspect side.
     */
-  private[graft] def curationSuspect(bloom: graft.ops.Bloom.Filter,
+  private[graft] def curationSuspect(bloom: BloomFilter,
       textCol: org.apache.spark.sql.Column, k: Int, tau: Double)
       : org.apache.spark.sql.Column = {
     // shingling stays native/codegen; only the per-gram bit test rides
@@ -207,155 +215,121 @@ object Streaming {
     * are dropped by the batch-id high-water mark.
     *
     * Per-batch cost is kept independent of corpus size by a maintained
-    * GRAM BLOOM over the corpus's word shingles (persisted beside the
-    * table, incrementally unioned per admission — bit-or is monotone
-    * and idempotent, so maintenance is replay-safe by algebra): docs
-    * whose bloom-hit fraction stays below tau are provably below the
-    * similarity threshold against every corpus doc ([[curationSuspect]])
-    * and skip the corpus join outright, so a mostly-novel stream never
-    * re-shingles the corpus (measured: ungated batch cost grew ×2.1
-    * over a 15k-doc corpus hop; gated is flat). Only suspect docs —
-    * true near-dups plus the bloom's ~1% false-positive tail — pay the
-    * exact [[graft.ops.Dedup.ngramJaccardJoinTracked]] confirm, which
-    * removes every false positive, so admissions are EXACTLY the
-    * ungated sink's. Crash ordering: the bloom is persisted BEFORE the
-    * table commit, so it is always a superset of the corpus's grams
-    * (an over-full bloom only costs extra suspects; an under-full one
-    * could admit a near-dup). A missing bloom (pre-gate table, deleted
-    * file) is rebuilt from the corpus in one scan at sink start. The
-    * default 2^24-bit geometry holds ~1% FP to ~1.6M distinct grams;
-    * past that the saturation path below regenerates at a larger one.
+    * GRAM BLOOM over the corpus's word shingles (Spark's `BloomFilter`,
+    * persisted beside the table; each admission batch's filter is merged
+    * in — bit-or is monotone and idempotent, so maintenance is
+    * replay-safe by algebra): docs whose bloom-hit fraction stays below
+    * tau are provably below the similarity threshold against every
+    * corpus doc ([[curationSuspect]]) and skip the corpus join outright,
+    * so a mostly-novel stream never re-shingles the corpus (measured:
+    * ungated batch cost grew ×2.1 over a 15k-doc corpus hop; gated is
+    * flat). Only suspect docs — true near-dups plus the bloom's ~1%
+    * false-positive tail — pay the exact
+    * [[graft.ops.Dedup.ngramJaccardJoinTracked]] confirm, which removes
+    * every false positive, so admissions are EXACTLY the ungated sink's.
+    * Crash ordering: the bloom is persisted BEFORE the table commit, so
+    * it is always a superset of the corpus's grams (an over-full bloom
+    * only costs extra suspects; an under-full one could admit a
+    * near-dup). A missing or unreadable bloom is rebuilt from the corpus
+    * in one scan at sink start.
     *
     * First batch initializes the table (self-dedup only). Within-batch
     * duplicate pairs keep the LOWEST id (deterministic canonical).
     *
-    * SATURATION: the geometry is frozen per filter (bit positions
-    * depend on mBits), but not per SINK — after each batch's union, if
-    * the filter's estimated FP rate crosses [[CurationBloomMaxFp]], the
-    * bloom is REGENERATED at the smallest doubled geometry predicted to
-    * hold ~1% FP for the estimated gram count, rebuilt in one scan of
-    * corpus ∪ this batch's admissions (so the persisted filter is still
-    * a superset of the committed corpus's grams — the crash invariant —
-    * even though the table commit lands after the save). Admissions are
-    * unaffected by WHEN regen fires: the gate is pruning-only, so a
-    * saturated bloom only inflates the suspect tail that the exact
-    * confirm join then clears. `bloomBits` is the INITIAL geometry
-    * (default 2 MiB of words); tests drive saturation with a tiny one.
+    * SATURATION: a filter's bit size is fixed (bit positions depend on
+    * it), but the sink's is not. When the merged filter's expected FP
+    * rate (fill^k) crosses [[CurationBloomMaxFp]], or the held filter
+    * cannot merge the batch's (it was built under other conf caps), the
+    * bloom is REGENERATED at `BloomFilter.optimalNumOfBits(n, 0.01)` for
+    * the n distinct grams of corpus ∪ this batch's admissions, in one
+    * scan of them — so the persisted filter is still a superset of the
+    * committed corpus's grams. The session's
+    * `spark.sql.optimizer.runtime.bloomFilter.maxNumBits` caps the size;
+    * a filter at the cap only grows hotter. Admissions are unaffected by
+    * WHEN regen fires: the gate is pruning-only. `bloomBits` is the
+    * INITIAL size (2 MiB, ~1% FP up to ~1.7M distinct grams); tests
+    * drive saturation with a tiny one.
     */
   def curationSink(docs: DataFrame, root: String, tau: Double,
       checkpoint: String, bloomBits: Long = 1L << 24,
       rowsPerFile: Int = 100000)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val shingleK = 3
-    // the maintained bloom rides in the sink closure between batches;
-    // loaded (or rebuilt from the corpus) lazily on the first batch so
-    // a restarted sink recovers the persisted filter
-    var bloom: Option[graft.ops.Bloom.Filter] = None
-    val dbg = sys.env.contains("GRAFT_CUR_DEBUG")
-    var t0 = 0L
-    def mark(tag: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      if (t0 != 0) println(f"CURDBG $tag%-12s ${(now - t0) / 1000000}%6d ms")
-      t0 = now
-    }
+    def grams(df: DataFrame): DataFrame =
+      df.select(explode(graft.ops.Dedup.shingles(col("text"), shingleK)).as("g"))
+    // the held bloom rides in the sink closure between batches; loaded
+    // (or rebuilt from the corpus) on the first batch so a restarted
+    // sink recovers the persisted filter. None: no corpus gram yet
+    var bloom: Option[BloomFilter] = None
+    var loaded = false
     val commit: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, id) => {
         val spark = batch.sparkSession
         val b = batch.toDF()
         if (!b.isEmpty) {
-          mark("start")
           // within-batch dedup: drop the higher id of every dup pair
           val (selfPairs, selfCached) = graft.ops.Dedup
             .ngramJaccardPairsTracked(b, col("doc_id"), col("text"),
               k = shingleK, tau = tau)
           val selfDups = selfPairs.select(col("id2").as("doc_id")).distinct()
           val selfClean = b.join(selfDups, Seq("doc_id"), "left_anti").cache()
-          mark("selfjoin")
-          val bl = bloom.getOrElse {
-            val f = loadGramBloom(curationBloomPath(root)).getOrElse {
-              val base = graft.ops.Bloom.empty(bloomBits)
-              if (graft.store.TxStore.currentVersion(root).isEmpty) base
-              else graft.ops.Bloom.union(base,
-                graft.store.TxStore.read(spark, root).select(
-                  explode(graft.ops.Dedup.shingles(col("text"), shingleK))
-                    .as("g")), "g")
-            }
-            bloom = Some(f); f
+          val hasCorpus = TxStore.currentVersion(root).isDefined
+          if (!loaded) {
+            bloom = loadGramBloom(curationBloomPath(root)).orElse(
+              if (hasCorpus) gramBloom(grams(TxStore.read(spark, root)), bloomBits) else None)
+            loaded = true
           }
-          val (novel, crossCached) =
-            if (graft.store.TxStore.currentVersion(root).isEmpty)
-              (selfClean, Seq.empty[DataFrame])
-            else {
-              val suspects = selfClean.filter(
-                curationSuspect(bl, col("text"), shingleK, tau))
-              val noSuspects = suspects.isEmpty
-              mark("gate")
-              if (noSuspects) (selfClean, Seq.empty[DataFrame])
-              else {
-                val corpus = graft.store.TxStore.read(spark, root)
-                val (crossPairs, cached) = graft.ops.Dedup.ngramJaccardJoinTracked(
-                    corpus, suspects, col("doc_id"), col("text"),
-                    k = shingleK, tau = tau)
-                val dupIds = crossPairs.select(col("id2").as("doc_id")).distinct()
-                (selfClean.join(dupIds, Seq("doc_id"), "left_anti"), cached)
-              }
-            }
+          val suspects = bloom.filter(_ => hasCorpus).map(f =>
+            selfClean.filter(curationSuspect(f, col("text"), shingleK, tau)))
+          val (novel, crossCached) = suspects.filterNot(_.isEmpty) match {
+            case None => (selfClean, Seq.empty[DataFrame])
+            case Some(s) =>
+              val (crossPairs, cached) = graft.ops.Dedup.ngramJaccardJoinTracked(
+                TxStore.read(spark, root), s, col("doc_id"), col("text"),
+                k = shingleK, tau = tau)
+              val dupIds = crossPairs.select(col("id2").as("doc_id")).distinct()
+              (selfClean.join(dupIds, Seq("doc_id"), "left_anti"), cached)
+          }
           // rows-per-file-bounded write: one part file per steady batch
           // (file count ∝ batches, not ∝ batches × tasks), multiple
           // tasks for a burst batch instead of a single-task funnel
           val novelCached = novel.cache()
           val nParts = admissionPartitions(novelCached, rowsPerFile)
-          mark("cross")
           // bloom BEFORE table: the superset invariant must survive a
           // crash between the two writes (see Scaladoc)
-          val novelGrams = novelCached.select(
-            explode(graft.ops.Dedup.shingles(col("text"), shingleK)).as("g"))
-          val updated = graft.ops.Bloom.union(bl, novelGrams, "g")
-          mark("bloomunion")
-          // saturation check: past the FP ceiling, regenerate at a
-          // doubled geometry sized for the estimated gram count — one
-          // corpus scan, as a maintenance step inside the batch. The
-          // rebuild unions corpus grams AND this batch's admissions, so
-          // the save below still precedes the table commit with the
-          // superset invariant intact.
-          val toSave =
-            if (updated.fpEstimate <= CurationBloomMaxFp) updated
+          val fresh = gramBloom(grams(novelCached), bloom.fold(bloomBits)(_.bitSize()))
+          val merged = bloom.fold(fresh)(h => fresh.fold(Option(h))(f =>
+            if (h.isCompatible(f)) Some(h.mergeInPlace(f)) else None))
+          // regenerate when the held filter could not take the batch's
+          // (merged = None), or when the merged one is too full and
+          // still below the cap
+          val cap = spark.conf.get("spark.sql.optimizer.runtime.bloomFilter.maxNumBits").toLong
+          val regenerate = merged.fold(bloom.isDefined)(f =>
+            f.expectedFpp() > CurationBloomMaxFp && f.bitSize() < cap)
+          bloom =
+            if (!regenerate) merged
             else {
-              val corpusGrams =
-                if (graft.store.TxStore.currentVersion(root).isEmpty) novelGrams
-                else graft.store.TxStore.read(spark, root).select(
-                  explode(graft.ops.Dedup.shingles(col("text"), shingleK))
-                    .as("g")).union(novelGrams)
-              // fill = 1.0 destroys the inverted-fill estimate
-              // (estimatedKeys saturates to Long.MaxValue, which would
-              // size straight to the regen cap regardless of the true
-              // count) — pay one exact distinct count of the rebuild
-              // input instead; the FP ceiling fires at fill ≈ 0.5, so
-              // this branch is only reachable from a degenerate
-              // persisted filter
-              val nKeys =
-                if (updated.fillFraction >= 1.0) corpusGrams.distinct().count()
-                else updated.estimatedKeys
-              val m = graft.ops.Bloom.sizeFor(nKeys,
-                targetFp = 0.01, fromBits = updated.mBits, k = updated.k)
-              graft.ops.Bloom.union(
-                graft.ops.Bloom.empty(m, updated.k), corpusGrams, "g")
+              val all =
+                if (hasCorpus) grams(TxStore.read(spark, root)).union(grams(novelCached))
+                else grams(novelCached)
+              val n = all.distinct().count()
+              val bits = BloomFilter.optimalNumOfBits(math.max(1L, n), 0.01)
+              if (bits > cap) org.slf4j.LoggerFactory.getLogger(getClass).warn(
+                s"gram bloom capped at $cap bits (spark.sql.optimizer.runtime." +
+                  s"bloomFilter.maxNumBits) where $n grams want $bits for 1% FP; " +
+                  "admissions stay exact, with more suspects per batch")
+              gramBloom(all, math.min(bits, cap))
             }
-          saveGramBloom(curationBloomPath(root), toSave)
-          bloom = Some(toSave)
-          mark("bloomsave")
+          bloom.foreach(saveGramBloom(curationBloomPath(root), _))
           // admissions are proven-novel doc_ids — the insert-only
           // contract commitBatchAppend needs for its O(batch) commit
-          graft.store.TxStore.commitBatchAppend(spark, root,
-            sizedForWrite(novelCached, nParts), id)
-          mark("commit")
+          TxStore.commitBatchAppend(spark, root, sizedForWrite(novelCached, nParts), id)
           // the similarity joins cache their shingle frames for the
           // duration of the batch; an always-on sink must release
           // EXACTLY those — a session-wide clearCache would evict
           // co-resident workloads' cached state too
           (selfCached ++ crossCached :+ selfClean :+ novelCached)
             .foreach(_.unpersist())
-          mark("unpersist")
         }
         ()
       }
@@ -397,7 +371,7 @@ object Streaming {
           // id space), so the clean corpus grows by O(batch) appends —
           // rows-per-file-bounded so a burst batch writes in parallel
           val clean = b.join(flagged, Seq("doc_id"), "left_anti").cache()
-          try graft.store.TxStore.commitBatchAppend(batch.sparkSession, root,
+          try TxStore.commitBatchAppend(batch.sparkSession, root,
             sizedForWrite(clean, admissionPartitions(clean, rowsPerFile)), id)
           finally clean.unpersist()
         }
@@ -424,7 +398,7 @@ object Streaming {
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
     val commit: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, id) => {
-        graft.store.TxStore.commitBatch(batch.sparkSession, root,
+        TxStore.commitBatch(batch.sparkSession, root,
           batch.toDF(), pk, id)
         ()
       }
@@ -454,12 +428,12 @@ object Streaming {
       idCol: String, vecCol: String, cents: Array[Seq[Float]],
       path: String): Boolean = {
     val marker = java.nio.file.Paths.get(path + "_last_batch")
-    val last = graft.store.TxStore.readMarker(marker).getOrElse(-1L)
+    val last = TxStore.readMarker(marker).getOrElse(-1L)
     if (batchId <= last) false
     else {
       if (!batch.isEmpty)
         graft.ops.VectorSearch.appendToIvfIndex(batch, idCol, vecCol, cents, path)
-      graft.store.TxStore.writeAtomic(marker, batchId.toString)
+      TxStore.writeAtomic(marker, batchId.toString)
       true
     }
   }
@@ -486,58 +460,46 @@ object Streaming {
       .start()
   }
 
-  case class HHState(counters: Map[String, Long])
-  case class HHOut(bucket: Int, item: String, weight: Long)
-
-  /** Streaming heavy hitters: the streaming form of
-    * [[graft.ops.Frequency]] — per-BUCKET Misra-Gries summaries kept in
-    * keyed state (items are hash-bucketed so state and work distribute
-    * over `buckets` tasks, not one), each trigger emitting the bucket's
-    * current surviving candidates with their MG weights (update-style
-    * output through flatMapGroupsWithState). Merging all buckets'
-    * candidates yields a superset of every item above
-    * total/(k·buckets+1) — the same mergeable-summaries guarantee as
-    * the batch path, so a batch recount over the candidates makes it
-    * exact. State is O(k) per bucket, forever.
+  /** Versions a streaming sketch table keeps: [[mergeSketches]] expires
+    * older ones after every batch, so the table's disk stays bounded
+    * however long the stream runs, and a frame read from the table
+    * stays readable through `KeepLast - 1` later commits.
     */
-  /** One microbatch of the live sketch table: per-key HLL sketches of
-    * the batch, unioned with the current table, written as a new
-    * version + pointer flip. Exposed separately so the replay algebra
-    * is directly testable: HLL union is commutative, associative and
-    * IDEMPOTENT (sketch ∪ sketch = sketch — the CRDT property), so
-    * re-merging a replayed batch yields the byte-identical estimate —
-    * at-least-once delivery gives exactly-once STATISTICS with no
-    * batch-id bookkeeping at all.
+  private[graft] val KeepLast = 10
+
+  /** One microbatch of a live sketch table, on the TxStore commit path.
+    * A batch at or below [[graft.store.TxStore.lastBatchId]] is dropped
+    * (foreachBatch replays re-run the same id). Otherwise `sketch`
+    * aggregates the batch per `keyCol`, `merge` folds that into the
+    * committed table's `sk` column, and the result commits as a replace
+    * whose version carries the batch id, so the fence lands atomically
+    * with the state. Versions past [[KeepLast]] are then expired and
+    * orphans vacuumed.
+    */
+  private def mergeSketches(batch: DataFrame, batchId: Long, keyCol: String,
+      path: String, sketch: Column, merge: Column => Column): Unit =
+    if (!TxStore.lastBatchId(path).exists(batchId <= _) && !batch.isEmpty) {
+      val spark = batch.sparkSession
+      val bs = batch.groupBy(col(keyCol)).agg(sketch.as("sk"))
+      val base = TxStore.currentVersion(path)
+      val merged = base.fold(bs)(_ => TxStore.read(spark, path).unionByName(bs)
+        .groupBy(col(keyCol)).agg(merge(col("sk")).as("sk")))
+      TxStore.commitReplace(spark, path, merged,
+        expectedVersion = Some(base.getOrElse(0L)), batchId = Some(batchId))
+      TxStore.expireVersions(path, KeepLast)
+      TxStore.vacuum(path)
+    }
+
+  /** One microbatch of the live HLL sketch table ([[mergeSketches]]).
+    * HLL union is commutative, associative and IDEMPOTENT (sketch ∪
+    * sketch = sketch, the CRDT property), so even an unfenced replay
+    * would leave every estimate unchanged; the fence keeps one commit
+    * path for both sketch kinds.
     */
   private[graft] def sketchMergeBatch(batch: DataFrame, batchId: Long,
-      keyCol: String, tokenCol: String, path: String, lgK: Int): Unit = {
-    if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val bs = batch.groupBy(col(keyCol))
-      .agg(hll_sketch_agg(col(tokenCol), lit(lgK)).as("sk"))
-    val merged = currentSketches(spark, path) match {
-      case Some(cur) => cur.unionByName(bs)
-        .groupBy(col(keyCol))
-        .agg(hll_union_agg(col("sk"), lit(false)).as("sk"))
-      case None => bs
-    }
-    val dir = java.nio.file.Paths.get(path)
-    java.nio.file.Files.createDirectories(dir)
-    merged.write.mode("overwrite")
-      .parquet(dir.resolve(s"v$batchId").toString)
-    // readers follow the pointer; the flip is the one mutable byte-write
-    graft.store.TxStore.writeAtomic(dir.resolve("_version"), batchId.toString)
-  }
-
-  private def currentSketches(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[DataFrame] = {
-    val ptr = java.nio.file.Paths.get(path, "_version")
-    if (java.nio.file.Files.exists(ptr))
-      Some(Skipping.readParquet(spark,
-        java.nio.file.Paths.get(path,
-          s"v${java.nio.file.Files.readString(ptr).trim}").toString))
-    else None
-  }
+      keyCol: String, tokenCol: String, path: String, lgK: Int): Unit =
+    mergeSketches(batch, batchId, keyCol, path,
+      hll_sketch_agg(col(tokenCol), lit(lgK)), hll_union_agg(_, lit(false)))
 
   /** Live corpus statistics: per-key distinct-token HLL sketches
     * maintained incrementally — each microbatch unions its own sketch
@@ -559,40 +521,17 @@ object Streaming {
       .start()
   }
 
-  /** One microbatch of the live QUANTILE sketch table
-    * ([[sketchMergeBatch]]'s rank-statistics sibling, using
-    * [[graft.functions.KllSketchAgg]]/[[graft.functions.KllMergeAgg]]).
-    * KLL merge is NOT idempotent — weights ADD, so re-merging a
-    * replayed batch would double-count it; HLL's CRDT trick does not
-    * carry over. Exactly-once statistics therefore come from BATCH-ID
-    * FENCING instead: a batch whose id is ≤ the committed version
-    * pointer is dropped wholesale (foreachBatch replays always re-run
-    * the same batchId). The version directory + atomic pointer flip
-    * are the same as the HLL sink's.
+  /** One microbatch of the live QUANTILE sketch table ([[mergeSketches]]
+    * with [[graft.functions.KllSketchAgg]]/[[graft.functions.KllMergeAgg]]).
+    * KLL merge is NOT idempotent — weights ADD, so re-merging a replayed
+    * batch would double-count it; the batch-id fence is what makes its
+    * statistics exactly-once.
     */
   private[graft] def kllMergeBatch(batch: DataFrame, batchId: Long,
-      keyCol: String, valCol: String, path: String, k: Int): Unit = {
-    val dir = java.nio.file.Paths.get(path)
-    val ptr = dir.resolve("_version")
-    if (java.nio.file.Files.exists(ptr) &&
-        java.nio.file.Files.readString(ptr).trim.toLong >= batchId)
-      return // replayed batch: already merged — the fence IS the exactly-once
-    if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val bs = batch.groupBy(col(keyCol))
-      .agg(graft.functions.GraftFunctions
-        .kllSketchAgg(col(valCol).cast("double"), k).as("sk"))
-    val merged = currentSketches(spark, path) match {
-      case Some(cur) => cur.unionByName(bs)
-        .groupBy(col(keyCol))
-        .agg(graft.functions.GraftFunctions.kllMergeAgg(col("sk")).as("sk"))
-      case None => bs
-    }
-    java.nio.file.Files.createDirectories(dir)
-    merged.write.mode("overwrite")
-      .parquet(dir.resolve(s"v$batchId").toString)
-    graft.store.TxStore.writeAtomic(ptr, batchId.toString)
-  }
+      keyCol: String, valCol: String, path: String, k: Int): Unit =
+    mergeSketches(batch, batchId, keyCol, path,
+      graft.functions.GraftFunctions.kllSketchAgg(col(valCol).cast("double"), k),
+      graft.functions.GraftFunctions.kllMergeAgg(_))
 
   /** Live rank statistics: per-key KLL quantile sketches maintained
     * incrementally — O(keys × k) state no matter how much data streams
@@ -615,24 +554,34 @@ object Streaming {
   /** Quantiles off the live sketch table — metadata-scale read. */
   def quantileEstimates(spark: org.apache.spark.sql.SparkSession,
       path: String, probs: Seq[Double]): DataFrame =
-    currentSketches(spark, path) match {
-      case Some(cur) => cur
-        .withColumn("quantiles",
-          graft.functions.GraftFunctions.kllSketchQuantiles(col("sk"), probs))
-        .drop("sk")
-      case None => spark.emptyDataFrame
-    }
+    if (TxStore.currentVersion(path).isEmpty) spark.emptyDataFrame
+    else TxStore.read(spark, path)
+      .withColumn("quantiles",
+        graft.functions.GraftFunctions.kllSketchQuantiles(col("sk"), probs))
+      .drop("sk")
 
   /** Estimates off the live sketch table — metadata-scale read. */
   def sketchEstimates(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    currentSketches(spark, path) match {
-      case Some(cur) => cur.select(col("*"))
-        .withColumn("est_distinct", hll_sketch_estimate(col("sk")))
-        .drop("sk")
-      case None => spark.emptyDataFrame
-    }
+    if (TxStore.currentVersion(path).isEmpty) spark.emptyDataFrame
+    else TxStore.read(spark, path)
+      .withColumn("est_distinct", hll_sketch_estimate(col("sk")))
+      .drop("sk")
 
+  case class HHState(counters: Map[String, Long])
+  case class HHOut(bucket: Int, item: String, weight: Long)
+
+  /** Streaming heavy hitters: the streaming form of
+    * [[graft.ops.Frequency]] — per-BUCKET Misra-Gries summaries kept in
+    * keyed state (items are hash-bucketed so state and work distribute
+    * over `buckets` tasks, not one), each trigger emitting the bucket's
+    * current surviving candidates with their MG weights (update-style
+    * output through flatMapGroupsWithState). Merging all buckets'
+    * candidates yields a superset of every item above
+    * total/(k·buckets+1) — the same mergeable-summaries guarantee as
+    * the batch path, so a batch recount over the candidates makes it
+    * exact. State is O(k) per bucket, forever.
+    */
   def heavyHittersStream(items: DataFrame, itemCol: String, k: Int,
       buckets: Int = 16): Dataset[HHOut] = {
     import items.sparkSession.implicits._

@@ -100,6 +100,27 @@ class FooterSchemaSpec extends SparkSuite {
       }
   }
 
+  test("T.load reads foreign TIMESTAMP(NANOS) events without changing the session's conf") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val dir = freshDir("graft_footer_nanos")
+    writeForeign(dir.resolve("events.parquet"), "TIMESTAMP(NANOS,false)", _ * 1000000000L)
+    val before = spark.conf.getOption(key)
+    assert(!before.contains("true"), s"an earlier case left $key=$before on the session")
+    val loaded = T.load(spark, dir.toString, "events")
+    assert(loaded.schema("ts").dataType == TimestampNTZType)
+    assert(loaded.orderBy("event_id").select(T.epochUs($"ts")).as[Long].collect().toSeq ==
+      Seq(1000000L, 2000000L, 3000000L))
+    // the raw nanos reach the scan as longs, a pushed filter included,
+    // in the vectorized and the row reader
+    for (vectorized <- Seq("true", "false"))
+      withConf("spark.sql.parquet.enableVectorizedReader", vectorized) {
+        val raw = T.loadEventsRaw(spark, dir.toString).filter($"ts" > 1500000000L)
+        assert(raw.queryExecution.executedPlan.toString.contains("PushedFilters: [IsNotNull(ts), GreaterThan(ts,"))
+        assert(raw.select("event_id").as[Long].collect().toSet == Set(2L, 3L))
+      }
+    assert(spark.conf.getOption(key) == before)
+  }
+
   /** TxStore tables in each state a version directory can be in. */
   private lazy val stores: Map[String, String] = {
     val dir = freshDir("graft_footer_stores")

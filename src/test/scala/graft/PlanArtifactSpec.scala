@@ -8,7 +8,7 @@ import graft.tools.PlanReport
   * the CURRENT registry and plans — recomputed here with the exact
   * writer code, so a new query, a removed query, or a plan-shape change
   * (a gained Exchange, a lost pushdown, a new BNLJ) that isn't followed
-  * by a `runMain graft.tools.PlanReport` refresh fails `sbt test`
+  * by a `Test/runMain graft.tools.PlanReport` refresh fails `sbt test`
   * instead of shipping a stale artifact. (PlanLintSpec enforces the
   * hard structural rules; this pins the REPORT to reality.)
   */
@@ -28,7 +28,7 @@ class PlanArtifactSpec extends SparkSuite {
 
   test("committed PLANS.md matches the live plans row-for-row") {
     val path = Paths.get("PLANS.md")
-    assert(Files.exists(path), "PLANS.md missing — run graft.tools.PlanReport")
+    assert(Files.exists(path), "PLANS.md missing — run `sbt \"Test/runMain graft.tools.PlanReport\"`")
     val committed = Files.readString(path)
     val live = PlanReport.render(liveRows)
 
@@ -46,7 +46,7 @@ class PlanArtifactSpec extends SparkSuite {
         case q if c(q) != l(q) => s"DRIFTED: committed ${c(q)}\n         live      ${l(q)}"
       }
     assert(diffs.isEmpty,
-      s"""PLANS.md is stale — refresh with `sbt "runMain graft.tools.PlanReport"`:
+      s"""PLANS.md is stale — refresh with `sbt "Test/runMain graft.tools.PlanReport"`:
          |${diffs.take(12).mkString("\n")}""".stripMargin)
   }
 

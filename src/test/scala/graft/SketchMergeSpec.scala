@@ -71,6 +71,27 @@ class SketchMergeSpec extends SparkSuite {
     assert(replayed == live)
   }
 
+  test("sketch table retention: 50 batches keep at most KeepLast + 1 versions, estimates equal one pass") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    import graft.store.TxStore
+    import graft.streaming.Streaming
+    val root = Files.createTempDirectory("sketch_keep").toString
+    (0 until 50).foreach(i => Streaming.sketchMergeBatch(
+      toks.filter(col("doc_id") % 50 === i), i.toLong, "source", "token", root, 12))
+    val versions = {
+      val s = Files.list(Paths.get(root, "_versions"))
+      try s.iterator().asScala.map(_.getFileName.toString).toSeq finally s.close()
+    }
+    assert(versions.size <= Streaming.KeepLast + 1, s"versions left: ${versions.sorted}")
+    assert(TxStore.lastBatchId(root).contains(49L))
+    val live = Streaming.sketchEstimates(spark, root).as[(String, Long)].collect().toMap
+    val batch = toks.groupBy(col("source"))
+      .agg(hll_sketch_estimate(hll_sketch_agg(col("token"), lit(12))).as("est"))
+      .as[(String, Long)].collect().toMap
+    assert(live == batch, s"live $live vs batch $batch")
+  }
+
   test("estimate within the precision envelope of exact distinct") {
     val exact = toks.select(col("token")).distinct().count().toDouble
     val est = toks

@@ -36,7 +36,7 @@ class SparkBootSpec extends SparkSuite {
     // artifact generators (one-off sweeps that rewrite a markdown
     // record) belong outside the jar; a new main needs a caller first
     assert(sourcesMatching("\\bdef\\s+main\\s*\\(") === Set("Bench", "Verify", "Cli", "Demo",
-      "examples/Examples", "tools/Reseed", "tools/ScaleUp", "tools/PlanReport")
+      "examples/Examples", "tools/Reseed", "tools/ScaleUp")
       .map(f => s"graft/$f.scala"))
   }
 }

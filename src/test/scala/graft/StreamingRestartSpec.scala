@@ -172,8 +172,8 @@ class StreamingRestartSpec extends SparkSuite {
       Streaming.quantileEstimates(spark, path, probs)
         .select("key", "quantiles").as[(String, Seq[Double])].collect().toMap
 
-    // interrupted run: crash between the sketch-table pointer flip and
-    // the checkpoint commit marker, after batch 1
+    // interrupted run: crash between the sketch-table commit and the
+    // checkpoint commit marker, after batch 1
     val path = tmp("graft_rst_kll") + "/t"
     val ckpt = tmp("graft_rst_kllck")
     val in = MemoryStream[(String, Double)]
@@ -185,10 +185,11 @@ class StreamingRestartSpec extends SparkSuite {
       in.addData(b2: _*); q.processAllAvailable()
     } finally q.stop()
     val before = estimates(path)
-    val ptrBefore = Files.readString(Paths.get(path, "_version")).trim
+    val fenceBefore = TxStore.lastBatchId(path)
+    val versionBefore = TxStore.currentVersion(path)
 
     val replayedId = dropLastCommitMarker(ckpt)
-    assert(ptrBefore.toLong == replayedId,
+    assert(fenceBefore.contains(replayedId),
       "crash is IN the gap: sketch table committed the batch the checkpoint lost")
     q = start()
     try {
@@ -197,7 +198,8 @@ class StreamingRestartSpec extends SparkSuite {
       q.processAllAvailable()
       assert(estimates(path) == before,
         "replayed batch must be fenced — a re-merge would shift every quartile")
-      assert(Files.readString(Paths.get(path, "_version")).trim == ptrBefore)
+      assert(TxStore.lastBatchId(path) == fenceBefore)
+      assert(TxStore.currentVersion(path) == versionBefore, "a fenced batch commits no version")
       in.addData(b3: _*); q.processAllAvailable()
     } finally q.stop()
     val terminal = estimates(path)
@@ -240,8 +242,8 @@ class StreamingRestartSpec extends SparkSuite {
     dropLastCommitMarker(ckpt)
     q = start()
     try {
-      // replay re-merges the batch for real; HLL union is the CRDT —
-      // sketch ∪ sketch = sketch, so estimates cannot move
+      // the batch-id fence drops the replay; HLL union is the CRDT
+      // besides — sketch ∪ sketch = sketch, so estimates cannot move
       q.processAllAvailable()
       assert(estimates(path) == before, "replayed union must be a no-op on estimates")
       in.addData(b3: _*); q.processAllAvailable()
@@ -420,10 +422,9 @@ class StreamingRestartSpec extends SparkSuite {
     // in the gap: its grams reach the persisted bloom, nothing else
     val batch1 = Seq((5L, e), (6L, c), (7L, b + " tail"))
     val blPath = Streaming.curationBloomPath(root)
-    val over = graft.ops.Bloom.union(
-      Streaming.loadGramBloom(blPath).get,
-      batch1.toDF("doc_id", "text").select(
-        explode(graft.ops.Dedup.shingles(col("text"), 3)).as("g")), "g")
+    val over = Streaming.loadGramBloom(blPath).get
+    over.mergeInPlace(Streaming.gramBloom(batch1.toDF("doc_id", "text").select(
+      explode(graft.ops.Dedup.shingles(col("text"), 3)).as("g")), over.bitSize()).get)
     Streaming.saveGramBloom(blPath, over)
 
     q = Streaming.curationSink(src, root, tau = 0.6, checkpoint = ckpt)
@@ -506,8 +507,13 @@ class StreamingRestartSpec extends SparkSuite {
   test("curation gram bloom: concurrent saves to one path never share a tmp file") {
     val dir = Paths.get(tmp("graft_rst_blsave"))
     val path = dir.resolve("grams.bloom").toString
+    def bytes(f: org.apache.spark.util.sketch.BloomFilter): Seq[Byte] = {
+      val out = new java.io.ByteArrayOutputStream()
+      f.writeTo(out)
+      out.toByteArray.toSeq
+    }
     val filters = (1 to 4).map(i =>
-      graft.ops.Bloom.Filter(Array.fill(1 << 14)(i.toLong), 1L << 20, 5))
+      Streaming.gramBloom((1 to 100 * i).map(j => s"g${i}_$j").toDF("g"), 1L << 20).get)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(filters.size)
     try {
       filters.map(f => pool.submit(new java.util.concurrent.Callable[Unit] {
@@ -516,8 +522,51 @@ class StreamingRestartSpec extends SparkSuite {
     } finally pool.shutdown()
     // the survivor is one writer's whole filter, and no tmp file is left
     val loaded = Streaming.loadGramBloom(path).get
-    assert(filters.exists(f => f.words.sameElements(loaded.words)))
+    assert(filters.exists(f => bytes(f) == bytes(loaded)))
     assert(Files.list(dir).iterator.asScala.map(_.getFileName.toString).toSeq
       == Seq("grams.bloom"))
+  }
+
+  test("curation gram bloom: a truncated file is rebuilt on restart, admissions equal an uninterrupted run") {
+    implicit val sqlCtx = spark.sqlContext
+    val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
+    val b = "one two three four five six seven eight nine ten eleven twelve"
+    val e = "north south east west up down left right forward backward inward outward"
+    val batch1 = Seq((5L, e), (6L, b + " tail"), (7L, a + " tail"))
+    def docs(root: String): Set[Long] =
+      TxStore.read(spark, root).select("doc_id").as[Long].collect().toSet
+
+    val root = tmp("graft_rst_curtrunc") + "/t"
+    val ckpt = tmp("graft_rst_curtruncck")
+    val in = MemoryStream[(Long, String)]
+    val src = in.toDF().toDF("doc_id", "text")
+    var q = Streaming.curationSink(src, root, tau = 0.6, checkpoint = ckpt)
+    try { in.addData((1L, a), (2L, b)); q.processAllAvailable() }
+    finally q.stop()
+    // a writer that died mid-file, or a disk that lost the tail
+    val blPath = Paths.get(Streaming.curationBloomPath(root))
+    val whole = Files.readAllBytes(blPath)
+    Files.write(blPath, whole.take(whole.length / 2))
+    assert(Streaming.loadGramBloom(blPath.toString).isEmpty)
+
+    q = Streaming.curationSink(src, root, tau = 0.6, checkpoint = ckpt)
+    try { in.addData(batch1: _*); q.processAllAvailable() }
+    finally q.stop()
+    // rebuilt from the corpus: the near-dups of persisted docs stay out
+    val rebuilt = Streaming.loadGramBloom(blPath.toString)
+    assert(rebuilt.isDefined)
+    assert(Seq(a, b, e).flatMap(_.split(" ").sliding(3).map(_.mkString(" ")))
+      .forall(rebuilt.get.mightContainString))
+
+    val root2 = tmp("graft_rst_curtrunc2") + "/t"
+    val in2 = MemoryStream[(Long, String)]
+    val q2 = Streaming.curationSink(in2.toDF().toDF("doc_id", "text"),
+      root2, tau = 0.6, checkpoint = tmp("graft_rst_curtrunc2ck"))
+    try {
+      in2.addData((1L, a), (2L, b)); q2.processAllAvailable()
+      in2.addData(batch1: _*); q2.processAllAvailable()
+    } finally q2.stop()
+    assert(docs(root) == Set(1L, 2L, 5L))
+    assert(docs(root) == docs(root2), "admissions after the rebuild must equal the uninterrupted run's")
   }
 }

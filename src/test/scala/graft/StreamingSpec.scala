@@ -278,7 +278,7 @@ class StreamingSpec extends SparkSuite {
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(blPath)))
   }
 
-  test("curation gram bloom saturation: regenerated at doubled geometry, gate recovers, admissions exact") {
+  test("curation gram bloom saturation: regenerated at a larger size, gate recovers, admissions exact") {
     import graft.store.TxStore
     implicit val sqlCtx = spark.sqlContext
     val root = java.nio.file.Files.createTempDirectory("graft_cursat").resolve("t").toString
@@ -287,18 +287,19 @@ class StreamingSpec extends SparkSuite {
     def doc(i: Int): String = (0 until 12).map(w => s"w${i}x$w").mkString(" ")
     val in = MemoryStream[(Long, String)]
     val src = in.toDF().toDF("doc_id", "text")
-    // deliberately tiny initial geometry: 1 Ki bits saturates at ~70 grams
+    // deliberately tiny initial size: 1 Ki bits saturates at ~70 grams
     val q = Streaming.curationSink(src, root, tau = 0.6, checkpoint = ckpt,
       bloomBits = 1L << 10)
     try {
       // batch 1: 100 novel docs ≈ 1000 distinct grams — far past the
-      // 3% FP ceiling, so the batch must regenerate at a doubled geometry
+      // 3% FP ceiling, so the batch must regenerate at a size sized
+      // for its ~1000 grams at 1% FP
       in.addData((1 to 100).map(i => (i.toLong, doc(i))): _*)
       q.processAllAvailable()
       val bl = Streaming.loadGramBloom(Streaming.curationBloomPath(root)).get
-      assert(bl.mBits > (1L << 10), s"expected regenerated geometry, got mBits=${bl.mBits}")
-      assert(bl.fpEstimate < Streaming.CurationBloomMaxFp,
-        s"regen left fpEstimate=${bl.fpEstimate}")
+      assert(bl.bitSize() > (1L << 10), s"expected a regenerated size, got ${bl.bitSize()} bits")
+      assert(bl.expectedFpp() < Streaming.CurationBloomMaxFp,
+        s"regen left expectedFpp=${bl.expectedFpp()}")
       // ALL novel docs were admitted (saturation never costs admissions)
       assert(TxStore.read(spark, root).select("doc_id").as[Long].collect().toSet
         == (1 to 100).map(_.toLong).toSet)
@@ -309,12 +310,11 @@ class StreamingSpec extends SparkSuite {
       val grams = corpusGramsDf.as[String].collect()
       assert(grams.nonEmpty && grams.forall(bl.mightContainString))
       // the gate RECOVERS: the same corpus in the ORIGINAL 1 Ki-bit
-      // geometry (fill ≈ 0.99) flags a fresh doc as suspect on false
+      // size (fill ≈ 0.99) flags a fresh doc as suspect on false
       // positives alone; the regenerated filter does not
-      val saturated = graft.ops.Bloom.union(
-        graft.ops.Bloom.empty(1L << 10), corpusGramsDf, "g")
+      val saturated = Streaming.gramBloom(corpusGramsDf, 1L << 10).get
       val fresh = Seq((999L, doc(999))).toDF("doc_id", "text")
-      def suspect(f: graft.ops.Bloom.Filter): Long = fresh.filter(
+      def suspect(f: org.apache.spark.util.sketch.BloomFilter): Long = fresh.filter(
         Streaming.curationSuspect(f, col("text"), 3, 0.6)).count()
       assert(suspect(saturated) == 1L && suspect(bl) == 0L)
       // admissions stay EXACT post-regen: a near-dup of a persisted doc

@@ -1224,6 +1224,24 @@ class TxStoreSpec extends SparkSuite {
     assert(rows(root) == Set((1L, "soja", 100.0)))
   }
 
+  test("a damaged _current pointer fails reads and commits, naming the pointer and its table") {
+    import java.nio.file.{Files, Paths}
+    val root = freshRoot()
+    TxStore.init(Seq((1L, "soja", 100.0)).toDF("k", "produto", "v"), root)
+    val pointer = Paths.get(root, "_current")
+    Files.writeString(pointer, "1\u0000garbage")
+    def failsNamingPointer(body: => Any): Unit = {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage.contains(pointer.toString) && e.getMessage.contains(root), e.getMessage)
+    }
+    // the pointer is the table: damage is never read as "no table"
+    failsNamingPointer(TxStore.currentVersion(root))
+    failsNamingPointer(TxStore.read(spark, root))
+    failsNamingPointer(TxStore.commitUpsert(spark, root,
+      Seq((2L, "milho", 50.0)).toDF("k", "produto", "v"), Seq("k")))
+    assert(!Files.exists(Paths.get(TxStore.versionDir(root, 2L))))
+  }
+
   test("a stale base conflicts before any work, on every commit entry point") {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
@@ -1307,6 +1325,19 @@ class TxStoreSpec extends SparkSuite {
     val s = Files.list(dir)
     val names = try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
     assert(names == Set("_pointer"))
+  }
+
+  test("the _batch_id marker has one writer, inside the commit protocol") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    val writes = """Files\.write\w*\([^\n]*"_batch_id"""".r
+    val files = Files.walk(root)
+    val sites = try files.iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString -> writes.findAllIn(Files.readString(p)).size)
+      .filter(_._2 > 0).toMap
+    finally files.close()
+    assert(sites == Map("graft/store/TxStore.scala" -> 1), sites)
   }
 
   test("the commit protocol has one call site each of claim, manifest and flip") {

@@ -78,8 +78,9 @@ object PlanReport {
   def render(rows: Seq[Seq[String]]): String = {
     val md = new StringBuilder
     md.append("# Plan audit — every registered query, structural facts\n\n")
-    md.append("Generated by `graft.tools.PlanReport` at sf0.001 (plans are\n")
-    md.append("data-size independent apart from AQE's runtime re-planning).\n")
+    md.append("Generated by `sbt \"Test/runMain graft.tools.PlanReport\"` at sf0.001\n")
+    md.append("(plans are data-size independent apart from AQE's runtime\n")
+    md.append("re-planning).\n")
     md.append("`exchanges` counts shuffle boundaries; `pushed filters` says\n")
     md.append("whether at least one parquet scan carries a pushdown; joins\n")
     md.append("are BroadcastHash/SortMerge/ShuffledHash/BroadcastNestedLoop.\n")

@@ -39,7 +39,7 @@ class BloomFilterSpec extends SparkSuite {
     assert(Streaming.gramBloom(Seq.empty[String].toDF("g"), bits).isEmpty)
   }
 
-  test("merge algebra: re-merging a batch is a no-op, growth is monotone, the bytes round-trip") {
+  test("merge algebra: re-merging a batch is a no-op, growth is monotone") {
     val held = bloomOf(members)
     val before = bytes(held)
     // idempotent: absorbing the same batch twice changes nothing —

@@ -278,7 +278,7 @@ class StreamingSpec extends SparkSuite {
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(blPath)))
   }
 
-  test("curation gram bloom saturation: regenerated at a larger size, gate recovers, admissions exact") {
+  test("curation bloom saturation: regenerated larger, gate recovers, admissions exact") {
     import graft.store.TxStore
     implicit val sqlCtx = spark.sqlContext
     val root = java.nio.file.Files.createTempDirectory("graft_cursat").resolve("t").toString
